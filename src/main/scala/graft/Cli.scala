@@ -152,23 +152,14 @@ object Cli {
         } else df
       out.write.mode("overwrite").parquet(opts("output"))
     }
-    // Observed metrics arrive via the async listener bus, which can lag
-    // the action's return — poll briefly before concluding the plan never
-    // materialized the observation (-1, e.g. an optimizer-pruned side).
     // Commands that bypass in()/write() (ingest reads granule files, not
     // parquet; subset --aoi writes via writePerAoi) never ATTACH the
-    // observation — polling a never-attached Observation would just burn
-    // the full deadline before logging -1, so skip straight to -1.
-    def metric(o: org.apache.spark.sql.Observation, attached: Boolean): Long = {
-      if (!attached) return -1L
-      val deadline = System.nanoTime() + 3000000000L // 3s
-      var m = org.apache.spark.sql.graftbridge.PlanBridge.observedMetrics(o)
-      while (m.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        m = org.apache.spark.sql.graftbridge.PlanBridge.observedMetrics(o)
-      }
-      m.get("n_rows").map(_.asInstanceOf[Long]).getOrElse(-1L)
-    }
+    // observation: -1 without waiting. An attached one that never fired
+    // (e.g. an optimizer-pruned side) is -1 too.
+    def metric(o: org.apache.spark.sql.Observation, attached: Boolean): Long =
+      if (!attached) -1L
+      else org.apache.spark.sql.graftbridge.PlanBridge.observedAfterAction(o)
+        .flatMap(_.get("n_rows")).fold(-1L)(_.asInstanceOf[Long])
     def wallSec: Double = math.round((System.nanoTime() - t0) / 1e7) / 100.0
 
     try {

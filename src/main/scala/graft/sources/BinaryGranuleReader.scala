@@ -25,7 +25,14 @@ import java.io.{BufferedInputStream, DataInputStream, EOFException}
   * Layer kinds in the file must agree with [[Ingest.layerKind]] (as a
   * real HDF5 reader's dataset dtypes do); a mismatch, bad magic, short
   * read or missing requested layer all throw, which is exactly what
-  * `ingestPaths`' corrupt-granule counter needs. */
+  * `ingestPaths`' corrupt-granule counter needs.
+  *
+  * Only requested layers of requested beams are decoded; every other
+  * dataset, and every unrequested bin of a projected vector layer, is
+  * stepped over with `skipBytes`. Skipping keeps the checks that apply
+  * to skipped bytes: the beam, shot, layer and bin-count plausibility
+  * bounds, the kind byte, and truncation (a short skip throws like a
+  * short read). */
 final class BinaryGranuleReader extends Ingest.GranuleReader {
 
   private def localPath(path: String): java.nio.file.Path =
@@ -33,9 +40,21 @@ final class BinaryGranuleReader extends Ingest.GranuleReader {
       java.nio.file.Paths.get(new java.net.URI(path).getPath)
     else java.nio.file.Paths.get(path)
 
-  override def read(path: String, beams: Seq[String],
-                    layers: Seq[String]): Seq[Ingest.BeamLayers] = {
+  /** Step over `n` bytes; a skip that falls short of `n` is a truncated
+    * file (DataInputStream.skipBytes itself never throws at EOF). */
+  private def skip(in: DataInputStream, n: Long): Unit = {
+    var left = n
+    while (left > 0) {
+      val k = in.skipBytes(math.min(left, Int.MaxValue).toInt)
+      if (k <= 0) throw new EOFException
+      left -= k
+    }
+  }
+
+  override def read(path: String, beams: Seq[String], layers: Seq[String],
+                    bins: Map[String, Seq[Int]]): Seq[Ingest.BeamLayers] = {
     val wanted = layers.toSet
+    val sel = Ingest.checkedBins(bins)
     val in = new DataInputStream(new BufferedInputStream(
       java.nio.file.Files.newInputStream(localPath(path))))
     try {
@@ -64,31 +83,49 @@ final class BinaryGranuleReader extends Ingest.GranuleReader {
         var longs = Map.empty[String, Array[Long]]
         var doubles = Map.empty[String, Array[Double]]
         var vectors = Map.empty[String, Array[Array[Double]]]
+        val keepBeam = beams.contains(beam)
+        var present = Set.empty[String]
         var l = 0
         while (l < nLayers) {
           val layer = in.readUTF()
           val kind = in.readByte()
+          val keep = keepBeam && wanted(layer)
           kind match {
+            case 0 | 1 if !keep => skip(in, 8L * n)
             case 0 => longs += layer -> Array.fill(n)(in.readLong())
             case 1 => doubles += layer -> Array.fill(n)(in.readDouble())
-            case 2 => vectors += layer -> Array.fill(n) {
-              val bins = in.readInt()
-              require(bins >= 0 && bins < 65536, s"$path $beam/$layer: bad bins")
-              Array.fill(bins)(in.readDouble())
-            }
+            case 2 =>
+              val pick = if (keep) sel.getOrElse(layer, null) else null
+              val rows = new Array[Array[Double]](if (keep) n else 0)
+              var shot = 0
+              while (shot < n) {
+                val nBins = in.readInt()
+                require(nBins >= 0 && nBins < 65536, s"$path $beam/$layer: bad bins")
+                if (!keep) skip(in, 8L * nBins)
+                else if (pick == null) rows(shot) = Array.fill(nBins)(in.readDouble())
+                else {
+                  pick.find(_ >= nBins).foreach { bin =>
+                    throw Ingest.missingBin(path, beam, layer, shot, nBins, bin)
+                  }
+                  var at = 0
+                  rows(shot) = pick.map { bin =>
+                    skip(in, 8L * (bin - at)); at = bin + 1; in.readDouble()
+                  }
+                  skip(in, 8L * (nBins - at))
+                }
+                shot += 1
+              }
+              if (keep) vectors += layer -> rows
             case k => throw new IllegalArgumentException(
               s"$path $beam/$layer: unknown kind byte $k")
           }
+          if (keep) present += layer
           l += 1
         }
-        if (beams.contains(beam)) {
-          val present = longs.keySet ++ doubles.keySet ++ vectors.keySet
+        if (keepBeam) {
           val missing = wanted -- present
           require(missing.isEmpty, s"$path $beam: missing layers $missing")
-          out += Ingest.BeamLayers(beam, n,
-            longs.filter(kv => wanted(kv._1)),
-            doubles.filter(kv => wanted(kv._1)),
-            vectors.filter(kv => wanted(kv._1)))
+          out += Ingest.BeamLayers(beam, n, longs, doubles, vectors)
         }
         b += 1
       }

@@ -66,31 +66,40 @@ object GeoIO {
     * feature of a vector file becomes a named subsetting polygon (name =
     * file stem, or stem_i for multi-feature files). The engine-neutral
     * public format here is GeoJSON (a FeatureCollection of Polygons in
-    * EPSG:4326), parsed by Spark's own JSON reader — no extra dependency.
-    * Returns (name, outer ring) pairs ready for GeoOps.multiAoiPolygon.
+    * EPSG:4326). Returns (name, outer ring) pairs ready for
+    * GeoOps.multiAoiPolygon.
+    *
     * The AOI list is driver-sized by contract (it becomes a plan-time
     * constant in the broadcast multi-AOI scan), exactly like the
-    * reference's in-memory AOI dict. */
+    * reference's in-memory AOI dict — so the file is read on the driver
+    * through Hadoop's FileSystem (any `file:`/hdfs/object-store path) and
+    * parsed with the Jackson that ships in Spark's jars, not by a Spark
+    * JSON scan (which costs a schema-inference job plus a collect job per
+    * command). Integer coordinates come back as doubles. */
   def readAoiGeoJson(spark: SparkSession, path: String): Seq[(String, Seq[(Double, Double)])] = {
     val stem = path.split("/").last.split("\\.").head
-    val feats = spark.read.option("multiLine", "true").json(path)
-      .select(org.apache.spark.sql.functions.explode(
-        org.apache.spark.sql.functions.col("features")).as("f"))
-      // whole-degree coordinates infer as bigint — cast to the double
-      // nesting unconditionally or getAs unboxes Long as Double and throws
-      .select(org.apache.spark.sql.functions.col("f.geometry.type").as("t"),
-        org.apache.spark.sql.functions.col("f.geometry.coordinates")
-          .cast("array<array<array<double>>>").as("c"))
-      .collect()
-    require(feats.nonEmpty, s"no features in $path")
-    feats.zipWithIndex.map { case (r, i) =>
-      require(r.getString(0) == "Polygon",
-        s"feature $i of $path is ${r.getString(0)} — only Polygon AOIs are supported")
-      val rings = r.getAs[collection.Seq[collection.Seq[collection.Seq[Double]]]]("c")
-      val ring = rings.head.map(p => (p.head, p(1))).toSeq // outer ring, (lon, lat)
-      val name = if (feats.length > 1) s"${stem}_$i" else stem
-      (name, ring)
-    }.toSeq
+    val file = new org.apache.hadoop.fs.Path(path)
+    val in = file.getFileSystem(spark.sparkContext.hadoopConfiguration).open(file)
+    val doc = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+      finally in.close()
+    val feats = doc.path("features")
+    require(feats.isArray && !feats.isEmpty, s"no features in $path")
+    (0 until feats.size).map { i =>
+      val geom = feats.get(i).path("geometry")
+      val kind = geom.path("type").asText("missing")
+      require(kind == "Polygon",
+        s"feature $i of $path is $kind — only Polygon AOIs are supported")
+      // outer ring, (lon, lat) per vertex
+      val ring = geom.path("coordinates").path(0)
+      require(ring.isArray && !ring.isEmpty, s"feature $i of $path has no outer ring")
+      val name = if (feats.size > 1) s"${stem}_$i" else stem
+      (name, (0 until ring.size).map { v =>
+        val (x, y) = (ring.get(v).path(0), ring.get(v).path(1))
+        require(x.isNumber && y.isNumber,
+          s"feature $i of $path: vertex $v is not a numeric [lon, lat] pair: ${ring.get(v)}")
+        (x.asDouble, y.asDouble)
+      })
+    }
   }
 
   /** Materialize rasterized cells (GeoOps.rasterize output: cy, cx, bands)

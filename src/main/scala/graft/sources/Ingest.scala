@@ -18,7 +18,11 @@ import graft.operators.{Extract, GediCatalog}
   * Spark-first shape: the ONLY imperative boundary is `GranuleReader`
   * (one granule file -> per-beam primitive column arrays), driven by
   * `mapPartitions` over the granule path list — one task per granule
-  * bundle, shots streamed out, nothing collected on the driver. Everything
+  * bundle, shots streamed out, nothing collected on the driver. The read
+  * is projected: only the plan's layers, and of the `rh` vector only the
+  * bins its `rhNN` variables index (the whole vector when a variable
+  * lands it, `--vars rh=rh`); the projection never weakens the reader's
+  * validation (see [[Ingest.GranuleReader.read]]). Everything
   * after the reader is declarative: shot padding, rh-percentile indexing,
   * acq_time stamping and the quality predicate are codegen'd projections
   * fused into the SAME stage as the read (no extra pass, no shuffle).
@@ -54,9 +58,40 @@ object Ingest {
   trait GranuleReader extends Serializable {
     /** Read `layers` for each of `beams` present in the granule; beams
       * missing from the file are silently skipped (ref extract.py:272-275
-      * logs and continues). A missing LAYER is an error. */
-    def read(path: String, beams: Seq[String], layers: Seq[String]): Seq[BeamLayers]
+      * logs and continues). A missing LAYER is an error.
+      *
+      * `bins` projects vector layers: a layer keyed there comes back with
+      * only those bins of each shot's vector (0-based, ascending, distinct
+      * — see [[checkedBins]]), in that order, and a shot lacking one is an
+      * error naming path, beam, layer and shot ([[missingBin]]). Vector
+      * layers not keyed come back whole. Projection narrows what is
+      * CONVERTED and returned, never what is VALIDATED: every value of a
+      * requested layer of a requested beam is still checked exactly as a
+      * full read would check it, so a granule is rejected by a projected
+      * read iff a full read rejects it (or it lacks a requested bin). This
+      * is the hyperslab seam — a jHDF reader reads `rh[:, bins]` here
+      * instead of the whole dataset. */
+    def read(path: String, beams: Seq[String], layers: Seq[String],
+             bins: Map[String, Seq[Int]] = Map.empty): Seq[BeamLayers]
   }
+
+  /** A reader's view of a bin selection: each list as an array, checked
+    * ascending, distinct and non-negative (readers walk bins in one
+    * forward pass). */
+  def checkedBins(bins: Map[String, Seq[Int]]): Map[String, Array[Int]] =
+    bins.map { case (layer, bs) =>
+      require(bs.nonEmpty && bs.head >= 0 && bs.zip(bs.tail).forall { case (a, b) => a < b },
+        s"bin selection for $layer must be ascending, distinct and non-negative: $bs")
+      layer -> bs.toArray
+    }
+
+  /** The error a projected read raises when shot `shot` (0-based within
+    * its beam) of `layer` holds `has` bins and bin `bin` was requested —
+    * the reader throws it so `ingestPaths` counts and skips the granule. */
+  def missingBin(path: String, beam: String, layer: String, shot: Int,
+                 has: Int, bin: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"$path $beam/$layer shot $shot: has $has bins, bin $bin requested")
 
   sealed trait LayerKind
   case object LongKind extends LayerKind
@@ -135,6 +170,19 @@ object Ingest {
 
     val plans = plan(product, vars)
     val needed = plans.map(_.srcLayer).distinct
+    // Bin projection: a vector layer that only rhNN plans read is read as
+    // the sorted distinct bins they index (L2A's default `rh98` converts 1
+    // of 101 bins per shot); a plan landing the whole vector (`--vars
+    // rh=rh`) keeps it whole, and then the bins its rhNN siblings index
+    // are checked on the landed vector instead.
+    val bins: Map[String, Seq[Int]] = plans.filter(_.kind == VectorKind)
+      .groupBy(_.srcLayer).collect {
+        case (layer, ps) if ps.forall(_.rhIdx.isDefined) =>
+          layer -> ps.flatMap(_.rhIdx).distinct.sorted
+      }
+    val wholeIndexed: Map[String, Int] = plans
+      .collect { case VarPlan(_, layer, _, Some(idx)) if !bins.contains(layer) => layer -> idx }
+      .groupMapReduce(_._1)(_._2)(math.max)
     val beamList = beams
     val rawSchema = StructType(
       StructField("granule_id", StringType, nullable = false) +:
@@ -152,7 +200,14 @@ object Ingest {
     val rdd = spark.sparkContext.parallelize(kept, slices).mapPartitions { it =>
       it.flatMap { case (gid, path) =>
         try {
-          reader.read(path, beamList, needed).iterator.flatMap { bl =>
+          val read = reader.read(path, beamList, needed, bins)
+          for (bl <- read; (layer, bin) <- wholeIndexed) {
+            val vs = bl.vectors(layer)
+            vs.indices.find(vs(_).length <= bin).foreach { i =>
+              throw Ingest.missingBin(path, bl.beam, layer, i, vs(i).length, bin)
+            }
+          }
+          read.iterator.flatMap { bl =>
             (0 until bl.n).iterator.map { i =>
               val vals: Seq[Any] = plans.map { p =>
                 p.kind match {
@@ -180,8 +235,11 @@ object Ingest {
         if (p.srcLayer.endsWith("shot_number"))
           Extract.padShot(col("r_" + p.out)).as(p.out)
         else p.rhIdx match {
-          // rh bin NN is 0-based in the profile; element_at is 1-based
-          case Some(idx) => Extract.rhPercentile(col("r_" + p.out), idx + 1).as(p.out)
+          // rh bin NN is 0-based in the profile, at its position in the
+          // projected vector when the read was narrowed; element_at is 1-based
+          case Some(idx) =>
+            val pos = bins.get(p.srcLayer).fold(idx)(_.indexOf(idx))
+            Extract.rhPercentile(col("r_" + p.out), pos + 1).as(p.out)
           case None => col("r_" + p.out).as(p.out)
         }
       }
@@ -225,7 +283,16 @@ object Ingest {
   *
   * Layer tokens may contain '/' (L2B's geolocation/... paths). Scalar vs
   * long vs vector typing follows [[Ingest.layerKind]] — the same contract
-  * a real HDF5 reader satisfies from the datasets' dtypes. */
+  * a real HDF5 reader satisfies from the datasets' dtypes.
+  *
+  * Grammar and validation are those of `readAllLines`, `trim`,
+  * `split("\\s+")`, `toLong`/`toDouble` and, for bins, `split(",")` —
+  * computed by one index-based scan of the file text instead. Lines of
+  * unwanted beams or layers are cut only as far as their beam and layer
+  * tokens; every value of a wanted line is checked against its kind's
+  * parse (plain decimals convert in place, every other token goes to
+  * `Long.parseLong`/`Double.parseDouble`); only the requested bins of a
+  * projected vector layer are converted. */
 final class FixtureGranuleReader extends Ingest.GranuleReader {
 
   /** Manifest.discover hands back Hadoop-style `file:` URIs; this reader
@@ -236,40 +303,219 @@ final class FixtureGranuleReader extends Ingest.GranuleReader {
       java.nio.file.Paths.get(new java.net.URI(path).getPath)
     else java.nio.file.Paths.get(path)
 
-  override def read(path: String, beams: Seq[String],
-                    layers: Seq[String]): Seq[Ingest.BeamLayers] = {
+  override def read(path: String, beams: Seq[String], layers: Seq[String],
+                    bins: Map[String, Seq[Int]]): Seq[Ingest.BeamLayers] = {
     val wanted = layers.toSet
-    val lines = java.nio.file.Files.readAllLines(localPath(path))
-    // beam -> layer -> raw value tokens
-    val acc = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.Map[String, Array[String]]]
-    lines.forEach { line =>
-      val t = line.trim
-      if (t.nonEmpty && !t.startsWith("#")) {
-        val parts = t.split("\\s+")
-        require(parts.length >= 2, s"bad fixture line in $path: $t")
-        val (beam, layer) = (parts(0), parts(1))
-        if (wanted.contains(layer))
-          acc.getOrElseUpdate(beam, scala.collection.mutable.Map.empty)
-            .put(layer, parts.drop(2))
-      }
+    val wantedBeams = beams.toSet
+    val sel = Ingest.checkedBins(bins)
+    val text = new FixtureGranuleReader.Scan(
+      java.nio.file.Files.readString(localPath(path)))
+    // beam -> layer -> [start, end) of its value tokens; a repeated layer
+    // line replaces the earlier one
+    val spans = scala.collection.mutable.LinkedHashMap
+      .empty[String, scala.collection.mutable.Map[String, (Int, Int)]]
+    text.lines(path) { (beam, layer, from, to) =>
+      if (wanted(layer) && wantedBeams(beam))
+        spans.getOrElseUpdate(beam, scala.collection.mutable.Map.empty)
+          .put(layer, (from, to))
     }
-    acc.toSeq.collect { case (beam, byLayer) if beams.contains(beam) =>
+    spans.toSeq.map { case (beam, byLayer) =>
       val missing = wanted -- byLayer.keySet
       require(missing.isEmpty, s"$path $beam: missing layers $missing")
-      val n = byLayer.values.head.length
       var longs = Map.empty[String, Array[Long]]
       var doubles = Map.empty[String, Array[Double]]
       var vectors = Map.empty[String, Array[Array[Double]]]
-      byLayer.foreach { case (layer, toks) =>
+      byLayer.foreach { case (layer, (from, to)) =>
         Ingest.layerKind(layer) match {
-          case Ingest.LongKind => longs += layer -> toks.map(_.toLong)
-          case Ingest.DoubleKind => doubles += layer -> toks.map(_.toDouble)
+          case Ingest.LongKind => longs += layer -> text.longs(from, to)
+          case Ingest.DoubleKind => doubles += layer -> text.doubles(from, to)
           case Ingest.VectorKind =>
-            vectors += layer -> toks.map(_.split(",").map(_.toDouble))
+            val pick = sel.getOrElse(layer, null)
+            vectors += layer -> text.vectors(from, to, pick,
+              (shot, has) => Ingest.missingBin(path, beam, layer, shot, has,
+                pick.find(_ >= has).get))
         }
       }
+      val n = (longs.values.map(_.length) ++ doubles.values.map(_.length) ++
+        vectors.values.map(_.length)).head
       Ingest.BeamLayers(beam, n, longs, doubles, vectors)
+    }
+  }
+}
+
+object FixtureGranuleReader {
+
+  private val pow10 = Array.tabulate(23)(math.pow(10, _))
+
+  /** One index-based pass over a granule's text. `pos` is where the last
+    * value scan stopped (the end of the token or bin it parsed). */
+  private final class Scan(s: String) {
+    private val len = s.length
+    private var pos = 0
+
+    /** `split("\\s+")`'s separator set within one line. */
+    private def isSep(c: Char): Boolean = c == ' ' || c == '\t' || c == '\u000b' || c == '\f'
+
+    private def tokenEnd(from: Int, to: Int): Int = {
+      var i = from
+      while (i < to && !isSep(s.charAt(i))) i += 1
+      i
+    }
+
+    private def skipSeps(from: Int, to: Int): Int = {
+      var i = from
+      while (i < to && isSep(s.charAt(i))) i += 1
+      i
+    }
+
+    /** Every non-blank, non-comment line as (beam, layer, values from, to):
+      * `readAllLines`' line breaks, `trim`'s bounds, `split("\\s+")`'s
+      * tokens. The values are not looked at here, so unwanted lines cost
+      * only their line-break search. */
+    def lines(path: String)(f: (String, String, Int, Int) => Unit): Unit = {
+      var nextCr = s.indexOf('\r')
+      var at = 0
+      while (at < len) {
+        if (nextCr >= 0 && nextCr < at) nextCr = s.indexOf('\r', at)
+        val nl = s.indexOf('\n', at)
+        val eol = math.min(if (nl < 0) len else nl, if (nextCr < 0) len else nextCr)
+        var a = at
+        var b = eol
+        while (a < b && s.charAt(a) <= ' ') a += 1
+        while (b > a && s.charAt(b - 1) <= ' ') b -= 1
+        if (a < b && s.charAt(a) != '#') {
+          val beamEnd = tokenEnd(a, b)
+          val layerStart = skipSeps(beamEnd, b)
+          require(layerStart < b, s"bad fixture line in $path: ${s.substring(a, b)}")
+          val layerEnd = tokenEnd(layerStart, b)
+          f(s.substring(a, beamEnd), s.substring(layerStart, layerEnd),
+            skipSeps(layerEnd, b), b)
+        }
+        at = eol + 1
+      }
+    }
+
+    private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+    /** `toLong` of the token at `from`: a sign and up to 18 ASCII digits
+      * convert in place, any other token goes to `parseLong`, so the
+      * accept/reject set is parseLong's. */
+    private def longAt(from: Int, to: Int): Long = {
+      var i = from
+      val neg = i < to && s.charAt(i) == '-'
+      if (i < to && (neg || s.charAt(i) == '+')) i += 1
+      val digits = i
+      var v = 0L
+      while (i < to && isDigit(s.charAt(i))) { v = v * 10 + (s.charAt(i) - '0'); i += 1 }
+      if ((i == to || isSep(s.charAt(i))) && i > digits && i - digits <= 18) {
+        pos = i
+        if (neg) -v else v
+      } else {
+        pos = tokenEnd(i, to)
+        java.lang.Long.parseLong(s.substring(from, pos))
+      }
+    }
+
+    /** `toDouble` of the value at `from`, which ends at a separator, at
+      * `to`, or (for a bin, `comma`) at a comma; converted only when `keep`.
+      * A plain `[+-]digits[.digits]` value with a mantissa of at most 2^53
+      * is exact as mantissa / 10^frac (both operands exact, one correctly
+      * rounded division: the double parseDouble returns). Any other value
+      * goes to `parseDouble`, so `1.0E-4` and `NaN` still parse and `3.x`
+      * still throws. Without `keep`, a plain value is only checked. */
+    private def doubleAt(from: Int, to: Int, comma: Boolean, keep: Boolean): Double = {
+      var i = from
+      val neg = i < to && s.charAt(i) == '-'
+      if (i < to && (neg || s.charAt(i) == '+')) i += 1
+      val intStart = i
+      var m = 0L
+      while (i < to && isDigit(s.charAt(i))) { m = m * 10 + (s.charAt(i) - '0'); i += 1 }
+      val intDigits = i - intStart
+      var frac = -1 // no '.'
+      if (i < to && s.charAt(i) == '.') {
+        i += 1
+        val fracStart = i
+        while (i < to && isDigit(s.charAt(i))) { m = m * 10 + (s.charAt(i) - '0'); i += 1 }
+        frac = i - fracStart
+      }
+      val ends = i == to || isSep(s.charAt(i)) || (comma && s.charAt(i) == ',')
+      if (ends && intDigits > 0 && frac != 0 && intDigits + math.max(frac, 0) <= 18 &&
+          m <= (1L << 53)) {
+        pos = i
+        if (!keep) 0.0
+        else {
+          val v = if (frac <= 0) m.toDouble else m.toDouble / pow10(frac)
+          if (neg) -v else v
+        }
+      } else {
+        var e = i
+        while (e < to && !isSep(s.charAt(e)) && !(comma && s.charAt(e) == ',')) e += 1
+        pos = e
+        java.lang.Double.parseDouble(s.substring(from, e))
+      }
+    }
+
+    def longs(from: Int, to: Int): Array[Long] = {
+      val out = Array.newBuilder[Long]
+      var a = from
+      while (a < to) { out += longAt(a, to); a = skipSeps(pos, to) }
+      out.result()
+    }
+
+    def doubles(from: Int, to: Int): Array[Double] = {
+      val out = Array.newBuilder[Double]
+      var a = from
+      while (a < to) { out += doubleAt(a, to, comma = false, keep = true); a = skipSeps(pos, to) }
+      out.result()
+    }
+
+    /** One shot per token, bins comma-joined. Like `split(",")`, trailing
+      * empty bins are dropped and any other empty bin is rejected (by
+      * parseDouble). With a selection `pick` (null: whole vectors) every
+      * bin is still checked, only the picked ones are converted, and a
+      * shot with too few bins throws `missing(shot, bins it has)`. */
+    def vectors(from: Int, to: Int, pick: Array[Int],
+                missing: (Int, Int) => Exception): Array[Array[Double]] = {
+      val out = Array.newBuilder[Array[Double]]
+      var whole = new Array[Double](if (pick == null) 128 else 0)
+      var shot = 0
+      var a = from
+      while (a < to) {
+        val vs = if (pick == null) null else new Array[Double](pick.length)
+        var bin = 0
+        var j = 0 // next picked slot
+        var f = a
+        var more = true
+        while (more) {
+          val c = if (f < to) s.charAt(f) else ' '
+          if (c == ',' || isSep(c)) {
+            // an empty bin: trailing ones end the shot, others are errors
+            var k = f
+            while (k < to && s.charAt(k) == ',') k += 1
+            if (k < to && !isSep(s.charAt(k))) java.lang.Double.parseDouble("")
+            pos = k
+            more = false
+          } else if (pick == null) {
+            if (bin == whole.length) whole = java.util.Arrays.copyOf(whole, bin * 2)
+            whole(bin) = doubleAt(f, to, comma = true, keep = true)
+            bin += 1
+          } else {
+            val hit = j < pick.length && pick(j) == bin
+            val v = doubleAt(f, to, comma = true, keep = hit)
+            if (hit) { vs(j) = v; j += 1 }
+            bin += 1
+          }
+          if (more) {
+            if (pos < to && s.charAt(pos) == ',') f = pos + 1 else more = false
+          }
+        }
+        if (pick == null) out += java.util.Arrays.copyOf(whole, bin)
+        else if (j < pick.length) throw missing(shot, bin)
+        else out += vs
+        shot += 1
+        a = skipSeps(pos, to)
+      }
+      out.result()
     }
   }
 }

@@ -153,28 +153,32 @@ object PlanBridge {
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Non-blocking Observation read (Observation.get blocks forever when
-    * the optimizer pruned the observed subtree; getOrEmpty is private[sql]).
-    * Empty map until the observed frame's job completes. */
-  def observedMetrics(o: Observation): Map[String, Any] = o.getOrEmpty
+    * the optimizer pruned the observed subtree). Empty map until the
+    * observed frame's job completes. Goes through getRowOrEmpty (private
+    * [sql]): Spark 4.1's getOrEmpty throws an NPE before the metrics
+    * arrive (it reads the schema of `Row.empty`, which is null). */
+  def observedMetrics(o: Observation): Map[String, Any] =
+    o.getRowOrEmpty.fold(Map.empty[String, Any])(r => r.getValuesMap[Any](r.schema.fieldNames.toSeq))
 
-  /** Bounded wait for an Observation whose action has ALREADY run (e.g.
-    * metrics riding an eager localCheckpoint — verified to fire): the
-    * listener delivery is async, so poll briefly instead of Observation
-    * .get's unbounded block. Throws if nothing arrives in `timeoutMs` —
+  /** Metrics of an Observation whose action has ALREADY returned, or
+    * None when the observation never fired (the optimizer pruned the
+    * observed subtree, or the frame was never materialized). Observed
+    * metrics reach the Observation through a QueryExecutionListener on the
+    * listener bus, which can lag the action's return; the bus is drained
+    * once before concluding they will not come — no fixed sleep or poll. */
+  def observedAfterAction(o: Observation): Option[Map[String, Any]] = {
+    if (o.getRowOrEmpty.isEmpty)
+      org.apache.spark.SparkContext.getActive.foreach(_.listenerBus.waitUntilEmpty())
+    Some(observedMetrics(o)).filter(_.nonEmpty)
+  }
+
+  /** [[observedAfterAction]] for an observation that must have fired
+    * (e.g. metrics riding an eager localCheckpoint). Throws otherwise —
     * for a materialized frame that means the observed node was pruned,
     * which is a caller bug, not a wait-longer situation. */
-  def awaitObserved(o: Observation, timeoutMs: Long = 30000L): Map[String, Any] = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    var m = o.getOrEmpty
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(2)
-      m = o.getOrEmpty
-    }
-    require(m.nonEmpty,
-      "observation did not fire within the timeout — was the observed " +
-        "frame actually materialized?")
-    m
-  }
+  def awaitObserved(o: Observation): Map[String, Any] =
+    observedAfterAction(o).getOrElse(throw new IllegalArgumentException(
+      "observation did not fire — was the observed frame actually materialized?"))
 
   /** Register a function on a LIVE session (the extensions path only
     * applies at session construction). */

@@ -54,6 +54,72 @@ class CliSpec extends SparkSpec {
         .filter(col("value") > 5.5 && col("value") < 80.5).count())
   }
 
+  /** Spark jobs started while `body` runs (listener bus drained on both
+    * sides so no event of an earlier test leaks in). */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.PlanBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.PlanBridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("cli pipeline --aoi runs exactly one Spark job (AOI file read on the driver)") {
+    val base = tmp()
+    val granules = java.nio.file.Paths.get(base, "granules")
+    Files.createDirectories(granules)
+    val n = 4
+    def line(layer: String, v: Int => String) =
+      s"BEAM0101 $layer ${(0 until n).map(v).mkString(" ")}"
+    Files.writeString(granules.resolve("GEDI02_A_2019170155833_O02932_T02267_02_001_01.h5"),
+      (Seq("# graft fixture granule v1",
+        line("shot_number", i => s"${100 + i}"),
+        line("lat_lowestmode", i => s"${10 + i}.5"),
+        line("lon_lowestmode", i => s"${20 + i}.5"),
+        line("elev_lowestmode", _ => "100.0"),
+        line("digital_elevation_model", _ => "101.0"),
+        line("degrade_flag", _ => "0"),
+        line("quality_flag", _ => "1"),
+        line("sensitivity", _ => "0.95"),
+        line("num_detectedmodes", _ => "1"),
+        line("rh", i => (0 until 101).map(b => s"${b * (i + 1)}.0").mkString(","))) :+ "")
+        .mkString("\n"))
+    Files.writeString(java.nio.file.Paths.get(base, "zone.geojson"),
+      """{"type":"FeatureCollection","features":[{"type":"Feature","properties":{},
+        | "geometry":{"type":"Polygon","coordinates":[[[20,10],[22,10],[22,12],[20,12],[20,10]]]}}
+        |]}""".stripMargin)
+    val jobs = jobsDuring(Cli.run(spark, "pipeline", Map(
+      "input" -> granules.toString, "output" -> s"$base/out", "product" -> "L2A",
+      "quality" -> "1", "aoi" -> s"$base/zone.geojson")))
+    assert(jobs === 1)
+    val got = spark.read.parquet(s"$base/out")
+    // shots 0 and 1 (lon 20.5/21.5, lat 10.5/11.5) fall inside the zone
+    assert(got.filter(col("aoi") === "zone").count() === 2)
+  }
+
+  test("observed metrics: a fired observation is returned, a never-run one is empty without waiting") {
+    import org.apache.spark.sql.graftbridge.PlanBridge
+    val df = spark.range(10).toDF("id")
+    val fired = new org.apache.spark.sql.Observation("graft_spec_fired")
+    df.observe(fired, count(lit(1)).as("n")).collect()
+    assert(PlanBridge.awaitObserved(fired)("n") === 10L)
+    assert(PlanBridge.observedAfterAction(fired).flatMap(_.get("n")) === Some(10L))
+
+    val never = new org.apache.spark.sql.Observation("graft_spec_never")
+    df.observe(never, count(lit(1)).as("n")) // attached, never materialized
+    val t0 = System.nanoTime()
+    assert(PlanBridge.observedAfterAction(never).isEmpty) // Cli logs it as -1
+    intercept[IllegalArgumentException](PlanBridge.awaitObserved(never))
+    assert((System.nanoTime() - t0) / 1e9 < 2.0, "a bus drain, not a fixed sleep")
+  }
+
   test("cli merge suffixes and joins the two sides") {
     import spark.implicits._
     val base = tmp()

@@ -106,6 +106,34 @@ class GeoIOSpec extends SparkSpec {
     assert(counts.getOrElse("zones_1", 0L) > 0)
   }
 
+  test("geojson AOI reader: file: URIs, and named errors for bad features") {
+    val dir = Files.createTempDirectory("graft_aoi_uri")
+    def write(name: String, features: String): String = {
+      val p = dir.resolve(name)
+      Files.writeString(p, s"""{"type":"FeatureCollection","features":[$features]}""")
+      p.toUri.toString // file:/...
+    }
+    val uri = write("box.geojson", """{"type":"Feature","properties":{},
+      |"geometry":{"type":"Polygon","coordinates":[[[1.5,2],[3,2],[3,4.25],[1.5,2]]]}}""".stripMargin)
+    assert(uri.startsWith("file:"))
+    assert(GeoIO.readAoiGeoJson(spark, uri) ===
+      Seq("box" -> Seq((1.5, 2.0), (3.0, 2.0), (3.0, 4.25), (1.5, 2.0))))
+
+    val point = write("pt.geojson", """{"type":"Feature","properties":{},
+      |"geometry":{"type":"Point","coordinates":[1.0,2.0]}}""".stripMargin)
+    val e = intercept[IllegalArgumentException](GeoIO.readAoiGeoJson(spark, point))
+    assert(e.getMessage.contains("feature 0") && e.getMessage.contains("is Point"), e.getMessage)
+
+    val empty = write("none.geojson", "")
+    val e2 = intercept[IllegalArgumentException](GeoIO.readAoiGeoJson(spark, empty))
+    assert(e2.getMessage.contains("no features"), e2.getMessage)
+
+    val text = write("txt.geojson", """{"type":"Feature","properties":{},
+      |"geometry":{"type":"Polygon","coordinates":[[[1,2],["x",3],[1,2]]]}}""".stripMargin)
+    val e3 = intercept[IllegalArgumentException](GeoIO.readAoiGeoJson(spark, text))
+    assert(e3.getMessage.contains("vertex 1"), e3.getMessage)
+  }
+
   test("ascii grid raster round-trips rasterized cells with NODATA fill") {
     import spark.implicits._
     val pts = Seq(

@@ -16,7 +16,7 @@ class IngestSpec extends SparkSpec {
     * quality 1 except shot 0 of coverage beams, rh bin b = b * (i+1) / 1e4. */
   private def writeGranule(dir: String, name: String,
                            beams: Seq[(String, Int, Long)],
-                           badElev: Boolean = false): String = {
+                           badElev: Boolean = false, rhBins: Int = 101): String = {
     val sb = new StringBuilder("# graft fixture granule v1\n")
     for ((beam, n, shotBase) <- beams) {
       def line(layer: String, vals: Seq[String]): Unit =
@@ -34,7 +34,7 @@ class IngestSpec extends SparkSpec {
         if (beam.startsWith("BEAM00") && i == 0) "0" else "1"))
       line("sensitivity", idx.map(_ => "0.95"))
       line("num_detectedmodes", idx.map(_ => "1"))
-      line("rh", idx.map(i => (0 until 101).map(b => b * (i + 1) / 1e4).mkString(",")))
+      line("rh", idx.map(i => (0 until rhBins).map(b => b * (i + 1) / 1e4).mkString(",")))
     }
     val p = Paths.get(dir, name)
     Files.createDirectories(p.getParent)
@@ -94,6 +94,38 @@ class IngestSpec extends SparkSpec {
     val (df, errs) = Ingest.ingest(spark, root, "L2A")
     assert(df.count() === 7)
     assert(errs.value === 1)
+  }
+
+  test("a granule whose rh profile lacks the requested bin is counted and skipped") {
+    val root = fixtureRoot()
+    writeGranule(root, "GEDI02_A_2019171000000_O1_T1_02_001_01.h5",
+      Seq(("BEAM0101", 2, 5000L)), rhBins = 60)
+    // rh98 projects the read to bin 98: the reader rejects the short
+    // profile, the good granules still land
+    val (df, errs) = Ingest.ingest(spark, root, "L2A")
+    assert(df.count() === 7)
+    assert(errs.value === 1)
+    // landing the whole vector too: rh98 is checked on the landed profile
+    val (mixed, errs2) = Ingest.ingest(spark, root, "L2A",
+      extraVars = Some(Seq("rh98" -> "rh98", "rh" -> "rh")))
+    assert(mixed.count() === 7)
+    assert(errs2.value === 1)
+  }
+
+  test("--vars rh=rh lands the whole 101-bin profile beside rhNN") {
+    val root = fixtureRoot()
+    val out = Files.createTempDirectory("graft_ingest_rh").toString + "/shots"
+    Cli.run(spark, "ingest", Map("input" -> root, "output" -> out,
+      "product" -> "L2A", "vars" -> "rh=rh,rh97=rh97,rh98=rh98"))
+    val rows = spark.read.parquet(out).orderBy("shot").collect()
+    assert(rows.length === 7)
+    rows.foreach { r =>
+      val i = (r.getAs[String]("shot").toLong % 1000).toInt // shot index in its beam
+      val rh = r.getAs[collection.Seq[Double]]("rh")
+      assert(rh === (0 until 101).map(b => b * (i + 1) / 1e4))
+      assert(r.getAs[Long]("rh97") === math.round(rh(97) * 100))
+      assert(r.getAs[Long]("rh98") === math.round(rh(98) * 100))
+    }
   }
 
   test("ingested shots run the existing quality + geo pipeline end-to-end") {
