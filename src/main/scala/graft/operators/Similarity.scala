@@ -386,8 +386,9 @@ object Similarity {
     * invariant (empty cells keep their previous centroid), so each
     * iteration's refreshed codebook VALUES are re-read by an
     * observation riding the iteration's own checkpoint (collect_list of
-    * the _fid <= cut rows — verified to fire under localCheckpoint,
-    * tools/ObsProbe) — zero extra jobs per iteration. */
+    * the _fid <= cut rows — fires under localCheckpoint, asserted by
+    * CliSpec's eager-localCheckpoint observation spec) — zero extra
+    * jobs per iteration. */
   private[operators] def trainIvfCentroidsWithCoarse(
       candidates: DataFrame, nCells: Int, iters: Int,
       pCoarse: Int = TwoLevelCoarseProbes,

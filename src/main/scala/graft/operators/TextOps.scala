@@ -1876,11 +1876,23 @@ object TextOps {
   def gopherRules(df: DataFrame, idCol: String, textCol: String,
                   minWords: Long = 20, maxWords: Long = 80,
                   stops: Seq[String] = Seq("the", "a"), minStops: Long = 2,
-                  repPctCap: Long = 15): DataFrame = {
+                  repPctCap: Long = 15): DataFrame =
+    withRuleFlags(df.select(col(idCol),
+        TextFunctions.tokens(col(textCol)).as("_t"),
+        length(col(textCol)).as("_nch")),
+        minWords, maxWords, stops, minStops, repPctCap)
+      .select(col(idCol) +: ruleFlagCols: _*)
+
+  /** The [[gopherRules]] flag tree over `_t` (tokens) and `_nch` (text
+    * length): adds `n_tok`, the four `r_*` rule flags and `pass`. The
+    * one definition both [[gopherRules]] and [[clfRuleGates]] run. */
+  private def withRuleFlags(df: DataFrame, minWords: Long = 20,
+                            maxWords: Long = 80,
+                            stops: Seq[String] = Seq("the", "a"),
+                            minStops: Long = 2,
+                            repPctCap: Long = 15): DataFrame = {
     val stopList = stops.map(s => s"'$s'").mkString(", ")
-    df.select(col(idCol), TextFunctions.tokens(col(textCol)).as("_t"),
-        length(col(textCol)).as("_nch"))
-      .withColumn("n_tok", size(col("_t")).cast("long"))
+    df.withColumn("n_tok", size(col("_t")).cast("long"))
       .withColumn("_nstop",
         expr(s"CAST(size(filter(_t, t -> t IN ($stopList))) AS BIGINT)"))
       .withColumn("_maxtf",
@@ -1899,10 +1911,11 @@ object TextOps {
       .withColumn("pass",
         col("r_word_count") && col("r_mean_word_len") &&
           col("r_stopwords") && col("r_repetition"))
-      .select(col(idCol), col("n_tok"), col("r_word_count"),
-        col("r_mean_word_len"), col("r_stopwords"), col("r_repetition"),
-        col("pass"))
   }
+
+  private def ruleFlagCols: Seq[Column] =
+    Seq("n_tok", "r_word_count", "r_mean_word_len", "r_stopwords",
+      "r_repetition", "pass").map(col)
 
   /** DuckDB oracle for [[gopherRules]] — identical integer rule tree. */
   def gopherRulesSql(table: String, idExpr: String, textExpr: String,
@@ -1934,50 +1947,21 @@ object TextOps {
     * joining two separate scans on doc_id — the r18 shape under
     * q_brier/q_clf_calibration/q_cohens_kappa/q_mcnemar/q_cascade_yield —
     * paid a second scan + tokenization + a corpus-keyed join for columns
-    * one projection carries. Identical expression trees, identical
-    * values; the declared oracles keep their two-CTE join (values
+    * one projection carries. Both gates run at their default
+    * thresholds through the same builders ([[withMargin]],
+    * [[withRuleFlags]]) as the single-gate operators, so values are
+    * identical; the declared oracles keep their two-CTE join (values
     * equal). `carryCols` lets a caller ride extra input columns (e.g.
     * the source key) through the same scan. */
   private[graft] def clfRuleGates(df: DataFrame, idCol: String,
                                   textCol: String,
-                                  carryCols: Seq[String] = Nil,
-                                  nBuckets: Long = 64,
-                                  minWords: Long = 20, maxWords: Long = 80,
-                                  stops: Seq[String] = Seq("the", "a"),
-                                  minStops: Long = 2,
-                                  repPctCap: Long = 15): DataFrame = {
-    val stopList = stops.map(s => s"'$s'").mkString(", ")
-    df.select(col(idCol) +: carryCols.map(col) ++:
+                                  carryCols: Seq[String] = Nil): DataFrame =
+    withRuleFlags(withMargin(df.select(col(idCol) +: carryCols.map(col) ++:
         Seq(TextFunctions.tokens(col(textCol)).as("_t"),
           TextFunctions.tokenCodes(col(textCol)).as("_codes"),
-          length(col(textCol)).as("_nch")): _*)
-      .withColumn("margin",
-        expr(s"aggregate(_codes, CAST(0 AS BIGINT), " +
-          s"(acc, c) -> acc + ((c % $nBuckets) * 2654435761 % 1999 - 999))"))
-      .withColumn("keep", col("margin") > 0L)
-      .withColumn("n_tok", size(col("_t")).cast("long"))
-      .withColumn("_nstop",
-        expr(s"CAST(size(filter(_t, t -> t IN ($stopList))) AS BIGINT)"))
-      .withColumn("_maxtf",
-        expr("CAST(array_max(transform(array_distinct(_t), " +
-          "t -> size(filter(_t, x -> x = t)))) AS BIGINT)"))
-      .withColumn("_ntc", col("_nch").cast("long") - (col("n_tok") - 1))
-      .withColumn("r_word_count",
-        col("n_tok") >= minWords && col("n_tok") <= maxWords)
-      .withColumn("r_mean_word_len",
-        lit(3L) * col("n_tok") <= col("_ntc") &&
-          col("_ntc") <= lit(10L) * col("n_tok"))
-      .withColumn("r_stopwords", col("_nstop") >= minStops)
-      .withColumn("r_repetition",
-        lit(100L) * col("_maxtf") <= lit(repPctCap) * col("n_tok"))
-      .withColumn("pass",
-        col("r_word_count") && col("r_mean_word_len") &&
-          col("r_stopwords") && col("r_repetition"))
+          length(col(textCol)).as("_nch")): _*)))
       .select(col(idCol) +: carryCols.map(col) ++:
-        Seq(col("margin"), col("keep"), col("n_tok"), col("r_word_count"),
-          col("r_mean_word_len"), col("r_stopwords"), col("r_repetition"),
-          col("pass")): _*)
-  }
+        Seq(col("margin"), col("keep")) ++: ruleFlagCols: _*)
 
   /** Hashed linear-classifier margin filter (the fastText-style quality
     * classifier gate — GPT-3/LLaMA-lineage curation runs one after the
@@ -1994,11 +1978,18 @@ object TextOps {
     * the model never shuffles. */
   def clfMarginFilter(df: DataFrame, idCol: String, textCol: String,
                       nBuckets: Long = 64): DataFrame =
-    df.select(col(idCol), TextFunctions.tokenCodes(col(textCol)).as("_codes"))
-      .withColumn("margin",
+    withMargin(df.select(col(idCol),
+        TextFunctions.tokenCodes(col(textCol)).as("_codes")), nBuckets)
+      .select(col(idCol), col("margin"), col("keep"))
+
+  /** The [[clfMarginFilter]] weight fold over `_codes` (token codes):
+    * adds `margin` and `keep`. The one definition both
+    * [[clfMarginFilter]] and [[clfRuleGates]] run. */
+  private def withMargin(df: DataFrame, nBuckets: Long = 64): DataFrame =
+    df.withColumn("margin",
         expr(s"aggregate(_codes, CAST(0 AS BIGINT), " +
           s"(acc, c) -> acc + ((c % $nBuckets) * 2654435761 % 1999 - 999))"))
-      .select(col(idCol), col("margin"), (col("margin") > 0L).as("keep"))
+      .withColumn("keep", col("margin") > 0L)
 
   /** DuckDB oracle for [[clfMarginFilter]] — identical fold. */
   def clfMarginFilterSql(table: String, idExpr: String, textExpr: String,

@@ -1,7 +1,8 @@
 package org.apache.spark.sql
 package graftbridge
 
-import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.catalyst.plans.logical.{Sort, Statistics}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lives under org.apache.spark.sql to reach private[sql] builders.
   *
@@ -60,22 +61,8 @@ object PlanBridge {
     * checkpoints can keep the stock call. */
   def freshLocalCheckpoint(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]].localCheckpoint()
-    ds.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        val spark = ds.sparkSession
-        val measured = spark.sparkContext.getRDDStorageInfo
-          .find(_.id == lr.rdd.id)
-          .map(i => i.memSize + i.diskSize)
-          .filter(_ > 0L)
-          .getOrElse(1L << 20)
-        val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
-          sizeInBytes = BigInt(measured))
-        classic.Dataset.ofRows(spark,
-          org.apache.spark.sql.execution.LogicalRDD(
-            lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-            lr.isStreaming, lr.stream)(spark, Some(stats), None))
-      case _ => ds
-    }
+    checkpointRdd(ds).fold(ds: DataFrame)(lr =>
+      withSize(ds, lr, storedSize(ds, lr).getOrElse(1L << 20)))
   }
 
   /** LAZY localCheckpoint for a subtree referenced more than once inside
@@ -105,16 +92,7 @@ object PlanBridge {
     * at scale. */
   def sharedLocalCheckpointSized(df: DataFrame, sizeInBytes: Long): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]].localCheckpoint(eager = false)
-    ds.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
-          sizeInBytes = BigInt(sizeInBytes))
-        classic.Dataset.ofRows(ds.sparkSession,
-          org.apache.spark.sql.execution.LogicalRDD(
-            lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-            lr.isStreaming, lr.stream)(ds.sparkSession, Some(stats), None))
-      case _ => ds
-    }
+    checkpointRdd(ds).fold(ds: DataFrame)(withSize(ds, _, sizeInBytes))
   }
 
   /** Measured storage size of an (already materialized) localCheckpoint's
@@ -123,14 +101,30 @@ object PlanBridge {
     * this round's materialized state. None when the frame is not a
     * checkpoint or its blocks report no size. */
   def measuredCheckpointSize(df: DataFrame): Option[Long] =
+    checkpointRdd(df).flatMap(storedSize(df, _))
+
+  private def checkpointRdd(df: DataFrame): Option[LogicalRDD] =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        df.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == lr.rdd.id)
-          .map(i => i.memSize + i.diskSize)
-          .filter(_ > 0L)
+      case lr: LogicalRDD => Some(lr)
       case _ => None
     }
+
+  /** Memory + disk bytes of the checkpoint's blocks; None when they
+    * report no size (not materialized yet). */
+  private def storedSize(df: DataFrame, lr: LogicalRDD): Option[Long] =
+    df.sparkSession.sparkContext.getRDDStorageInfo
+      .find(_.id == lr.rdd.id)
+      .map(i => i.memSize + i.diskSize)
+      .filter(_ > 0L)
+
+  /** The checkpoint frame re-planned with `sizeInBytes` as its statistics
+    * in place of the ones it inherited from its origin plan. */
+  private def withSize(ds: classic.Dataset[Row], lr: LogicalRDD,
+                       sizeInBytes: Long): DataFrame =
+    classic.Dataset.ofRows(ds.sparkSession,
+      LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
+        lr.isStreaming, lr.stream)(
+        ds.sparkSession, Some(Statistics(sizeInBytes = BigInt(sizeInBytes))), None))
 
   /** Free the blocks behind a localCheckpoint()ed frame. Dataset.unpersist
     * is a no-op for these — localCheckpoint persists the underlying RDD
@@ -140,11 +134,7 @@ object PlanBridge {
     * The frame must no longer be needed: local checkpoints are
     * unrecoverable once their blocks are dropped. */
   def unpersistLocalCheckpoint(df: DataFrame): Unit =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    checkpointRdd(df).foreach(_.rdd.unpersist(blocking = false))
 
   /** Block until the listener bus has delivered every queued event —
     * deterministic drain for tools that attribute jobs/stages to a rep

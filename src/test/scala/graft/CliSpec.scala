@@ -120,6 +120,29 @@ class CliSpec extends SparkSpec {
     assert((System.nanoTime() - t0) / 1e9 < 2.0, "a bus drain, not a fixed sleep")
   }
 
+  test("an eager localCheckpoint fires its frame's observation, collect_list(struct) metrics included") {
+    // the r19 gate scores and IVF training's per-iteration codebook read
+    // ride the round's own checkpoint action instead of a job of their own
+    import org.apache.spark.sql.graftbridge.PlanBridge
+    val gate = new org.apache.spark.sql.Observation("graft_spec_ckpt_gate")
+    val ck = spark.range(100).toDF("x")
+      .observe(gate, sum(col("x")).as("sx"), count(lit(1)).as("n"))
+      .localCheckpoint()
+    assert(PlanBridge.awaitObserved(gate) === Map("sx" -> 4950L, "n" -> 100L))
+
+    val rows = new org.apache.spark.sql.Observation("graft_spec_ckpt_rows")
+    val ck2 = spark.range(10).toDF("id")
+      .withColumn("vec", array(col("id").cast("float"), (col("id") * 2).cast("float")))
+      .observe(rows, collect_list(when(col("id") < 3,
+        struct(col("id"), col("vec")))).as("coarse"))
+      .localCheckpoint()
+    val coarse = PlanBridge.awaitObserved(rows)("coarse")
+      .asInstanceOf[Seq[org.apache.spark.sql.Row]]
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
+    assert(coarse === Seq((0L, Seq(0f, 0f)), (1L, Seq(1f, 2f)), (2L, Seq(2f, 4f))))
+    Seq(ck, ck2).foreach(PlanBridge.unpersistLocalCheckpoint)
+  }
+
   test("cli merge suffixes and joins the two sides") {
     import spark.implicits._
     val base = tmp()
@@ -1061,20 +1084,40 @@ class CliSpec extends SparkSpec {
     // included two --algo sub-arms) — update both together
     assert(Cli.commands.size === 138)
     assert(Cli.commands.distinct.size === Cli.commands.size, "duplicate names")
-    // every declared name must reach a case arm: dispatching with empty
-    // opts may fail on missing options/inputs, but NEVER with the
-    // unknown-command error; an undeclared name must
+    // every declared name must reach its builder: dispatching with empty
+    // opts fails on a missing option, named with the command and the
+    // --option, but NEVER with the unknown-command error; an undeclared
+    // name must
     for (c <- Cli.commands) {
-      val err = intercept[Exception] {
+      val err = intercept[IllegalArgumentException] {
         Cli.run(spark, c, Map.empty)
       }
       assert(!String.valueOf(err.getMessage).contains("unknown command"),
         s"declared command '$c' did not dispatch")
+      assert(err.getMessage.startsWith(s"$c: --") &&
+        err.getMessage.endsWith(" is required"), s"$c: ${err.getMessage}")
     }
     val unknown = intercept[Exception] {
       Cli.run(spark, "no-such-command", Map.empty)
     }
     assert(String.valueOf(unknown.getMessage).contains("unknown command"))
+  }
+
+  test("cli: malformed option values name the command, the --option and the value") {
+    def rejected(cmd: String, opts: (String, String)*): String =
+      intercept[IllegalArgumentException](Cli.run(spark, cmd, Map(
+        "input" -> s"$sfDir/documents.parquet", "output" -> (tmp() + "/out")) ++ opts))
+        .getMessage
+    assert(rejected("cluster", "id" -> "doc_id", "text" -> "text", "k" -> "x") ===
+      "cluster: --k 'x' is not an integer")
+    for (c <- Seq("pipeline", "subset")) {
+      val msg = rejected(c, "x" -> "value", "y" -> "value", "bbox" -> "1,2,3")
+      assert(msg.startsWith(s"$c: --bbox '1,2,3' is not"), msg)
+    }
+    val rates = rejected("sample", "id" -> "doc_id", "strata" -> "lang", "rates" -> "en")
+    assert(rates.startsWith("sample: --rates 'en' is not"), rates)
+    val vars = rejected("extract", "vars" -> "a")
+    assert(vars.startsWith("extract: --vars 'a' is not"), vars)
   }
 
   test("cli ivf-index writes the cell-partitioned two-level layout (r16)") {
