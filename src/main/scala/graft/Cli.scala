@@ -52,6 +52,12 @@ object Cli {
       case Array(n, v) if n.nonEmpty && v.nonEmpty => (n, v)
     }
 
+    /** A presence flag: absent or `false` is off, `true` is on. */
+    def flag(k: String): Boolean = get(k) match {
+      case None | Some("false") => false
+      case Some("true") => true
+      case Some(v) => bad(k, v, "true or false")
+    }
     def str(k: String): String = required(k, get(k))
     def str(k: String, default: String): String = get(k).getOrElse(default)
     def intOpt(k: String): Option[Int] = parsed(k, "an integer")(_.toInt)
@@ -466,7 +472,7 @@ object Cli {
       // general CRS transform (to_crs parity — ancillary.py:146-147):
       // forward lon/lat -> per-row UTM zone + easting/northing, or
       // --inverse easting/northing/zone/south -> lon/lat
-      if (a.has("inverse")) {
+      if (a.flag("inverse")) {
         val (ilon, ilat) = GeoFunctions.utmInverse(
           col(a.str("easting", "easting_m")).cast("double"),
           col(a.str("northing", "northing_m")).cast("double"),
@@ -970,9 +976,9 @@ object Cli {
     },
     command("louvain") { a =>
       // FULL phase-1 fixpoint by default (gated synchronous sweeps to
-      // convergence); --one-sweep opts into the declared single
+      // convergence); --one-sweep true opts into the declared single
       // move-sweep face (node, new_label, gain_num)
-      if (a.has("one-sweep"))
+      if (a.flag("one-sweep"))
         a.write(GraphOps.louvainMove(a.in("input"),
           a.str("a", "a"), a.str("b", "b")))
       else

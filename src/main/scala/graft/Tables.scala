@@ -60,9 +60,19 @@ object Tables {
     if (name == "events") normalizeNanosTs(df, "ts") else df
   }
 
-  /** Session settings every graft entrypoint should apply. */
+  /** Session settings every graft entrypoint should apply.
+    *
+    * `fs.file.impl` makes every `file:` read and write go through
+    * [[graft.sources.NioLocalFileSystem]]: the same checksummed local
+    * filesystem, permission bits and commit protocol as Hadoop's, minus
+    * the `chmod` process the stock one forks per created file and
+    * directory when Hadoop's native library is absent. `FileSystem.get`
+    * caches one instance per scheme (not per conf), so this takes effect
+    * because every entrypoint builds its session before it touches
+    * `file:`. */
   val sessionConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.adaptive.enabled" -> "true")
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sources.NioLocalFileSystem].getName)
 }

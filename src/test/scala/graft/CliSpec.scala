@@ -1120,6 +1120,24 @@ class CliSpec extends SparkSpec {
     assert(vars.startsWith("extract: --vars 'a' is not"), vars)
   }
 
+  test("cli presence flags: false is off like no flag, any other value is named") {
+    import spark.implicits._
+    def ran(cmd: String, input: String, opts: (String, String)*): (Seq[String], Seq[String]) = {
+      val out = tmp() + "/out"
+      Cli.run(spark, cmd, Map("input" -> input, "output" -> out) ++ opts)
+      val df = spark.read.parquet(out)
+      (df.columns.toSeq, df.collect().map(_.toString).sorted.toSeq)
+    }
+    val pts = tmp() + "/pts"
+    Seq((1L, -73.5, 40.5), (2L, 7.85, 47.99)).toDF("id", "lon", "lat").write.parquet(pts)
+    assert(ran("utm", pts, "inverse" -> "false") === ran("utm", pts))
+    val edges = tmp() + "/edges"
+    Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("a", "b").write.parquet(edges)
+    assert(ran("louvain", edges, "one-sweep" -> "false") === ran("louvain", edges))
+    val err = intercept[IllegalArgumentException](ran("utm", pts, "inverse" -> "yes"))
+    assert(err.getMessage === "utm: --inverse 'yes' is not true or false")
+  }
+
   test("cli ivf-index writes the cell-partitioned two-level layout (r16)") {
     val out = tmp() + "/ivfidx"
     Cli.run(spark, "ivf-index", Map(
