@@ -69,6 +69,34 @@ object GraphOps {
       "WHERE rn = nc) bt3) bt4 WHERE rn = nc"
   }
 
+  /** The canonical undirected edge frame of the id-normalizing
+    * operators: (a, b) with a < b, deduped; self-loops and null
+    * endpoints drop. Ids are cast to long BEFORE least/greatest (ADVICE
+    * r9 parity sweep): the oracles canonicalize on BIGINTs, and string
+    * ids would otherwise compare lexicographically ("10" < "9") and
+    * mis-orient or drop edges; on a long id column the cast is a no-op. */
+  private def canonEdges(edges0: DataFrame, aCol: String,
+                         bCol: String): DataFrame =
+    edges0
+      .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
+        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
+      .filter(col("a") < col("b")).distinct()
+
+  /** Both orientations of an (a, b) edge frame as (x, y), each row
+    * carrying the `carry` columns. */
+  private def symmetric(e: DataFrame, x: String, y: String,
+                        carry: String*): DataFrame = {
+    def side(from: String, to: String) =
+      e.select(col(from).as(x) +: col(to).as(y) +: carry.map(col): _*)
+    side("a", "b").unionByName(side("b", "a"))
+  }
+
+  /** The materialized (v, w) adjacency of the canonical edge frame — the
+    * starting state of the k-core peel and the BFS expansion. */
+  private def adjacency(edges0: DataFrame, aCol: String,
+                        bCol: String): DataFrame =
+    symmetric(canonEdges(edges0, aCol, bCol), "v", "w").localCheckpoint()
+
   /** PageRank by power iteration over a directed edge list (source/domain
     * authority scoring — the quality prior CommonCrawl-style curation
     * feeds into mix weights). Fixed `iters` rounds of
@@ -99,7 +127,6 @@ object GraphOps {
   def pageRank(edges0: DataFrame, iters: Int = 3, damping: Double = 0.85,
                srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val W = org.apache.spark.sql.expressions.Window
     val e = edges0
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
@@ -130,23 +157,8 @@ object GraphOps {
     val n = lit(nL)
     var ranks = nodes
       .select(col("v"), (lit(1.0) / n.cast("double")).as("r"))
-    val ordd = W.partitionBy("dst").orderBy("src")
-    val cumd = ordd.rowsBetween(W.unboundedPreceding, W.currentRow)
     (1 to iters).foreach { _ =>
-      val dangTot = blockTotal(
-          ranks.join(dang, Seq("v")).select(col("v"), col("r")), "r")
-        .select(lit(1).as("j"), col("tot").as("dm"))
-      val dm = spark(ranks).range(1).select(lit(1).as("j"))
-        .join(dangTot, Seq("j"), "left")
-        .select(coalesce(col("dm"), lit(0.0)).as("dm"))
-      val contrib = e2.join(ranks, e2("src") === ranks("v"))
-        .select(col("dst"), col("src"),
-          (col("r") / col("deg").cast("double")).as("ct"))
-        .withColumn("cum", sum(col("ct")).over(cumd))
-        .withColumn("rn", row_number().over(ordd))
-        .withColumn("nc", count(lit(1)).over(W.partitionBy("dst")))
-        .filter(col("rn") === col("nc"))
-        .select(col("dst"), col("cum").as("c"))
+      val (dm, contrib) = rankInflow(ranks, dang, e2)
       ranks = org.apache.spark.sql.graftbridge.PlanBridge.freshLocalCheckpoint(
         nodes.crossJoin(broadcast(dm))
           .join(contrib, nodes("v") === contrib("dst"), "left")
@@ -158,7 +170,32 @@ object GraphOps {
     ranks.select(col("v").as("node"), round(col("r"), 6).as("pagerank"))
   }
 
-  private def spark(df: DataFrame) = df.sparkSession
+  /** One power-iteration round's inflow, shared by [[pageRank]] and
+    * [[personalizedPageRank]]: the dangling mass `dm` (a 1-row frame,
+    * 0.0 when no dangling node holds rank) and the per-dst contribution
+    * sums `(dst, c)`, folded in src order. `ranks` is (v, r), `dang` the
+    * dangling-node set (v), `e2` the (src, dst, deg) edge frame. */
+  private def rankInflow(ranks: DataFrame, dang: DataFrame,
+                         e2: DataFrame): (DataFrame, DataFrame) = {
+    val W = org.apache.spark.sql.expressions.Window
+    val ordd = W.partitionBy("dst").orderBy("src")
+    val cumd = ordd.rowsBetween(W.unboundedPreceding, W.currentRow)
+    val dangTot = blockTotal(
+        ranks.join(dang, Seq("v")).select(col("v"), col("r")), "r")
+      .select(lit(1).as("j"), col("tot").as("dm"))
+    val dm = ranks.sparkSession.range(1).select(lit(1).as("j"))
+      .join(dangTot, Seq("j"), "left")
+      .select(coalesce(col("dm"), lit(0.0)).as("dm"))
+    val contrib = e2.join(ranks, e2("src") === ranks("v"))
+      .select(col("dst"), col("src"),
+        (col("r") / col("deg").cast("double")).as("ct"))
+      .withColumn("cum", sum(col("ct")).over(cumd))
+      .withColumn("rn", row_number().over(ordd))
+      .withColumn("nc", count(lit(1)).over(W.partitionBy("dst")))
+      .filter(col("rn") === col("nc"))
+      .select(col("dst"), col("cum").as("c"))
+    (dm, contrib)
+  }
 
   /** DuckDB oracle for [[pageRank]]: identical unrolled iteration CTEs —
     * same dedup, same ordered window folds, same float expression tree.
@@ -214,15 +251,7 @@ object GraphOps {
                 aCol: String = "a", bCol: String = "b"): DataFrame = {
     require(iters >= 1 && iters <= 8, "iters must be in [1, 8] (unrolled rounds)")
     val W = org.apache.spark.sql.expressions.Window
-    // cast BEFORE least/greatest: the oracle canonicalizes on BIGINTs, and
-    // string ids would otherwise compare lexicographically ("10" < "9")
-    // and mis-orient or drop edges
-    val und = edges0
-      .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-    val sym = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
+    val sym = symmetric(canonEdges(edges0, aCol, bCol), "src", "dst")
       .localCheckpoint()
     var labels = sym.select(col("src").as("v")).distinct()
       .select(col("v"), col("v").as("lbl")).localCheckpoint()
@@ -311,9 +340,6 @@ object GraphOps {
     // narrow scan, not a join). Same float tree — bit-identical.
     val PB = org.apache.spark.sql.graftbridge.PlanBridge
     val sizeHint = PB.measuredCheckpointSize(nodes).map(_ * 2L)
-    def sharedSized(df: DataFrame): DataFrame = sizeHint
-      .map(PB.sharedLocalCheckpointSized(df, _))
-      .getOrElse(PB.sharedLocalCheckpoint(df))
     // per-node ordered sum of the other endpoint's score, L1-normalized;
     // returns the plan + the shared intermediate to release post-action
     def halfRound(scores: DataFrame, joinKey: String,
@@ -330,9 +356,10 @@ object GraphOps {
       // full feeds the L1 normalizer AND the payload — shared-checkpoint
       // it (r18) so the e⋈scores join + window subtree runs once per
       // half-round, not twice
-      val full = sharedSized(
+      val full = PB.sharedLocalCheckpoint(
         nodes.join(raw, nodes("v") === col("gv"), "left")
-          .select(col("v"), coalesce(col("raw"), lit(0.0)).as("raw")))
+          .select(col("v"), coalesce(col("raw"), lit(0.0)).as("raw")),
+        sizeHint)
       (full.crossJoin(broadcast(l1Total(full, "raw")))
         .select(col("v"), (col("raw") / col("tot")).as("s")), full)
     }
@@ -342,7 +369,7 @@ object GraphOps {
     var prevHub: DataFrame = null
     (1 to iters).foreach { _ =>
       val (authPlan, fullA) = halfRound(hub, "src", "dst") // Σ hub(in-nbrs)
-      val authS = sharedSized(authPlan)
+      val authS = PB.sharedLocalCheckpoint(authPlan, sizeHint)
       val (hubPlan, fullH) = halfRound(authS, "dst", "src") // Σ auth(out)
       val hubCk = PB.freshLocalCheckpoint(hubPlan)
       PB.unpersistLocalCheckpoint(fullA)
@@ -501,26 +528,20 @@ object GraphOps {
     * surviving vertices with their residual degree. */
   def kCore(edges0: DataFrame, k: Int, rounds: Int = 4,
             aCol: String = "a", bCol: String = "b"): DataFrame = {
-    // cast BEFORE least/greatest (ADVICE r9 parity sweep): string ids
-    // would canonicalize lexicographically ("10" < "9") and diverge from
-    // the BIGINT oracle; a long id column makes the cast a no-op.
-    val e = edges0
-      .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-    var adj = e.select(col("a").as("v"), col("b").as("w"))
-      .unionByName(e.select(col("b").as("v"), col("a").as("w")))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val alive = adj.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("v"))
-      adj = adj
-        .join(alive, Seq("v"), "left_semi")
-        .join(alive.withColumnRenamed("v", "w"), Seq("w"), "left_semi")
-        .select(col("v"), col("w"))
-        .localCheckpoint()
-    }
+    var adj = adjacency(edges0, aCol, bCol)
+    for (_ <- 1 to rounds) adj = peel(adj, k).localCheckpoint()
     adj.groupBy(col("v").as("node")).agg(count(lit(1)).as("deg"))
+  }
+
+  /** One synchronous k-core peel of a (v, w) adjacency: drop every edge
+    * with an endpoint of degree < k. */
+  private def peel(adj: DataFrame, k: Int): DataFrame = {
+    val alive = adj.groupBy(col("v")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k).select(col("v"))
+    adj
+      .join(alive, Seq("v"), "left_semi")
+      .join(alive.withColumnRenamed("v", "w"), Seq("w"), "left_semi")
+      .select(col("v"), col("w"))
   }
 
   /** [[kCore]] peeled to EXACT fixpoint — the production entry point:
@@ -535,23 +556,8 @@ object GraphOps {
     * twin for the unrolled-SQL oracle face. */
   def kCoreFixpoint(edges0: DataFrame, k: Int, maxRounds: Int = 64,
                     aCol: String = "a", bCol: String = "b"): DataFrame = {
-    // identical cast("long") normalization as the fixed-round twin above
-    val e = edges0
-      .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-    val adj0 = e.select(col("a").as("v"), col("b").as("w"))
-      .unionByName(e.select(col("b").as("v"), col("a").as("w")))
-      .localCheckpoint()
-    val adj = Dedup.iterateToEdgeFixpoint(adj0, maxRounds, "kCoreFixpoint") {
-      cur =>
-        val alive = cur.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("v"))
-        cur
-          .join(alive, Seq("v"), "left_semi")
-          .join(alive.withColumnRenamed("v", "w"), Seq("w"), "left_semi")
-          .select(col("v"), col("w"))
-    }
+    val adj = Dedup.iterateToEdgeFixpoint(adjacency(edges0, aCol, bCol),
+      maxRounds, "kCoreFixpoint")(peel(_, k))
     adj.groupBy(col("v").as("node")).agg(count(lit(1)).as("deg"))
   }
 
@@ -604,8 +610,7 @@ object GraphOps {
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") < col("b")).distinct()
       .localCheckpoint()
-    val adj = e.select(col("a").as("m"), col("b").as("x"))
-      .unionByName(e.select(col("b").as("m"), col("a").as("x")))
+    val adj = symmetric(e, "m", "x")
     val deg = adj.groupBy(col("m")).agg(count(lit(1)).as("deg"))
     val wedges = adj.as("l").join(adj.as("r"),
         col("l.m") === col("r.m") && col("l.x") < col("r.x"))
@@ -682,30 +687,33 @@ object GraphOps {
     * Visited state is vertex-count-bounded. */
   def bfsHops(edges0: DataFrame, seeds: DataFrame, rounds: Int = 4,
               aCol: String = "a", bCol: String = "b"): DataFrame = {
-    // same cast("long") id normalization as kCore/labelProp (ADVICE r9):
-    // edges AND seeds, so the frontier join key types always agree
-    val e = edges0
-      .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-    val adj = e.select(col("a").as("v"), col("b").as("w"))
-      .unionByName(e.select(col("b").as("v"), col("a").as("w")))
-      .localCheckpoint()
-    var dist = seeds.select(col("node").cast("long").as("node"), lit(0L).as("hops"))
-      .distinct().localCheckpoint()
+    val adj = adjacency(edges0, aCol, bCol)
+    var dist = bfsSeeds(seeds)
     var frontier = dist.select(col("node"))
     for (r <- 1 to rounds) {
       val next = org.apache.spark.sql.graftbridge.PlanBridge.freshLocalCheckpoint(
-        adj
-          .join(frontier.withColumnRenamed("node", "v"), Seq("v"))
-          .select(col("w").as("node")).distinct()
-          .join(dist, Seq("node"), "left_anti"))
+        expand(adj, frontier, dist))
       dist = dist.unionByName(next.withColumn("hops", lit(r.toLong)))
         .localCheckpoint()
       frontier = next
     }
     dist
   }
+
+  /** The hop-0 BFS labels (node, hops): the seeds, cast to long like the
+    * edge ids so the frontier join key types always agree. */
+  private def bfsSeeds(seeds: DataFrame): DataFrame =
+    seeds.select(col("node").cast("long").as("node"), lit(0L).as("hops"))
+      .distinct().localCheckpoint()
+
+  /** One BFS frontier expansion: the neighbours of `frontier` (node)
+    * over the (v, w) adjacency that hold no label in `dist` yet. */
+  private def expand(adj: DataFrame, frontier: DataFrame,
+                     dist: DataFrame): DataFrame =
+    adj
+      .join(frontier.withColumnRenamed("node", "v"), Seq("v"))
+      .select(col("w").as("node")).distinct()
+      .join(dist, Seq("node"), "left_anti")
 
   /** [[bfsHops]] run to EXHAUSTION — the production entry point: the
     * frontier expands until it empties (every node reachable from the
@@ -718,26 +726,15 @@ object GraphOps {
   def bfsHopsFixpoint(edges0: DataFrame, seeds: DataFrame,
                       maxRounds: Int = 4096,
                       aCol: String = "a", bCol: String = "b"): DataFrame = {
-    // identical cast("long") normalization as the fixed-round twin above
-    val e = edges0
-      .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b")).distinct()
-    val adj = e.select(col("a").as("v"), col("b").as("w"))
-      .unionByName(e.select(col("b").as("v"), col("a").as("w")))
-      .localCheckpoint()
-    var dist = seeds.select(col("node").cast("long").as("node"), lit(0L).as("hops"))
-      .distinct().localCheckpoint()
+    val adj = adjacency(edges0, aCol, bCol)
+    var dist = bfsSeeds(seeds)
     var frontier = dist.select(col("node"))
     var r = 0
     var frontierSize = frontier.count()
     while (frontierSize > 0 && r < maxRounds) {
       r += 1
       val next = org.apache.spark.sql.graftbridge.PlanBridge.freshLocalCheckpoint(
-        adj
-          .join(frontier.withColumnRenamed("node", "v"), Seq("v"))
-          .select(col("w").as("node")).distinct()
-          .join(dist, Seq("node"), "left_anti"))
+        expand(adj, frontier, dist))
       frontierSize = next.count()
       if (frontierSize > 0)
         dist = dist.unionByName(next.withColumn("hops", lit(r.toLong)))
@@ -792,10 +789,7 @@ object GraphOps {
     * Output: one row (n_edges, intra_edges, modularity). */
   def modularity(edges0: DataFrame, labels: DataFrame,
                  aCol: String = "a", bCol: String = "b"): DataFrame = {
-    val e = edges0
-      .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b")).distinct()
+    val e = canonEdges(edges0, aCol, bCol)
       .localCheckpoint() // reused by m, intra and the degree count
     val l = labels.select(col("node"), col("label"))
     val m = e.agg(count(lit(1)).as("n_edges"))
@@ -858,7 +852,6 @@ object GraphOps {
                            iters: Int = 3, damping: Double = 0.85,
                            srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val W = org.apache.spark.sql.expressions.Window
     val e = edges0
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
@@ -886,23 +879,8 @@ object GraphOps {
       .join(deg, nodes("v") === deg("src"), "left_anti")
       .localCheckpoint()
     var ranks = nodes.select(col("v"), col("p").as("r")).localCheckpoint()
-    val ordd = W.partitionBy("dst").orderBy("src")
-    val cumd = ordd.rowsBetween(W.unboundedPreceding, W.currentRow)
     (1 to iters).foreach { _ =>
-      val dangTot = blockTotal(
-          ranks.join(dang, Seq("v")).select(col("v"), col("r")), "r")
-        .select(lit(1).as("j"), col("tot").as("dm"))
-      val dm = nodes.sparkSession.range(1).select(lit(1).as("j"))
-        .join(dangTot, Seq("j"), "left")
-        .select(coalesce(col("dm"), lit(0.0)).as("dm"))
-      val contrib = e2.join(ranks, e2("src") === ranks("v"))
-        .select(col("dst"), col("src"),
-          (col("r") / col("deg").cast("double")).as("ct"))
-        .withColumn("cum", sum(col("ct")).over(cumd))
-        .withColumn("rn", row_number().over(ordd))
-        .withColumn("nc", count(lit(1)).over(W.partitionBy("dst")))
-        .filter(col("rn") === col("nc"))
-        .select(col("dst"), col("cum").as("c"))
+      val (dm, contrib) = rankInflow(ranks, dang, e2)
       ranks = nodes.crossJoin(broadcast(dm))
         .join(contrib, nodes("v") === contrib("dst"), "left")
         .select(col("v"),
@@ -975,8 +953,7 @@ object GraphOps {
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") < col("b")).distinct()
       .localCheckpoint() // read by adjacency, wedge close, and degree
-    val adj = e.select(col("a").as("m"), col("b").as("x"))
-      .unionByName(e.select(col("b").as("m"), col("a").as("x")))
+    val adj = symmetric(e, "m", "x")
     val deg = adj.groupBy(col("m").as("node")).agg(count(lit(1)).as("deg"))
     val wedges = adj.as("l").join(adj.as("r"),
         col("l.m") === col("r.m") && col("l.x") < col("r.x"))
@@ -1035,13 +1012,9 @@ object GraphOps {
   def louvainMove(edges0: DataFrame,
                   aCol: String = "a", bCol: String = "b"): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val e = edges0
-      .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b")).distinct()
+    val e = canonEdges(edges0, aCol, bCol)
       .localCheckpoint() // reused: m, degrees, both sym orientations
-    val sym = e.select(col("a").as("v"), col("b").as("w"))
-      .unionByName(e.select(col("b").as("v"), col("a").as("w")))
+    val sym = symmetric(e, "v", "w")
     val deg = sym.groupBy("v").agg(count(lit(1)).as("k"))
     val m = e.agg(count(lit(1)).as("m"))
     // neighbor-community weights; singleton init -> community id == w,
@@ -1125,30 +1098,48 @@ object GraphOps {
     * Output: (node, community), every node of the edge frame. */
   def louvain(edges0: DataFrame, aCol: String = "a", bCol: String = "b",
               maxSweeps: Int = 16): DataFrame = {
-    // edge count rides the edge checkpoint as an observation (r19) — no
-    // separate count job; the checkpoint is reused by degrees, kvc and
-    // every sweep
-    val obs = org.apache.spark.sql.Observation()
-    val e = louvainCanonEdges(edges0, aCol, bCol)
-      .observe(obs, count(lit(1)).as("m"))
-      .localCheckpoint()
-    louvainCore(e, org.apache.spark.sql.graftbridge.PlanBridge
-      .awaitObserved(obs)("m").asInstanceOf[Long], maxSweeps)
+    val (e, m) = louvainEdges(edges0, aCol, bCol)
+    val (labels, _) = louvainCore(e, m, maxSweeps)
+    // the labels read only the final fused checkpoint
+    org.apache.spark.sql.graftbridge.PlanBridge.unpersistLocalCheckpoint(e)
+    labels
   }
 
-  /** The canonical undirected edge frame every Louvain face starts from:
-    * (a, b) with a < b, deduped. Factored out so [[louvainTwoLevel]] can
-    * materialize it ONCE and share it between level 1 and the
-    * contraction. */
-  private def louvainCanonEdges(edges0: DataFrame, aCol: String,
-                                bCol: String): DataFrame =
-    edges0
-      .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b")).distinct()
+  /** The canonical edge frame of [[louvain]], materialized once — it is
+    * reused by the degrees, kvc and every sweep — with its edge count m.
+    * The count rides the checkpoint as an observation (r19): no separate
+    * count job. */
+  private def louvainEdges(edges0: DataFrame, aCol: String,
+                           bCol: String): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val e = canonEdges(edges0, aCol, bCol)
+      .observe(obs, count(lit(1)).as("m"))
+      .localCheckpoint()
+    (e, org.apache.spark.sql.graftbridge.PlanBridge
+      .awaitObserved(obs)("m").asInstanceOf[Long])
+  }
 
   /** [[louvain]] over an ALREADY-canonical, already-materialized edge
-    * frame.
+    * frame with m edges: unit weights, no loops. The degree aggregate
+    * IS the init labeling (deg's node set == sym's). Returns the labels
+    * and the final fused checkpoint they read. */
+  private def louvainCore(e: DataFrame, m: Long,
+                          maxSweeps: Int): (DataFrame, DataFrame) = {
+    val sym = symmetric(e, "v", "u")
+    louvainSweeps(e, sym, count(lit(1)), m,
+      sym.groupBy("v").agg(count(lit(1)).as("k"))
+        .select(col("v").as("node"), col("v").as("comm"), col("k")),
+      maxSweeps)
+  }
+
+  /** The gated synchronous sweep loop of [[louvain]] and
+    * [[louvainWeighted]]. `sym` is the symmetrized edge frame (v, u, …),
+    * `kvcAgg` the edge weight aggregate (`count(lit(1))` or
+    * `sum(col("w"))`), `total` the total edge weight of the gain and the
+    * gate (m or W), `init` the singleton labeling (node, comm, k), and
+    * `edges` the materialized edge frame the first size hint is measured
+    * on. Returns the converged (node, comm) labels and the fused
+    * checkpoint they read.
     *
     * r17 sweep-cost profile (sf1): wall was dominated by per-sweep JOB
     * count and repeated labels⋈deg joins, not data volume — labels CARRY
@@ -1175,13 +1166,13 @@ object GraphOps {
     *    rows twice.
     * Same integer gain/gate arithmetic on the same rows throughout —
     * oracle-identical by construction. */
-  private def louvainCore(e: DataFrame, m: Long, maxSweeps: Int): DataFrame = {
+  private def louvainSweeps(edges: DataFrame, sym: DataFrame,
+                            kvcAgg: Column, total: Long, init: DataFrame,
+                            maxSweeps: Int): (DataFrame, DataFrame) = {
     val W = org.apache.spark.sql.expressions.Window
     val PB = org.apache.spark.sql.graftbridge.PlanBridge
-    val sym = e.select(col("a").as("v"), col("b").as("w"))
-      .unionByName(e.select(col("b").as("v"), col("a").as("w")))
     val numShufflePartitions =
-      e.sparkSession.sessionState.conf.numShufflePartitions
+      edges.sparkSession.sessionState.conf.numShufflePartitions
     // Size hint for the round frames inside fuse: the lazy checkpoints'
     // inherited estimates are the sweep plan's multiplied join estimates
     // (big → SMJ planning, measured +30% wall); the TRUE sizes are
@@ -1190,7 +1181,7 @@ object GraphOps {
     // size ×3 — labels ≤ nodes ≤ 2|e| and kvc ≤ |sym| rows, both of
     // three longs vs e's two). Scale-honest both ways: a 100 TB edge
     // frame yields a large hint and the joins stay shuffles.
-    var sizeHint = PB.measuredCheckpointSize(e).map(_ * 3L)
+    var sizeHint = PB.measuredCheckpointSize(edges).map(_ * 3L)
     // (labels, ENRICHED kvc, gate score, owning checkpoint) of one
     // labeling. The kvc rows come back fully enriched — (v, c, k_vc,
     // d = comm(v), k = k_v, vol_d, vol_c) — so the SWEEP needs no joins
@@ -1202,20 +1193,17 @@ object GraphOps {
     // Σ_c vol_c² = Σ_v k_v·vol_comm(v) over the vol-carrying labels —
     // exact integer identities, no community-keyed join or groupBy left.
     def fuse(labelsPlan: DataFrame): (DataFrame, DataFrame, Long, DataFrame) = {
-      def shared(df: DataFrame) = sizeHint
-        .map(PB.sharedLocalCheckpointSized(df, _))
-        .getOrElse(PB.sharedLocalCheckpoint(df))
-      val lab = shared(labelsPlan)
+      val lab = PB.sharedLocalCheckpoint(labelsPlan, sizeHint)
       // labels + their community volume (window shares the one exchange
       // on comm; every member row carries the same vol)
-      val lab2 = shared(lab.withColumn("vol",
-        sum(col("k")).over(W.partitionBy("comm"))))
+      val lab2 = PB.sharedLocalCheckpoint(lab.withColumn("vol",
+        sum(col("k")).over(W.partitionBy("comm"))), sizeHint)
       // per-community volume frame: lab2 is comm-partitioned, so this
       // aggregate adds no exchange
       val volF = lab2.groupBy("comm").agg(max(col("vol")).as("volc"))
       val kv = sym
-        .join(lab.select(col("node").as("w"), col("comm").as("c")), Seq("w"))
-        .groupBy("v", "c").agg(count(lit(1)).as("k_vc"))
+        .join(lab.select(col("node").as("u"), col("comm").as("c")), Seq("u"))
+        .groupBy("v", "c").agg(kvcAgg.as("k_vc"))
       val kvj = kv
         .join(lab2.select(col("node").as("v"), col("comm").as("d"),
           col("k"), col("vol").as("vol_d")), Seq("v"))
@@ -1252,7 +1240,7 @@ object GraphOps {
       val mm = PB.awaitObserved(obs)
       sizeHint = PB.measuredCheckpointSize(fused).orElse(sizeHint)
       (labelsF, kvcF,
-        2L * m * mm("own").asInstanceOf[Long] - mm("vv").asInstanceOf[Long],
+        2L * total * mm("own").asInstanceOf[Long] - mm("vv").asInstanceOf[Long],
         fused)
     }
     def sweep(labels: DataFrame, kvc: DataFrame): DataFrame = {
@@ -1262,7 +1250,7 @@ object GraphOps {
             .over(W.partitionBy("v")), lit(0L)))
       val gains = g.filter(col("c") =!= col("d"))
         .withColumn("gain",
-          lit(2L) * m * (col("k_vc") - col("k_vd")) -
+          lit(2L) * total * (col("k_vc") - col("k_vd")) -
             col("k") * col("volTerm"))
       val best = gains
         .withColumn("rk", row_number().over(
@@ -1290,10 +1278,8 @@ object GraphOps {
         .select(col("node"), coalesce(col("c"), col("comm")).as("comm"),
           col("k"))
     }
-    // labels carry (node, comm, k): the degree aggregate IS the init
-    // labeling (deg's node set == sym's), materialized once inside fuse
-    var st = fuse(sym.groupBy("v").agg(count(lit(1)).as("k"))
-      .select(col("v").as("node"), col("v").as("comm"), col("k")))
+    // the init labeling is materialized once, inside fuse
+    var st = fuse(init)
     var continue = true
     var sweeps = 0
     while (continue && sweeps < maxSweeps) {
@@ -1308,7 +1294,7 @@ object GraphOps {
     }
     // the final fused checkpoint stays live — it IS the returned labels
     // (its kvc rows ride along; edge-frame-bounded, freed with the frame)
-    st._1.select(col("node"), col("comm"))
+    (st._1.select(col("node"), col("comm")), st._4)
   }
 
   /** Contract a community assignment onto the quotient graph — Louvain's
@@ -1318,7 +1304,7 @@ object GraphOps {
     * the node-level modularity of the assignment). */
   def louvainContract(edges0: DataFrame, labels: DataFrame,
                       aCol: String = "a", bCol: String = "b"): DataFrame =
-    louvainContractCore(louvainCanonEdges(edges0, aCol, bCol), labels)
+    louvainContractCore(canonEdges(edges0, aCol, bCol), labels)
 
   /** [[louvainContract]] over an ALREADY-canonical edge frame — shares
     * [[louvainTwoLevel]]'s one edge materialization. */
@@ -1342,135 +1328,38 @@ object GraphOps {
   def louvainWeighted(edges0: DataFrame, aCol: String = "ca",
                       bCol: String = "cb", wCol: String = "weight",
                       maxSweeps: Int = 16): DataFrame = {
+    val PB = org.apache.spark.sql.graftbridge.PlanBridge
     val e0Obs = org.apache.spark.sql.Observation()
     val e0 = edges0
       .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"),
         col(wCol).cast("long").as("w"))
       .groupBy("a", "b").agg(sum(col("w")).as("w"))
-      .observe(e0Obs,
-        coalesce(sum(col("w")), lit(0L)).as("bw"),
-        coalesce(sum(when(col("a") === col("b"), col("w"))), lit(0L)).as("lw"))
+      .observe(e0Obs, coalesce(sum(col("w")), lit(0L)).as("bw"))
       .localCheckpoint() // reused: W, degrees, intra scores, every sweep
     val plain = e0.filter(col("a") =!= col("b"))
     val loops = e0.filter(col("a") === col("b"))
       .select(col("a").as("v"), col("w").as("lw"))
-    val sym = plain.select(col("a").as("v"), col("b").as("u"), col("w"))
-      .unionByName(plain.select(col("b").as("v"), col("a").as("u"), col("w")))
-    // BOTH scalar constants ride e0's checkpoint as observed metrics
-    // (r19; was two first() jobs): total weight and loop weight are
-    // integer sums over the same frame — identical Longs, order-free.
-    val twm = org.apache.spark.sql.graftbridge.PlanBridge.awaitObserved(e0Obs)
-    val bigW = twm("bw").asInstanceOf[Long]
-    val loopW = twm("lw").asInstanceOf[Long]
-    // r19: the same fused one-action-per-labeling shape as [[louvainCore]]
-    // (tagged union of score row + labels + kvc; k_vd via the shared
-    // (v)-partition window; deg folded into the init labeling) with
-    // weighted sums in place of counts. Gate reads the kvc frame:
-    // own = 2·intraPlain exactly (each plain intra-community edge counted
-    // from both endpoints; loops are not in sym and ride the loopW
-    // constant — intra under ANY labeling, they move with their node).
-    val W = org.apache.spark.sql.expressions.Window
-    val PB = org.apache.spark.sql.graftbridge.PlanBridge
-    val numShufflePartitions =
-      e0.sparkSession.sessionState.conf.numShufflePartitions
-    // same round-invariant size-hint scheme as [[louvainCore]]
-    var sizeHint = PB.measuredCheckpointSize(e0).map(_ * 3L)
-    // same enriched-kvc fuse shape as [[louvainCore]], weighted sums in
-    // place of counts (see the derivation comment there)
-    def fuse(labelsPlan: DataFrame): (DataFrame, DataFrame, Long, DataFrame) = {
-      def shared(df: DataFrame) = sizeHint
-        .map(PB.sharedLocalCheckpointSized(df, _))
-        .getOrElse(PB.sharedLocalCheckpoint(df))
-      val lab = shared(labelsPlan)
-      val lab2 = shared(lab.withColumn("vol",
-        sum(col("k")).over(W.partitionBy("comm"))))
-      val volF = lab2.groupBy("comm").agg(max(col("vol")).as("volc"))
-      val kv = sym
-        .join(lab.select(col("node").as("u"), col("comm").as("c")), Seq("u"))
-        .groupBy("v", "c").agg(sum(col("w")).as("k_vc"))
-      val kvj = kv
-        .join(lab2.select(col("node").as("v"), col("comm").as("d"),
-          col("k"), col("vol").as("vol_d")), Seq("v"))
-        .join(volF.select(col("comm").as("c"), col("volc").as("vol_c")),
-          Seq("c"))
-      val obs = org.apache.spark.sql.Observation()
-      val fused = PB.freshLocalCheckpoint(
-        lab2.select(lit(0).as("tag"), col("node").as("x"),
-            col("comm").as("y"), col("k").as("z4"), col("vol").as("z5"),
-            lit(0L).as("z6"), lit(0L).as("z7"))
-          .unionByName(kvj.select(lit(1).as("tag"), col("v").as("x"),
-            col("c").as("y"), col("k_vc").as("z4"), col("d").as("z5"),
-            col("k").as("z6"),
-            (col("vol_c") - (col("vol_d") - col("k"))).as("z7")))
-          .observe(obs,
-            coalesce(sum(when(col("tag") === 1 && col("y") === col("z5"),
-              col("z4"))), lit(0L)).as("own"),
-            coalesce(sum(when(col("tag") === 0, col("z4") * col("z5"))),
-              lit(0L)).as("vv"))
-          .coalesce(numShufflePartitions))
-      PB.unpersistLocalCheckpoint(lab)
-      PB.unpersistLocalCheckpoint(lab2)
-      val labelsF = fused.filter(col("tag") === 0)
-        .select(col("x").as("node"), col("y").as("comm"), col("z4").as("k"))
-      val kvcF = fused.filter(col("tag") === 1)
-        .select(col("x").as("v"), col("y").as("c"), col("z4").as("k_vc"),
-          col("z5").as("d"), col("z6").as("k"), col("z7").as("volTerm"))
-      val mm = PB.awaitObserved(obs)
-      sizeHint = PB.measuredCheckpointSize(fused).orElse(sizeHint)
-      (labelsF, kvcF,
-        2L * bigW * mm("own").asInstanceOf[Long] + 4L * bigW * loopW -
-          mm("vv").asInstanceOf[Long],
-        fused)
-    }
-    def sweep(labels: DataFrame, kvc: DataFrame): DataFrame = {
-      val g = kvc
-        .withColumn("k_vd",
-          coalesce(max(when(col("c") === col("d"), col("k_vc")))
-            .over(W.partitionBy("v")), lit(0L)))
-      val gains = g.filter(col("c") =!= col("d"))
-        .withColumn("gain",
-          lit(2L) * bigW * (col("k_vc") - col("k_vd")) -
-            col("k") * col("volTerm"))
-      val best = gains
-        .withColumn("rk", row_number().over(
-          W.partitionBy("v").orderBy(col("gain").desc, col("c"))))
-        .filter(col("rk") === 1)
-        .select(col("v"), col("d"), col("c"), col("gain"))
-      val moves = best.filter(col("gain") > 0L).select("v", "d", "c")
-      val movePairs = moves.select(col("d").as("yd"), col("c").as("yc"))
-        .distinct()
-      val applied = moves.as("x")
-        .join(movePairs,
-          col("x.c") === col("yd") && col("x.d") === col("yc") &&
-            col("x.d") > col("yd"), "left_anti")
-        .select(col("v"), col("c"))
-      labels.select(col("node"), col("comm"), col("k"))
-        .join(applied.withColumnRenamed("v", "node"), Seq("node"), "left")
-        .select(col("node"), coalesce(col("c"), col("comm")).as("comm"),
-          col("k"))
-    }
-    // weighted degree: incident non-loop weight + 2×loop weight (nodes
-    // carrying ONLY a loop still need a row — full outer); this IS the
-    // init labeling, materialized once inside fuse
-    var st = fuse(sym.groupBy("v").agg(sum(col("w")).as("kp"))
-      .join(loops, Seq("v"), "full_outer")
-      .select(col("v").as("node"), col("v").as("comm"),
-        (coalesce(col("kp"), lit(0L)) + lit(2L) * coalesce(col("lw"), lit(0L)))
-          .as("k")))
-    var continue = true
-    var sweeps = 0
-    while (continue && sweeps < maxSweeps) {
-      val st2 = fuse(sweep(st._1, st._2))
-      if (st2._3 > st._3) {
-        PB.unpersistLocalCheckpoint(st._4)
-        st = st2; sweeps += 1
-      } else {
-        PB.unpersistLocalCheckpoint(st2._4)
-        continue = false
-      }
-    }
-    st._1.select(col("node"), col("comm"))
+    val sym = symmetric(plain, "v", "u", "w")
+    // the total weight rides e0's checkpoint as an observed metric (r19;
+    // was a first() job)
+    val bigW = PB.awaitObserved(e0Obs)("bw").asInstanceOf[Long]
+    // Gate reads the kvc frame: own = 2·intraPlain exactly (each plain
+    // intra-community edge counted from both endpoints). Loops are not in
+    // sym: a loop is intra under ANY labeling (it moves with its node),
+    // so its 4·W·loopW score term is the same on both sides of the gate's
+    // comparison and is left out. Init labeling = weighted degree:
+    // incident non-loop weight + 2×loop weight (nodes carrying ONLY a
+    // loop still need a row — full outer).
+    val (labels, _) = louvainSweeps(e0, sym, sum(col("w")), bigW,
+      sym.groupBy("v").agg(sum(col("w")).as("kp"))
+        .join(loops, Seq("v"), "full_outer")
+        .select(col("v").as("node"), col("v").as("comm"),
+          (coalesce(col("kp"), lit(0L)) + lit(2L) * coalesce(col("lw"), lit(0L)))
+            .as("k")),
+      maxSweeps)
+    PB.unpersistLocalCheckpoint(e0)
+    labels
   }
 
   /** TWO-LEVEL Louvain: phase 1 on the node graph, contract communities
@@ -1487,20 +1376,20 @@ object GraphOps {
     * the weighted sweep's label space). */
   def louvainTwoLevel(edges0: DataFrame, aCol: String = "a",
                       bCol: String = "b", maxSweeps: Int = 16): DataFrame = {
+    val PB = org.apache.spark.sql.graftbridge.PlanBridge
     // r19: canonicalize + materialize the edge frame ONCE and share it
     // between level 1 and the contraction — the r18 shape evaluated the
     // caller's edge DERIVATION twice (louvain's internal checkpoint and
     // louvainContract's re-canonicalization); for q_louvain2 that
     // derivation is the whole near-dup LSH + cosine-verify chain.
-    val obs = org.apache.spark.sql.Observation()
-    val e = louvainCanonEdges(edges0, aCol, bCol)
-      .observe(obs, count(lit(1)).as("m"))
-      .localCheckpoint()
-    val l1 = louvainCore(e, org.apache.spark.sql.graftbridge.PlanBridge
-      .awaitObserved(obs)("m").asInstanceOf[Long], maxSweeps)
-      .localCheckpoint()
-    val q = louvainContractCore(e, l1)
-    val l2 = louvainWeighted(q, "ca", "cb", "weight", maxSweeps)
+    val (e, m) = louvainEdges(edges0, aCol, bCol)
+    val (labels1, fused1) = louvainCore(e, m, maxSweeps)
+    val l1 = labels1.localCheckpoint()
+    PB.unpersistLocalCheckpoint(fused1)
+    // louvainWeighted materializes the quotient before it returns
+    val l2 = louvainWeighted(louvainContractCore(e, l1), "ca", "cb",
+      "weight", maxSweeps)
+    PB.unpersistLocalCheckpoint(e)
     l1.join(l2.select(col("node").as("comm"), col("comm").as("comm2")),
         Seq("comm"))
       .select(col("node"), col("comm2").as("comm"))
@@ -1529,48 +1418,61 @@ object GraphOps {
       "deg AS MATERIALIZED (SELECT v, CAST(count(*) AS BIGINT) AS k FROM sym GROUP BY v), " +
       "m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e), " +
       "lab0 AS MATERIALIZED (SELECT DISTINCT v AS node, v AS comm FROM sym)"
-    def scoreSql(lab: String): String =
-      s"SELECT 4 * m.m * (SELECT count(*) FROM e " +
+    louvainRoundsSql(sb, "", rounds, "w", "count(*)", lab =>
+      s"(SELECT count(*) FROM e " +
         s"JOIN $lab x ON e.a = x.node JOIN $lab y ON e.b = y.node " +
-        "WHERE x.comm = y.comm) - " +
+        "WHERE x.comm = y.comm)")
+    sb.toString
+  }
+
+  /** Appends `rounds` gated sweep rounds of the Louvain oracle to `sb`,
+    * starting from the label CTE `<p>lab0`. Every CTE name carries the
+    * prefix `p`, the inputs too: `<p>sym` (v, `nbr`[, w]), `<p>deg`
+    * (v, k) and `<p>m` (m, the total weight of the gain). `kvcAgg` sums
+    * the `sym` rows `s` into k_vc, and `intra(lab)` is the score's
+    * intra-community weight term of a label CTE. */
+  private def louvainRoundsSql(sb: StringBuilder, p: String, rounds: Int,
+                               nbr: String, kvcAgg: String,
+                               intra: String => String): Unit = {
+    def scoreSql(lab: String): String =
+      s"SELECT 4 * ${p}m.m * ${intra(lab)} - " +
         "(SELECT sum(vol * vol) FROM (SELECT sum(k) AS vol " +
-        s"FROM $lab l JOIN deg d ON l.node = d.v GROUP BY comm) vv) AS s " +
-        "FROM m"
+        s"FROM $lab l JOIN ${p}deg d ON l.node = d.v GROUP BY comm) vv) AS s " +
+        s"FROM ${p}m"
     for (r <- 1 to rounds) {
-      val p = s"lab${r - 1}"
-      sb ++= s", vol$r AS MATERIALIZED (SELECT comm, sum(k) AS vol " +
-        s"FROM $p l JOIN deg d ON l.node = d.v GROUP BY comm)"
-      sb ++= s", kvc$r AS MATERIALIZED (SELECT s.v, lw.comm AS c, " +
-        s"CAST(count(*) AS BIGINT) AS k_vc FROM sym s " +
-        s"JOIN $p lw ON s.w = lw.node GROUP BY s.v, lw.comm)"
-      sb ++= s", base$r AS MATERIALIZED (SELECT l.node AS v, l.comm AS d, dg.k, " +
-        s"coalesce(kd.k_vc, 0) AS k_vd, vd.vol AS vol_d FROM $p l " +
-        "JOIN deg dg ON l.node = dg.v " +
-        s"LEFT JOIN kvc$r kd ON kd.v = l.node AND kd.c = l.comm " +
-        s"JOIN vol$r vd ON vd.comm = l.comm)"
-      sb ++= s", best$r AS MATERIALIZED (SELECT v, d, c, gain FROM (SELECT *, " +
+      val prev = s"${p}lab${r - 1}"
+      sb ++= s", ${p}vol$r AS MATERIALIZED (SELECT comm, sum(k) AS vol " +
+        s"FROM $prev l JOIN ${p}deg d ON l.node = d.v GROUP BY comm)"
+      sb ++= s", ${p}kvc$r AS MATERIALIZED (SELECT s.v, lw.comm AS c, " +
+        s"CAST($kvcAgg AS BIGINT) AS k_vc FROM ${p}sym s " +
+        s"JOIN $prev lw ON s.$nbr = lw.node GROUP BY s.v, lw.comm)"
+      sb ++= s", ${p}base$r AS MATERIALIZED (SELECT l.node AS v, l.comm AS d, dg.k, " +
+        s"coalesce(kd.k_vc, 0) AS k_vd, vd.vol AS vol_d FROM $prev l " +
+        s"JOIN ${p}deg dg ON l.node = dg.v " +
+        s"LEFT JOIN ${p}kvc$r kd ON kd.v = l.node AND kd.c = l.comm " +
+        s"JOIN ${p}vol$r vd ON vd.comm = l.comm)"
+      sb ++= s", ${p}best$r AS MATERIALIZED (SELECT v, d, c, gain FROM (SELECT *, " +
         "row_number() OVER (PARTITION BY v ORDER BY gain DESC, c) AS rk " +
-        s"FROM (SELECT b2.v, b2.d, kv.c, 2 * m.m * (kv.k_vc - b2.k_vd) - " +
+        s"FROM (SELECT b2.v, b2.d, kv.c, 2 * ${p}m.m * (kv.k_vc - b2.k_vd) - " +
         "b2.k * (vc.vol - (b2.vol_d - b2.k)) AS gain " +
-        s"FROM base$r b2 JOIN kvc$r kv ON kv.v = b2.v AND kv.c <> b2.d " +
-        s"JOIN vol$r vc ON vc.comm = kv.c CROSS JOIN m) gg) z WHERE rk = 1)"
+        s"FROM ${p}base$r b2 JOIN ${p}kvc$r kv ON kv.v = b2.v AND kv.c <> b2.d " +
+        s"JOIN ${p}vol$r vc ON vc.comm = kv.c CROSS JOIN ${p}m) gg) z WHERE rk = 1)"
       // the Grappolo swap rule, identically: drop moves d->c when c->d
       // is also proposed and d > c
-      sb ++= s", mv$r AS MATERIALIZED (SELECT v, d, c FROM best$r WHERE gain > 0)"
-      sb ++= s", app$r AS MATERIALIZED (SELECT x.v, x.c FROM mv$r x " +
-        s"WHERE NOT EXISTS (SELECT 1 FROM (SELECT DISTINCT d, c FROM mv$r) y " +
+      sb ++= s", ${p}mv$r AS MATERIALIZED (SELECT v, d, c FROM ${p}best$r WHERE gain > 0)"
+      sb ++= s", ${p}app$r AS MATERIALIZED (SELECT x.v, x.c FROM ${p}mv$r x " +
+        s"WHERE NOT EXISTS (SELECT 1 FROM (SELECT DISTINCT d, c FROM ${p}mv$r) y " +
         "WHERE y.d = x.c AND y.c = x.d AND x.d > y.d))"
-      sb ++= s", prop$r AS MATERIALIZED (SELECT l.node, " +
-        s"coalesce(a.c, l.comm) AS comm FROM lab${r - 1} l " +
-        s"LEFT JOIN app$r a ON a.v = l.node)"
-      sb ++= s", sa$r AS (${scoreSql(s"lab${r - 1}")})"
-      sb ++= s", sb$r AS (${scoreSql(s"prop$r")})"
-      sb ++= s", lab$r AS MATERIALIZED (SELECT l.node, " +
-        s"CASE WHEN sb$r.s > sa$r.s THEN p.comm ELSE l.comm END AS comm " +
-        s"FROM lab${r - 1} l JOIN prop$r p ON l.node = p.node " +
-        s"CROSS JOIN sa$r CROSS JOIN sb$r)"
+      sb ++= s", ${p}prop$r AS MATERIALIZED (SELECT l.node, " +
+        s"coalesce(a.c, l.comm) AS comm FROM $prev l " +
+        s"LEFT JOIN ${p}app$r a ON a.v = l.node)"
+      sb ++= s", ${p}sa$r AS (${scoreSql(prev)})"
+      sb ++= s", ${p}sb$r AS (${scoreSql(s"${p}prop$r")})"
+      sb ++= s", ${p}lab$r AS MATERIALIZED (SELECT l.node, " +
+        s"CASE WHEN ${p}sb$r.s > ${p}sa$r.s THEN p.comm ELSE l.comm END AS comm " +
+        s"FROM $prev l JOIN ${p}prop$r p ON l.node = p.node " +
+        s"CROSS JOIN ${p}sa$r CROSS JOIN ${p}sb$r)"
     }
-    sb.toString
   }
 
   /** DuckDB oracle for [[louvainTwoLevel]]: the [[louvainSql]] level-1
@@ -1604,45 +1506,10 @@ object GraphOps {
     sb ++= ", wm AS (SELECT CAST(coalesce((SELECT sum(w) FROM qe), 0) AS BIGINT) AS m, " +
       "CAST(coalesce((SELECT sum(lw) FROM wloops), 0) AS BIGINT) AS lw)"
     sb ++= ", wlab0 AS MATERIALIZED (SELECT v AS node, v AS comm FROM wdeg)"
-    def wScoreSql(lab: String): String =
-      "SELECT 4 * wm.m * ((SELECT coalesce(sum(p.w), 0) FROM wplain p " +
+    louvainRoundsSql(sb, "w", rounds2, "u", "sum(s.w)", lab =>
+      "((SELECT coalesce(sum(p.w), 0) FROM wplain p " +
         s"JOIN $lab x ON p.a = x.node JOIN $lab y ON p.b = y.node " +
-        "WHERE x.comm = y.comm) + wm.lw) - " +
-        "(SELECT sum(vol * vol) FROM (SELECT sum(k) AS vol " +
-        s"FROM $lab l JOIN wdeg d ON l.node = d.v GROUP BY comm) vv) AS s " +
-        "FROM wm"
-    for (r <- 1 to rounds2) {
-      val p = s"wlab${r - 1}"
-      sb ++= s", wvol$r AS MATERIALIZED (SELECT comm, sum(k) AS vol " +
-        s"FROM $p l JOIN wdeg d ON l.node = d.v GROUP BY comm)"
-      sb ++= s", wkvc$r AS MATERIALIZED (SELECT s.v, lw.comm AS c, " +
-        s"CAST(sum(s.w) AS BIGINT) AS k_vc FROM wsym s " +
-        s"JOIN $p lw ON s.u = lw.node GROUP BY s.v, lw.comm)"
-      sb ++= s", wbase$r AS MATERIALIZED (SELECT l.node AS v, l.comm AS d, dg.k, " +
-        s"coalesce(kd.k_vc, 0) AS k_vd, vd.vol AS vol_d FROM $p l " +
-        "JOIN wdeg dg ON l.node = dg.v " +
-        s"LEFT JOIN wkvc$r kd ON kd.v = l.node AND kd.c = l.comm " +
-        s"JOIN wvol$r vd ON vd.comm = l.comm)"
-      sb ++= s", wbest$r AS MATERIALIZED (SELECT v, d, c, gain FROM (SELECT *, " +
-        "row_number() OVER (PARTITION BY v ORDER BY gain DESC, c) AS rk " +
-        s"FROM (SELECT b2.v, b2.d, kv.c, 2 * wm.m * (kv.k_vc - b2.k_vd) - " +
-        "b2.k * (vc.vol - (b2.vol_d - b2.k)) AS gain " +
-        s"FROM wbase$r b2 JOIN wkvc$r kv ON kv.v = b2.v AND kv.c <> b2.d " +
-        s"JOIN wvol$r vc ON vc.comm = kv.c CROSS JOIN wm) gg) z WHERE rk = 1)"
-      sb ++= s", wmv$r AS MATERIALIZED (SELECT v, d, c FROM wbest$r WHERE gain > 0)"
-      sb ++= s", wapp$r AS MATERIALIZED (SELECT x.v, x.c FROM wmv$r x " +
-        s"WHERE NOT EXISTS (SELECT 1 FROM (SELECT DISTINCT d, c FROM wmv$r) y " +
-        "WHERE y.d = x.c AND y.c = x.d AND x.d > y.d))"
-      sb ++= s", wprop$r AS MATERIALIZED (SELECT l.node, " +
-        s"coalesce(a.c, l.comm) AS comm FROM wlab${r - 1} l " +
-        s"LEFT JOIN wapp$r a ON a.v = l.node)"
-      sb ++= s", wsa$r AS (${wScoreSql(s"wlab${r - 1}")})"
-      sb ++= s", wsb$r AS (${wScoreSql(s"wprop$r")})"
-      sb ++= s", wlab$r AS MATERIALIZED (SELECT l.node, " +
-        s"CASE WHEN wsb$r.s > wsa$r.s THEN p.comm ELSE l.comm END AS comm " +
-        s"FROM wlab${r - 1} l JOIN wprop$r p ON l.node = p.node " +
-        s"CROSS JOIN wsa$r CROSS JOIN wsb$r)"
-    }
+        "WHERE x.comm = y.comm) + wm.lw)")
     sb ++= s" SELECT l1.node, l2.comm AS community FROM lab$rounds1 l1 " +
       s"JOIN wlab$rounds2 l2 ON l1.comm = l2.node ORDER BY l1.node"
     sb.toString

@@ -2081,7 +2081,7 @@ object StatsOps {
     // actions; every frame here is |types|-bounded, so the cached blocks
     // are trivial at any corpus scale.
     val shared = org.apache.spark.sql.graftbridge.PlanBridge
-      .sharedLocalCheckpoint(_)
+      .sharedLocalCheckpoint(_: DataFrame)
     val wins = shared(sym.groupBy(col("i")).agg(sum(col("w")).as("w_tot"),
       sum(col("n_ij")).as("n_comp")))
     var p = wins.select(col("i"), lit(1.0).as("p"))

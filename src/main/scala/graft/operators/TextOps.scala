@@ -625,7 +625,7 @@ object TextOps {
     // evaluated 3x (no DataFrame CSE). Lazy shared checkpoints: one
     // evaluation each, zero extra actions (see PlanBridge).
     val shared = org.apache.spark.sql.graftbridge.PlanBridge
-      .sharedLocalCheckpoint(_)
+      .sharedLocalCheckpoint(_: DataFrame)
     val tf = shared(toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val vocab = shared(tf.groupBy("term").agg(sum(col("tf")).as("cnt")))
     val total = vocab.agg(sum(col("cnt")).as("total"))
@@ -699,7 +699,7 @@ object TextOps {
     // 2x (no DataFrame CSE). Lazy shared checkpoints: one evaluation
     // each, zero extra actions.
     val shared = org.apache.spark.sql.graftbridge.PlanBridge
-      .sharedLocalCheckpoint(_)
+      .sharedLocalCheckpoint(_: DataFrame)
     val tf = shared(bi.groupBy(col("doc_id"), col("a"), col("b"))
       .agg(count(lit(1)).as("tf")))
     val cab = shared(tf.groupBy(col("a"), col("b"))
@@ -798,7 +798,7 @@ object TextOps {
     // explode+shuffle runs once; cab's eager checkpoint (4 consumers)
     // becomes shared too: same dedup, one action fewer.
     val sharedKn = org.apache.spark.sql.graftbridge.PlanBridge
-      .sharedLocalCheckpoint(_)
+      .sharedLocalCheckpoint(_: DataFrame)
     val tf = sharedKn(bi.groupBy(col("doc_id"), col("a"), col("b"))
       .agg(count(lit(1)).as("tf")))
     // the (a,b) TYPE frame feeds FOUR consumers (hist, cont, types, the

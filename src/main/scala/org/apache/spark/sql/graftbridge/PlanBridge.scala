@@ -76,23 +76,22 @@ object PlanBridge {
     * references — those stats compound multiplicatively across rounds;
     * use [[freshLocalCheckpoint]] there. The caller must release the
     * blocks via [[unpersistLocalCheckpoint]] once the consuming action
-    * has materialized. */
-  def sharedLocalCheckpoint(df: DataFrame): DataFrame =
-    df.asInstanceOf[classic.Dataset[Row]].localCheckpoint(eager = false)
-
-  /** [[sharedLocalCheckpoint]] with an EXPLICIT sizeInBytes estimate in
-    * place of the origin plan's. For iterative operators that fuse a
-    * round's frames into one action (louvain r19): the lazy checkpoint's
-    * inherited estimate is the round-plan's multiplied join estimate —
+    * has materialized.
+    *
+    * `sizeInBytes` replaces the origin plan's estimate. For iterative
+    * operators that fuse a round's frames into one action (louvain r19):
+    * the inherited estimate is the round-plan's multiplied join estimate —
     * large enough to flip the round's small-frame joins to sort-merge —
     * while the TRUE size is known to match the previous round's measured
     * checkpoint (cardinalities are round-invariant). Callers must pass a
     * scale-honest bound (a measured size of a same-cardinality frame),
     * never a constant: an optimistic literal would broadcast a huge frame
     * at scale. */
-  def sharedLocalCheckpointSized(df: DataFrame, sizeInBytes: Long): DataFrame = {
+  def sharedLocalCheckpoint(df: DataFrame,
+                            sizeInBytes: Option[Long] = None): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]].localCheckpoint(eager = false)
-    checkpointRdd(ds).fold(ds: DataFrame)(withSize(ds, _, sizeInBytes))
+    sizeInBytes.fold(ds: DataFrame)(size =>
+      checkpointRdd(ds).fold(ds: DataFrame)(withSize(ds, _, size)))
   }
 
   /** Measured storage size of an (already materialized) localCheckpoint's

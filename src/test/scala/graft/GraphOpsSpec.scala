@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{GraphOps, Similarity}
@@ -298,36 +299,42 @@ class GraphOpsSpec extends SparkSpec {
     assert(got === Some(want))
   }
 
-  /** Pure-Scala model of GraphOps.louvain's gated synchronous sweep:
-    * exact integer Blondel gain, (gain desc, c asc) argmax, integer
-    * modularity-score gate, loop until no improvement. */
-  private def louvainModel(edges: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
-    val e = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .filter { case (a, b) => a < b }.distinct
-    val nbrs = (e ++ e.map(_.swap)).groupBy(_._1).map { case (v, ps) =>
-      v -> ps.map(_._2)
-    }
-    val deg = nbrs.map { case (v, ws) => v -> ws.size.toLong }
-    val m = e.size.toLong
+  /** Pure-Scala model of the gated synchronous sweep of
+    * GraphOps.louvainWeighted over (a, b, w) edges, self-loops allowed:
+    * parallel edges sum, a loop counts twice in its node's degree, exact
+    * integer Blondel gain, (gain desc, c asc) argmax, Grappolo swap rule,
+    * gate `4·W·(intra_w + loopW) − Σ vol²`, loop until no improvement. */
+  private def weightedLouvainModel(
+      edges: Seq[(Long, Long, Long)]): (Map[Long, Long], Int) = {
+    val e = edges.groupMapReduce { case (a, b, _) => (math.min(a, b), math.max(a, b)) }(
+      _._3)(_ + _)
+    val (loops, plain) = e.partition { case ((a, b), _) => a == b }
+    val loopOf = loops.map { case ((v, _), w) => v -> w }
+    val nbrs = plain.toSeq
+      .flatMap { case ((a, b), w) => Seq(a -> (b, w), b -> (a, w)) }
+      .groupMap(_._1)(_._2)
+    val nodes = nbrs.keySet ++ loopOf.keySet
+    val deg = nodes.map { v =>
+      v -> (nbrs.getOrElse(v, Nil).map(_._2).sum + 2L * loopOf.getOrElse(v, 0L))
+    }.toMap
+    val bigW = e.values.sum
+    val loopW = loopOf.values.sum
+    // toSeq: Set.map would dedup equal degrees
+    def volOf(lab: Map[Long, Long]): Map[Long, Long] =
+      lab.groupBy(_._2).map { case (c, vs) => c -> vs.keys.toSeq.map(deg).sum }
     def score(lab: Map[Long, Long]): Long = {
-      val intra = e.count { case (a, b) => lab(a) == lab(b) }.toLong
-      val vols = lab.groupBy(_._2).map { case (_, vs) =>
-        vs.keys.toSeq.map(deg).sum // toSeq: Set.map would dedup equal degrees
-      }
-      4L * m * intra - vols.map(v => v * v).sum
+      val intra = plain.collect { case ((a, b), w) if lab(a) == lab(b) => w }.sum
+      4L * bigW * (intra + loopW) - volOf(lab).values.map(v => v * v).sum
     }
     def sweep(lab: Map[Long, Long]): Map[Long, Long] = {
-      val volOf = lab.groupBy(_._2).map { case (c, vs) =>
-        c -> vs.keys.toSeq.map(deg).sum
-      }
+      val vol = volOf(lab)
       // per-node best strictly-positive move (v -> (d, c))
       val moves = lab.flatMap { case (v, d) =>
         val k = deg(v)
-        val kvc = nbrs(v).groupBy(lab).map { case (c, ws) => c -> ws.size.toLong }
+        val kvc = nbrs.getOrElse(v, Nil).groupMapReduce(p => lab(p._1))(_._2)(_ + _)
         val kvd = kvc.getOrElse(d, 0L)
         val cands = kvc.keys.filter(_ != d).map { c =>
-          val gain = 2L * m * (kvc(c) - kvd) - k * (volOf(c) - (volOf(d) - k))
-          (gain, c)
+          (2L * bigW * (kvc(c) - kvd) - k * (vol(c) - (vol(d) - k)), c)
         }
         cands.toSeq.sortBy { case (g, c) => (-g, c) }.headOption.collect {
           case (g, c) if g > 0 => v -> (d, c)
@@ -341,7 +348,7 @@ class GraphOpsSpec extends SparkSpec {
       }
       lab.map { case (v, d) => v -> applied.get(v).map(_._2).getOrElse(d) }
     }
-    var lab = nbrs.keys.map(v => v -> v).toMap
+    var lab = nodes.map(v => v -> v).toMap
     var s = score(lab)
     var sweeps = 0
     var go = true
@@ -352,6 +359,12 @@ class GraphOpsSpec extends SparkSpec {
     }
     (lab, sweeps)
   }
+
+  /** GraphOps.louvain's input as weight-1 model edges: canonical,
+    * deduped, loops dropped. */
+  private def louvainModel(edges: Seq[(Long, Long)]): (Map[Long, Long], Int) =
+    weightedLouvainModel(edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+      .filter { case (a, b) => a < b }.distinct.map { case (a, b) => (a, b, 1L) })
 
   test("louvain == gated-sweep fixpoint model: two cliques, bridge, random graphs") {
     def run(edges: Seq[(Long, Long)]): Map[Long, Long] =
@@ -417,6 +430,76 @@ class GraphOpsSpec extends SparkSpec {
         edges.toDF("ca", "cb").withColumn("weight", lit(1L)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(wtd === unw)
+  }
+
+  test("louvainWeighted == weighted gated-sweep model on random graphs with loops") {
+    for (seed <- Seq(5L, 6L, 7L)) {
+      val rnd = new scala.util.Random(seed)
+      // 22 nodes, 90 draws: parallel and reversed edges sum, a == b
+      // draws are self-loops
+      val edges = Seq.fill(90)(
+        (rnd.nextInt(22).toLong, rnd.nextInt(22).toLong, 1L + rnd.nextInt(4)))
+      val got = GraphOps.louvainWeighted(edges.toDF("ca", "cb", "weight"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val (want, sweeps) = weightedLouvainModel(edges)
+      assert(edges.exists { case (a, b, _) => a == b }, s"seed $seed has loops")
+      assert(sweeps >= 1, s"seed $seed accepts a sweep")
+      assert(got === want, s"seed $seed")
+    }
+  }
+
+  test("string ids canonicalize numerically, as the same ids given as long") {
+    // lexicographic order disagrees with numeric order on these ids
+    // ("10" < "9", "100" < "11"); a reversed duplicate and a self-loop
+    // must canonicalize away in both forms
+    val pairs = Seq((9L, 10L), (10L, 100L), (100L, 9L), (11L, 9L), (11L, 100L),
+      (99L, 1000L), (1000L, 8L), (8L, 99L), (9L, 99L), (101L, 10L),
+      (10L, 9L), (100L, 100L), (8L, 1000L), (99L, 101L))
+    val asLong = pairs.toDF("a", "b")
+    val asString = pairs.map { case (a, b) => (a.toString, b.toString) }.toDF("a", "b")
+    val labels = Seq((8L, 1L), (9L, 1L), (10L, 1L), (11L, 1L), (100L, 1L),
+      (99L, 2L), (101L, 2L), (1000L, 2L)).toDF("node", "label")
+    // (edges, seeds) => output; the BFS seeds take the edges' id type
+    val ops: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
+      "labelProp" -> ((e, _) => GraphOps.labelProp(e, iters = 3)),
+      "kCore" -> ((e, _) => GraphOps.kCore(e, k = 2, rounds = 3)),
+      "kCoreFixpoint" -> ((e, _) => GraphOps.kCoreFixpoint(e, k = 2)),
+      "bfsHops" -> ((e, s) => GraphOps.bfsHops(e, s, rounds = 3)),
+      "bfsHopsFixpoint" -> ((e, s) => GraphOps.bfsHopsFixpoint(e, s)),
+      "modularity" -> ((e, _) => GraphOps.modularity(e, labels)),
+      "louvainMove" -> ((e, _) => GraphOps.louvainMove(e)),
+      "louvain" -> ((e, _) => GraphOps.louvain(e)))
+    for ((name, op) <- ops) {
+      def rows(e: DataFrame, seeds: DataFrame) =
+        op(e, seeds).collect().map(_.toSeq).sortBy(_.mkString(","))
+      val want = rows(asLong, Seq(9L).toDF("node"))
+      assert(want.nonEmpty, name)
+      assert(rows(asString, Seq("9").toDF("node")) === want, name)
+    }
+  }
+
+  test("louvain faces keep only the checkpoints their output reads") {
+    def clique(ids: Seq[Long]) =
+      for (i <- ids; j <- ids if i < j) yield (i, j)
+    val edges = (clique(Seq(0L, 1L, 2L, 3L)) ++ clique(Seq(10L, 11L, 12L, 13L)) ++
+      Seq((3L, 10L), (13L, 20L), (20L, 21L), (21L, 13L))).toDF("a", "b")
+    // persistent RDDs an operator call leaves behind once its output has
+    // been collected; the output frame stays referenced through the count
+    def retained(run: => DataFrame): Int = {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val out = run
+      out.collect()
+      val added = (sc.getPersistentRDDs.keySet -- before).size
+      assert(out.columns.nonEmpty)
+      added
+    }
+    assert(retained(GraphOps.louvain(edges)) === 1, "louvain: the final fused frame")
+    assert(retained(GraphOps.louvainWeighted(
+      edges.toDF("ca", "cb").withColumn("weight", lit(2L)))) === 1,
+      "louvainWeighted: the final fused frame")
+    assert(retained(GraphOps.louvainTwoLevel(edges)) === 2,
+      "louvainTwoLevel: level-1 labels and level 2's final fused frame")
   }
 
   test("louvainTwoLevel: modularity monotone across levels, labels a coarsening of level 1") {
