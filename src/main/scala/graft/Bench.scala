@@ -69,8 +69,8 @@ object Bench {
       try {
         // noop sink materializes every output column (count() would let
         // Spark prune the projections away).
-        PlanBridge.stripTopSort(fn(spark, sfDir))
-          .write.format("noop").mode("overwrite").save()
+        PlanBridge.scoped(PlanBridge.stripTopSort(fn(spark, sfDir))
+          .write.format("noop").mode("overwrite").save())
         None
       } catch { case e: Throwable => Some(e.toString.take(200)) }
     // Crash honesty (r9 lesson): when the shared SparkContext dies mid-board

@@ -4,6 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 import graft.functions.{GeoFunctions, TextFunctions}
 import graft.operators.{BloomOps, Dedup, Extract, GediCatalog, GeoOps, GraphOps,
@@ -1215,8 +1216,8 @@ object Cli {
     def wallSec: Double = math.round((System.nanoTime() - t0) / 1e7) / 100.0
 
     try {
-      builders.getOrElse(cmd, throw new IllegalArgumentException(
-        s"unknown command: $cmd (known: ${commands.mkString(", ")})"))(args)
+      PB.scoped(builders.getOrElse(cmd, throw new IllegalArgumentException(
+        s"unknown command: $cmd (known: ${commands.mkString(", ")})"))(args))
       logPath.foreach(RunLog.append(_, Seq(
         "command" -> cmd, "status" -> "ok",
         "n_input" -> args.nInput,

@@ -69,10 +69,13 @@ object Tables {
     * directory when Hadoop's native library is absent. `FileSystem.get`
     * caches one instance per scheme (not per conf), so this takes effect
     * because every entrypoint builds its session before it touches
-    * `file:`. */
+    * `file:`. `fs.AbstractFileSystem.file.impl` does the same for the
+    * `FileContext` API that streaming state and checkpoints write
+    * through. */
   val sessionConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
-    "spark.hadoop.fs.file.impl" -> classOf[graft.sources.NioLocalFileSystem].getName)
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sources.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sources.NioLocalFs].getName)
 }

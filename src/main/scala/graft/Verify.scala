@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,15 +12,20 @@ object Verify {
     * loud schema/hash mismatch instead of the query silently vanishing
     * from the board (round 7 shipped 141 rows for 146 queries because
     * five broken plans dumped nothing). Returns name → error message for
-    * the failures; also written to `outDir/verify_errors.json`. */
+    * the failures; also written to `outDir/verify_errors.json`. Each
+    * query runs in its own checkpoint scope; stderr names every query
+    * that still leaves an RDD it persisted. */
   def dumpQueries(spark: SparkSession, sfDir: String, outDir: String,
                   queries: Map[String, (SparkSession, String) => DataFrame])
       : Map[String, String] = {
     import spark.implicits._
+    var leaky = Seq.empty[String]
     val errs = queries.flatMap { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        val (_, left) = PlanBridge.persistedAfter(spark)(PlanBridge.scoped(
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")))
+        if (left.nonEmpty) leaky :+= name
         None
       } catch { case e: Throwable =>
         val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
@@ -29,6 +35,8 @@ object Verify {
         Some(name -> msg)
       }
     }
+    System.err.println(s"[verify] ${leaky.size} of ${queries.size} queries left " +
+      s"persisted RDDs ${leaky.sorted.mkString(" ")}")
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
       errs.map { case (k, v) => s"${jsonQuote(k)}: ${jsonQuote(v)}" }
         .mkString("{", ",", "}"))

@@ -77,11 +77,11 @@ object BloomOps {
     * Output: one row (n_inserted, n_probed, within_bound). */
   def bloomFprAudit(insert: DataFrame, probe: DataFrame, insertKey: String,
                     probeKey: String, expectedItems: Long,
-                    fpp: Double = 0.03): DataFrame = {
+                    fpp: Double = 0.03): DataFrame = PlanBridge.scoped {
     require(insert.schema(insertKey).dataType == probe.schema(probeKey).dataType,
       "bloomFprAudit keys must have identical types")
     val ins = insert.select(col(insertKey).as("k")).filter(col("k").isNotNull)
-      .distinct().localCheckpoint() // reused: build + the anti-join
+      .distinct().transform(PlanBridge.localCheckpoint) // reused: build + the anti-join
     val bf = ins.stat.bloomFilter(xxhash64(col("k")), expectedItems, fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
@@ -91,7 +91,7 @@ object BloomOps {
     val negatives = probe.select(col(probeKey).as("k")).filter(col("k").isNotNull)
       .distinct()
       .join(ins, Seq("k"), "left_anti")
-      .localCheckpoint() // counted twice: total + false positives
+      .transform(PlanBridge.localCheckpoint) // counted twice: total + false positives
     val stats = negatives.agg(count(lit(1)).as("n_probed"),
       sum(when(might, 1L).otherwise(0L)).as("n_false"))
     ins.agg(count(lit(1)).as("n_inserted"))

@@ -281,7 +281,7 @@ object Dedup {
   def lshRecall(df: DataFrame, idCol: String, textCol: String,
                 blockCols: Seq[String], n: Int = 3, tau: Double = 0.3,
                 k: Int = 16, bands: Int = 4, maxBucket: Option[Int] = None,
-                pairParts: Int = 64, truthSampleMod: Int = 1): DataFrame = {
+                pairParts: Int = 64, truthSampleMod: Int = 1): DataFrame = PlanBridge.scoped {
     import org.apache.spark.sql.graftbridge.PlanBridge
     // null block keys are excluded on BOTH engines: Spark's struct
     // equality would pair null-keyed docs while SQL's column equality
@@ -291,7 +291,7 @@ object Dedup {
         struct(blockCols.map(col): _*).as("blk") +:
         Seq(TextFunctions.ngramHashes(col(textCol), n).as("grams")): _*)
       .withColumn("ng", size(col("grams")).cast("long"))
-      .localCheckpoint()
+      .transform(PlanBridge.localCheckpoint)
     val inter = PlanBridge.column(graft.plans.Exprs.SortedIntersectSizeLong(
       PlanBridge.expression(col("x.grams")),
       PlanBridge.expression(col("y.grams"))))
@@ -325,9 +325,9 @@ object Dedup {
       .filter(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")).cast("double") >= tau)
       .select(col("a"), col("b"))
-      .localCheckpoint()
+      .transform(PlanBridge.localCheckpoint)
     val cand = minhashCandidates(df, idCol, textCol, k, bands, maxBucket)
-      .localCheckpoint()
+      .transform(PlanBridge.localCheckpoint)
     val comps = connectedComponents(lshStarEdges(df, idCol, textCol, k, bands))
     val clusterHit = truth
       .join(comps.select(col("id").as("a"), col("comp").as("ca")), Seq("a"))
@@ -389,10 +389,8 @@ object Dedup {
     * ids). One cheap scalar agg per round, no row-level diff join.
     * Lineage is cut every round (localCheckpoint) or iteration i would
     * re-execute all i-1 predecessors, and the previous round's
-    * checkpoint blocks are released once superseded (through the
-    * underlying RDD — Dataset.unpersist is a no-op for local
-    * checkpoints) so storage stays one-labels-frame-sized regardless
-    * of iteration count.
+    * checkpoint blocks are released once superseded so storage stays
+    * one-labels-frame-sized regardless of iteration count.
     *
     * Hitting `maxIter` before the fixpoint would silently return WRONG
     * labels (min-label moves one hop per round, so a chain longer than
@@ -401,23 +399,21 @@ object Dedup {
     *
     * @param edges (a, b) pair DataFrame, e.g. `minhashCandidates` output.
     * @return (id, comp) — one row per node appearing in any edge. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = PlanBridge.scoped {
     requireIntegralIds(edges)
     val adj = edges.select(col("a").as("src"), col("b").as("dst"))
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
-    try {
-      val init = adj.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("comp"))
-        .localCheckpoint()
-      iterateToFixpoint(init, maxIter, "connectedComponents")(
-        l => decimalSum(l, col("comp").cast("decimal(38,0)")))(
-        l => adj
-          .join(l.withColumnRenamed("id", "src"), "src")
-          .select(col("dst").as("id"), col("comp"))
-          .union(l)
-          .groupBy(col("id")).agg(min(col("comp")).as("comp")))
-    } finally PlanBridge.unpersistLocalCheckpoint(adj)
+      .transform(PlanBridge.localCheckpoint)
+    val init = adj.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("comp"))
+      .transform(PlanBridge.localCheckpoint)
+    iterateToFixpoint(init, maxIter, "connectedComponents")(
+      l => decimalSum(l, col("comp").cast("decimal(38,0)")))(
+      l => adj
+        .join(l.withColumnRenamed("id", "src"), "src")
+        .select(col("dst").as("id"), col("comp"))
+        .union(l)
+        .groupBy(col("id")).agg(min(col("comp")).as("comp")))
   }
 
   /** Both CC variants need integral ids: the decimal convergence
@@ -451,8 +447,7 @@ object Dedup {
     * [[iterateToEdgeFixpoint]] instead). Hitting `maxIter` mid-descent
     * THROWS rather than returning a truncated result. Every round is
     * localCheckpointed (lineage cut) and the superseded round's blocks
-    * are released; the returned frame stays checkpointed (callers are
-    * lazy over it). */
+    * are released. */
   private def iterateToFixpoint(init: DataFrame, maxIter: Int, what: String)
                                (pot: DataFrame => BigDecimal)
                                (round: DataFrame => DataFrame): DataFrame = {
@@ -464,17 +459,15 @@ object Dedup {
       last = Some(p)
       val prev = cur
       cur = PlanBridge.freshLocalCheckpoint(round(prev))
-      PlanBridge.unpersistLocalCheckpoint(prev)
+      PlanBridge.release(prev)
       p = pot(cur)
       iter += 1
     }
-    if (last.forall(p < _)) {
-      PlanBridge.unpersistLocalCheckpoint(cur)
+    if (last.forall(p < _))
       throw new IllegalStateException(
         s"$what did not converge in maxIter=$maxIter rounds " +
         "(potential still decreasing) — the graph needs more rounds; " +
         "raise maxIter.")
-    }
     cur
   }
 
@@ -512,16 +505,14 @@ object Dedup {
           org.apache.spark.sql.functions.lit(1)).as("n")))
       curCount = PlanBridge.awaitObserved(obs)("n").asInstanceOf[Long]
       converged = prevCount == curCount && prev.except(cur).isEmpty
-      PlanBridge.unpersistLocalCheckpoint(prev)
+      PlanBridge.release(prev)
       iter += 1
     }
-    if (!converged) {
-      PlanBridge.unpersistLocalCheckpoint(cur)
+    if (!converged)
       throw new IllegalStateException(
         s"$what did not converge in maxIter=$maxIter rounds " +
         "(edge set still changing) — the graph needs more alternations; " +
         "raise maxIter.")
-    }
     cur
   }
 
@@ -550,50 +541,46 @@ object Dedup {
     *
     * @return (id, comp) — one row per node appearing in any edge,
     *         identical labels to [[connectedComponents]]. */
-  def connectedComponentsLogStar(edges: DataFrame, maxIter: Int = 30): DataFrame = {
+  def connectedComponentsLogStar(edges: DataFrame, maxIter: Int = 30): DataFrame = PlanBridge.scoped {
     requireIntegralIds(edges)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("u")
     val nodes = edges.select(col("a").as("id"))
       .union(edges.select(col("b").as("id"))).distinct()
-      .localCheckpoint()
-    try {
-      val init = edges.select(col("a").as("u"), col("b").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint()
-      val stars = iterateToEdgeFixpoint(init, maxIter, "connectedComponentsLogStar")(
-        e => {
-          // large-star over the symmetrized neighborhood: every neighbor
-          // bigger than u re-hangs under min(Γ(u) ∪ {u}); every output
-          // row satisfies u > v (the new v = m <= old u < new u)
-          val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-          val large = sym
-            .withColumn("m", least(min(col("v")).over(w), col("u")))
-            .filter(col("v") > col("u"))
-            .select(col("v").as("u"), col("m").as("v"))
-            .distinct()
-          // small-star: large's rows are already (bigger, smaller), so u's
-          // smaller neighbors and u itself re-hang under the neighborhood
-          // min (m = min over v's < u, so no self-loops can appear)
-          val withMin = large.withColumn("m",
-            least(min(col("v")).over(w), col("u")))
-          withMin.filter(col("v") =!= col("m"))
-            .select(col("v").as("u"), col("m").as("v"))
-            .union(withMin.select(col("u"), col("m").as("v")))
-            .distinct()
-        })
-      // fixpoint = star graphs: every non-center node has exactly one
-      // edge to its component min; centers (and isolated nodes) label
-      // themselves. Checkpoint the small result frame so the star edge
-      // set can be released instead of leaking per call.
-      val out = nodes.join(
-          stars.groupBy(col("u").as("id")).agg(min(col("v")).as("comp")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-        .localCheckpoint()
-      PlanBridge.unpersistLocalCheckpoint(stars)
-      out
-    } finally PlanBridge.unpersistLocalCheckpoint(nodes)
+      .transform(PlanBridge.localCheckpoint)
+    val init = edges.select(col("a").as("u"), col("b").as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+      .transform(PlanBridge.localCheckpoint)
+    val stars = iterateToEdgeFixpoint(init, maxIter, "connectedComponentsLogStar")(
+      e => {
+        // large-star over the symmetrized neighborhood: every neighbor
+        // bigger than u re-hangs under min(Γ(u) ∪ {u}); every output
+        // row satisfies u > v (the new v = m <= old u < new u)
+        val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+        val large = sym
+          .withColumn("m", least(min(col("v")).over(w), col("u")))
+          .filter(col("v") > col("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .distinct()
+        // small-star: large's rows are already (bigger, smaller), so u's
+        // smaller neighbors and u itself re-hang under the neighborhood
+        // min (m = min over v's < u, so no self-loops can appear)
+        val withMin = large.withColumn("m",
+          least(min(col("v")).over(w), col("u")))
+        withMin.filter(col("v") =!= col("m"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .union(withMin.select(col("u"), col("m").as("v")))
+          .distinct()
+      })
+    // fixpoint = star graphs: every non-center node has exactly one
+    // edge to its component min; centers (and isolated nodes) label
+    // themselves. Checkpoint the small result frame so the scope can
+    // release the star edge set.
+    nodes.join(
+        stars.groupBy(col("u").as("id")).agg(min(col("v")).as("comp")),
+        Seq("id"), "left")
+      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+      .transform(PlanBridge.localCheckpoint)
   }
 
   /** SimHash near-dup buckets: every doc gets its `bits`-bit SimHash; docs
@@ -844,7 +831,7 @@ object Dedup {
     * volume, not plan decay); mine the template out first
     * (TextOps.boilerplate) when that bill is unwanted. */
   def setSimJoin(df: DataFrame, idCol: String, textCol: String,
-                 n: Int = 3, tauNum: Int = 1, tauDen: Int = 2): DataFrame = {
+                 n: Int = 3, tauNum: Int = 1, tauDen: Int = 2): DataFrame = PlanBridge.scoped {
     require(tauNum > 0 && tauDen >= tauNum,
       s"tau must be a rational in (0, 1]: got $tauNum/$tauDen")
     // sorted distinct 64-bit gram hashes once per doc (native one-pass
@@ -858,7 +845,7 @@ object Dedup {
         PlanBridge.expression(col(textCol)), n)).as("_grams"))
       .withColumn("_n", size(col("_grams")).cast("long"))
       .filter(col("_n") > 0)
-      .localCheckpoint()
+      .transform(PlanBridge.localCheckpoint)
     val dfFrame = grams.select(explode(col("_grams")).as("_gram"))
       .groupBy("_gram").agg(count(lit(1)).as("_df"))
     // prefix length p = n - ceil(tau*n) + 1, all-integer ceil division
@@ -952,7 +939,7 @@ object Dedup {
     * containment undefined). */
   def overlapPrefixJoin(docs: DataFrame, idCol: String, textCol: String,
                         blockCol: String, alphaNum: Int = 1,
-                        alphaDen: Int = 4): DataFrame = {
+                        alphaDen: Int = 4): DataFrame = PlanBridge.scoped {
     val (grams, posts, prefix) =
       overlapPrefixParts(docs, idCol, textCol, blockCol, alphaNum, alphaDen)
     overlapPrefixJoinFromParts(grams, posts, prefix, alphaNum, alphaDen)
@@ -989,7 +976,7 @@ object Dedup {
     * (grams frame with (id, blk, grams, ng), candidate (a, b) pairs). */
   private[graft] def overlapPrefixCandidates(
       docs: DataFrame, idCol: String, textCol: String, blockCol: String,
-      alphaNum: Int, alphaDen: Int): (DataFrame, DataFrame) = {
+      alphaNum: Int, alphaDen: Int): (DataFrame, DataFrame) = PlanBridge.scoped {
     val (grams, posts, prefix) =
       overlapPrefixParts(docs, idCol, textCol, blockCol, alphaNum, alphaDen)
     (grams, overlapCandidatesFromParts(posts, prefix))
@@ -1022,7 +1009,7 @@ object Dedup {
           .as("grams"))
       .withColumn("ng", size(col("grams")).cast("long"))
       .filter(col("ng") >= 1)
-      .localCheckpoint() // reused: postings + both verify sides
+      .transform(PlanBridge.localCheckpoint) // reused: postings + both verify sides
     val posts = grams.select(col("id"), col("blk"), col("ng"),
       explode(col("grams")).as("g"))
     val freq = posts.groupBy("g").agg(count(lit(1)).as("f"))
@@ -1063,12 +1050,10 @@ object Dedup {
     * a block-sample first). */
   def overlapCandidateVolumes(docs: DataFrame, idCol: String, textCol: String,
                               blockCol: String, alphaNum: Int,
-                              alphaDen: Int): (Long, Long) = {
+                              alphaDen: Int): (Long, Long) = PlanBridge.scoped {
     val (grams, posts, prefix) =
       overlapPrefixParts(docs, idCol, textCol, blockCol, alphaNum, alphaDen)
-    val volumes = overlapVolumesFromParts(grams, posts, prefix)
-    PlanBridge.unpersistLocalCheckpoint(grams)
-    volumes
+    overlapVolumesFromParts(grams, posts, prefix)
   }
 
   private def overlapVolumesFromParts(grams: DataFrame, posts: DataFrame,
@@ -1093,31 +1078,26 @@ object Dedup {
     * volume. */
   def overlapJoinAuto(docs: DataFrame, idCol: String, textCol: String,
                       blockCol: String, alphaNum: Int = 1,
-                      alphaDen: Int = 4): DataFrame = {
+                      alphaDen: Int = 4): DataFrame = PlanBridge.scoped {
     // ONE corpus-sized gram/postings pass: the checkpointed parts the
     // volume predictor reads are the same frames the chosen join
     // consumes (the parts used to be rebuilt from scratch after the
     // choice — every auto call paid the tokenize/gram/postings stage
     // twice). grams is materialized INTO the eager output checkpoint
-    // below and released before return, so the only storage that
-    // outlives this call is the bounded PAIR SET — callers that loop
-    // over many corpora should release that too via
-    // PlanBridge.unpersistLocalCheckpoint(result) once consumed.
+    // below, so the only storage that outlives this call is the bounded
+    // PAIR SET.
     val (grams, posts, prefix) =
       overlapPrefixParts(docs, idCol, textCol, blockCol, alphaNum, alphaDen)
-    try {
-      val (prefixRows, allPairsRows) =
-        overlapVolumesFromParts(grams, posts, prefix)
-      val chosen =
-        if (prefixRows <= allPairsRows)
-          overlapPrefixJoinFromParts(grams, posts, prefix, alphaNum, alphaDen)
-        else
-          overlapAllPairsJoinFromGrams(grams, alphaNum, alphaDen)
-      // eagerly materialize the chosen join (its output is the bounded
-      // pair set) so the finally-release of the corpus-sized gram
-      // checkpoint is safe — and runs even when the eager job throws
-      chosen.localCheckpoint()
-    } finally PlanBridge.unpersistLocalCheckpoint(grams)
+    val (prefixRows, allPairsRows) =
+      overlapVolumesFromParts(grams, posts, prefix)
+    val chosen =
+      if (prefixRows <= allPairsRows)
+        overlapPrefixJoinFromParts(grams, posts, prefix, alphaNum, alphaDen)
+      else
+        overlapAllPairsJoinFromGrams(grams, alphaNum, alphaDen)
+    // eagerly materialize the chosen join (its output is the bounded
+    // pair set), so the corpus-sized gram checkpoint is released on return
+    chosen.transform(PlanBridge.localCheckpoint)
   }
 
   /** The blocked all-pairs face of the overlap join — q_containment's
@@ -1125,7 +1105,7 @@ object Dedup {
     * the chooser's two faces are interchangeable. */
   private[graft] def overlapAllPairsJoin(
       docs: DataFrame, idCol: String, textCol: String, blockCol: String,
-      alphaNum: Int, alphaDen: Int): DataFrame = {
+      alphaNum: Int, alphaDen: Int): DataFrame = PlanBridge.scoped {
     val (grams, _, _) =
       overlapPrefixParts(docs, idCol, textCol, blockCol, alphaNum, alphaDen)
     overlapAllPairsJoinFromGrams(grams, alphaNum, alphaDen)

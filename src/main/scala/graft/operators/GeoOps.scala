@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 import graft.functions.GeoFunctions
 
@@ -612,7 +613,7 @@ object GeoOps {
     * re-derived after the loop. */
   private def dbscanCore(points: DataFrame, r: Long, minPts: Int,
                          idCol: String)
-                        (propagate: (DataFrame, DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = {
+                        (propagate: (DataFrame, DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = PB.scoped {
     // FOUR materializations total (the r9 bundle carried five before the
     // rounds plus one per round, and the extra checkpoint writes — not
     // the delta-sending logic — were the measured regression): the pair
@@ -635,8 +636,8 @@ object GeoOps {
       .toLong <= broadcastPointBytes
     val ppf: DataFrame => DataFrame = if (gated) broadcast else identity
     val pairs = radiusJoin(points, r, idCol, hint = ppf).select("id_a", "id_b")
-      .localCheckpoint() // reused by degree count, adjacency and (when any
-                         // non-core point exists) the border pass
+      .transform(PB.localCheckpoint) // reused by degree count, adjacency and (when any
+                                     // non-core point exists) the border pass
     val deg = pairs.select(col("id_a").as("id"))
       .unionByName(pairs.select(col("id_b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("n_nbrs"))
@@ -649,7 +650,7 @@ object GeoOps {
       // (was one limit(1) job per run)
       .observe(ptsObs, count(when(col("n_nbrs") < minPts - 1, lit(1)))
         .as("n_noncore"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val core = pts.filter(col("n_nbrs") >= minPts - 1).select("id")
     val shuffleP = points.sparkSession.sessionState.conf.numShufflePartitions
     // symmetric core-core adjacency + one self-loop per core point (the
@@ -662,9 +663,9 @@ object GeoOps {
       .unionByName(core.select(col("id").as("v"), col("id").as("w")))
     val adjSym = (if (gated) adjSym0
       else adjSym0.repartition(shuffleP, col("v")).sortWithinPartitions("v"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val init = core.withColumn("cluster", col("id"))
-    val labels = propagate(adjSym, init, ppf).localCheckpoint()
+    val labels = propagate(adjSym, init, ppf).transform(PB.localCheckpoint)
     val coreL = labels.withColumn("role", lit("core"))
     // Border short-circuit: a border row needs a NON-CORE endpoint, so when
     // the degree frame holds none the whole border pass — two scans of the

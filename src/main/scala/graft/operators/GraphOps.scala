@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 /** Graph analytics over candidate-pair graphs (SURVEY §2.3) — the audit
   * layer on top of the dedup graph builders: [[Dedup]] turns buckets into
@@ -95,7 +96,7 @@ object GraphOps {
     * starting state of the k-core peel and the BFS expansion. */
   private def adjacency(edges0: DataFrame, aCol: String,
                         bCol: String): DataFrame =
-    symmetric(canonEdges(edges0, aCol, bCol), "v", "w").localCheckpoint()
+    symmetric(canonEdges(edges0, aCol, bCol), "v", "w").transform(PB.localCheckpoint)
 
   /** PageRank by power iteration over a directed edge list (source/domain
     * authority scoring — the quality prior CommonCrawl-style curation
@@ -125,13 +126,13 @@ object GraphOps {
     *
     * Output: (node, pagerank) — pagerank rounded to 6, sums to ~1. */
   def pageRank(edges0: DataFrame, iters: Int = 3, damping: Double = 0.85,
-               srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+               srcCol: String = "src", dstCol: String = "dst"): DataFrame = PB.scoped {
     require(iters >= 1, "iters must be >= 1")
     val e = edges0
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     // r18: fold every round-invariant piece out of the iteration plan —
     // the node count becomes a driver literal (it fed TWO broadcast-agg
     // subtrees per round), out-degree rides the checkpointed edge frame
@@ -143,23 +144,22 @@ object GraphOps {
     // r19: the node count rides the node checkpoint as an observation
     // (no separate count job), and the init ranks are a plain select
     // over the materialized node frame instead of one more checkpoint.
-    val PB = org.apache.spark.sql.graftbridge.PlanBridge
     val obsN = org.apache.spark.sql.Observation()
     val nodes = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v"))).distinct()
       .observe(obsN, count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val nL = PB.awaitObserved(obsN)("n").asInstanceOf[Long]
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val e2 = e.join(deg, Seq("src")).localCheckpoint() // (src, dst, deg)
+    val e2 = e.join(deg, Seq("src")).transform(PB.localCheckpoint) // (src, dst, deg)
     val dang = nodes.join(deg, nodes("v") === deg("src"), "left_anti")
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val n = lit(nL)
     var ranks = nodes
       .select(col("v"), (lit(1.0) / n.cast("double")).as("r"))
     (1 to iters).foreach { _ =>
       val (dm, contrib) = rankInflow(ranks, dang, e2)
-      ranks = org.apache.spark.sql.graftbridge.PlanBridge.freshLocalCheckpoint(
+      ranks = PB.freshLocalCheckpoint(
         nodes.crossJoin(broadcast(dm))
           .join(contrib, nodes("v") === contrib("dst"), "left")
           .select(col("v"),
@@ -248,16 +248,16 @@ object GraphOps {
     *
     * Output: (node, label), one row per node with ≥1 edge. */
   def labelProp(edges0: DataFrame, iters: Int = 3,
-                aCol: String = "a", bCol: String = "b"): DataFrame = {
+                aCol: String = "a", bCol: String = "b"): DataFrame = PB.scoped {
     require(iters >= 1 && iters <= 8, "iters must be in [1, 8] (unrolled rounds)")
     val W = org.apache.spark.sql.expressions.Window
     val sym = symmetric(canonEdges(edges0, aCol, bCol), "src", "dst")
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     var labels = sym.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("lbl")).localCheckpoint()
+      .select(col("v"), col("v").as("lbl")).transform(PB.localCheckpoint)
     val argmax = W.partitionBy("dst").orderBy(col("cnt").desc, col("lbl"))
     (1 to iters).foreach { _ =>
-      labels = org.apache.spark.sql.graftbridge.PlanBridge.freshLocalCheckpoint(
+      labels = PB.freshLocalCheckpoint(
         sym.join(labels, sym("src") === labels("v"))
           .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("cnt"))
           .withColumn("rn", row_number().over(argmax))
@@ -315,17 +315,17 @@ object GraphOps {
     * Output: (node, hub, authority), rounded to 6; each column sums to 1
     * over its support. */
   def hits(edges0: DataFrame, iters: Int = 3,
-           srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+           srcCol: String = "src", dstCol: String = "dst"): DataFrame = PB.scoped {
     require(iters >= 1 && iters <= 6, "iters must be in [1, 6] (unrolled rounds)")
     val W = org.apache.spark.sql.expressions.Window
     val e = edges0
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val nodes = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v"))).distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     // two-stage block fold over the node frame -> a 1-row total,
     // broadcast back; the single-partition stage reads <= FoldBlocks
     // block sums, never the node frame itself
@@ -338,7 +338,6 @@ object GraphOps {
     // louvain lesson), and the init scores are a plain select over the
     // materialized node frame (re-computing it per reference is a
     // narrow scan, not a join). Same float tree — bit-identical.
-    val PB = org.apache.spark.sql.graftbridge.PlanBridge
     val sizeHint = PB.measuredCheckpointSize(nodes).map(_ * 2L)
     // per-node ordered sum of the other endpoint's score, L1-normalized;
     // returns the plan + the shared intermediate to release post-action
@@ -365,18 +364,13 @@ object GraphOps {
     }
     var hub = nodes.select(col("v"), lit(1.0).as("s"))
     var auth = hub
-    var prevAuth: DataFrame = null
-    var prevHub: DataFrame = null
     (1 to iters).foreach { _ =>
       val (authPlan, fullA) = halfRound(hub, "src", "dst") // Σ hub(in-nbrs)
       val authS = PB.sharedLocalCheckpoint(authPlan, sizeHint)
       val (hubPlan, fullH) = halfRound(authS, "dst", "src") // Σ auth(out)
       val hubCk = PB.freshLocalCheckpoint(hubPlan)
-      PB.unpersistLocalCheckpoint(fullA)
-      PB.unpersistLocalCheckpoint(fullH)
-      if (prevAuth != null) PB.unpersistLocalCheckpoint(prevAuth)
-      if (prevHub != null) PB.unpersistLocalCheckpoint(prevHub)
-      prevAuth = authS; prevHub = hubCk
+      // the superseded round (a no-op for the plain init scores)
+      Seq(fullA, fullH, auth, hub).foreach(PB.release)
       auth = authS; hub = hubCk
     }
     hub.select(col("v"), col("s").as("h"))
@@ -445,12 +439,12 @@ object GraphOps {
     * clustering_coeff = 3·triangles/wedges).
     */
   def triangleStats(edges0: DataFrame,
-                    aCol: String = "a", bCol: String = "b"): DataFrame = {
+                    aCol: String = "a", bCol: String = "b"): DataFrame = PB.scoped {
     val e = edges0
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") < col("b")).distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val degs = e.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
     val wedges = e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
@@ -488,12 +482,12 @@ object GraphOps {
     * then one map-side-combined global aggregate. No windows, no
     * collects. */
   def degreeAssortativity(edges0: DataFrame, aCol: String = "a",
-                          bCol: String = "b"): DataFrame = {
+                          bCol: String = "b"): DataFrame = PB.scoped {
     val e = edges0
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") < col("b")).distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val degs = e.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
@@ -527,9 +521,9 @@ object GraphOps {
     * the adjacency never broadcasts, never windows. Output is the
     * surviving vertices with their residual degree. */
   def kCore(edges0: DataFrame, k: Int, rounds: Int = 4,
-            aCol: String = "a", bCol: String = "b"): DataFrame = {
+            aCol: String = "a", bCol: String = "b"): DataFrame = PB.scoped {
     var adj = adjacency(edges0, aCol, bCol)
-    for (_ <- 1 to rounds) adj = peel(adj, k).localCheckpoint()
+    for (_ <- 1 to rounds) adj = peel(adj, k).transform(PB.localCheckpoint)
     adj.groupBy(col("v").as("node")).agg(count(lit(1)).as("deg"))
   }
 
@@ -555,7 +549,7 @@ object GraphOps {
     * set-equality certificate applies directly. Keep the fixed-round
     * twin for the unrolled-SQL oracle face. */
   def kCoreFixpoint(edges0: DataFrame, k: Int, maxRounds: Int = 64,
-                    aCol: String = "a", bCol: String = "b"): DataFrame = {
+                    aCol: String = "a", bCol: String = "b"): DataFrame = PB.scoped {
     val adj = Dedup.iterateToEdgeFixpoint(adjacency(edges0, aCol, bCol),
       maxRounds, "kCoreFixpoint")(peel(_, k))
     adj.groupBy(col("v").as("node")).agg(count(lit(1)).as("deg"))
@@ -604,12 +598,12 @@ object GraphOps {
     * set, one map-side-combined pair aggregate, global top-k =
     * TakeOrdered. */
   def linkPredictRA(edges0: DataFrame, topK: Int = 50, aCol: String = "a",
-                    bCol: String = "b"): DataFrame = {
+                    bCol: String = "b"): DataFrame = PB.scoped {
     val e = edges0
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") < col("b")).distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val adj = symmetric(e, "m", "x")
     val deg = adj.groupBy(col("m")).agg(count(lit(1)).as("deg"))
     val wedges = adj.as("l").join(adj.as("r"),
@@ -686,15 +680,15 @@ object GraphOps {
     * the visited set; localCheckpoint truncates lineage per round.
     * Visited state is vertex-count-bounded. */
   def bfsHops(edges0: DataFrame, seeds: DataFrame, rounds: Int = 4,
-              aCol: String = "a", bCol: String = "b"): DataFrame = {
+              aCol: String = "a", bCol: String = "b"): DataFrame = PB.scoped {
     val adj = adjacency(edges0, aCol, bCol)
     var dist = bfsSeeds(seeds)
     var frontier = dist.select(col("node"))
     for (r <- 1 to rounds) {
-      val next = org.apache.spark.sql.graftbridge.PlanBridge.freshLocalCheckpoint(
+      val next = PB.freshLocalCheckpoint(
         expand(adj, frontier, dist))
       dist = dist.unionByName(next.withColumn("hops", lit(r.toLong)))
-        .localCheckpoint()
+        .transform(PB.localCheckpoint)
       frontier = next
     }
     dist
@@ -704,7 +698,7 @@ object GraphOps {
     * edge ids so the frontier join key types always agree. */
   private def bfsSeeds(seeds: DataFrame): DataFrame =
     seeds.select(col("node").cast("long").as("node"), lit(0L).as("hops"))
-      .distinct().localCheckpoint()
+      .distinct().transform(PB.localCheckpoint)
 
   /** One BFS frontier expansion: the neighbours of `frontier` (node)
     * over the (v, w) adjacency that hold no label in `dist` yet. */
@@ -725,7 +719,7 @@ object GraphOps {
     * `maxRounds` only guards against a pathological diameter. */
   def bfsHopsFixpoint(edges0: DataFrame, seeds: DataFrame,
                       maxRounds: Int = 4096,
-                      aCol: String = "a", bCol: String = "b"): DataFrame = {
+                      aCol: String = "a", bCol: String = "b"): DataFrame = PB.scoped {
     val adj = adjacency(edges0, aCol, bCol)
     var dist = bfsSeeds(seeds)
     var frontier = dist.select(col("node"))
@@ -733,12 +727,12 @@ object GraphOps {
     var frontierSize = frontier.count()
     while (frontierSize > 0 && r < maxRounds) {
       r += 1
-      val next = org.apache.spark.sql.graftbridge.PlanBridge.freshLocalCheckpoint(
+      val next = PB.freshLocalCheckpoint(
         expand(adj, frontier, dist))
       frontierSize = next.count()
       if (frontierSize > 0)
         dist = dist.unionByName(next.withColumn("hops", lit(r.toLong)))
-          .localCheckpoint()
+          .transform(PB.localCheckpoint)
       frontier = next
     }
     if (frontierSize > 0)
@@ -788,9 +782,9 @@ object GraphOps {
     *
     * Output: one row (n_edges, intra_edges, modularity). */
   def modularity(edges0: DataFrame, labels: DataFrame,
-                 aCol: String = "a", bCol: String = "b"): DataFrame = {
+                 aCol: String = "a", bCol: String = "b"): DataFrame = PB.scoped {
     val e = canonEdges(edges0, aCol, bCol)
-      .localCheckpoint() // reused by m, intra and the degree count
+      .transform(PB.localCheckpoint) // reused by m, intra and the degree count
     val l = labels.select(col("node"), col("label"))
     val m = e.agg(count(lit(1)).as("n_edges"))
     val intra = e
@@ -850,13 +844,13 @@ object GraphOps {
     * seed indicator joins once up front. */
   def personalizedPageRank(edges0: DataFrame, seeds: DataFrame,
                            iters: Int = 3, damping: Double = 0.85,
-                           srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+                           srcCol: String = "src", dstCol: String = "dst"): DataFrame = PB.scoped {
     require(iters >= 1, "iters must be >= 1")
     val e = edges0
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val nodes0 = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v"))).distinct()
     val sd = seeds.select(col("node").cast("long").as("v")).distinct()
@@ -868,17 +862,17 @@ object GraphOps {
       .select(col("v"),
         when(col("is_seed"), lit(1.0) / col("ns").cast("double"))
           .otherwise(lit(0.0)).as("p"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     // r18: same round-invariant folding as [[pageRank]] — out-degree
     // rides the checkpointed edge frame, the dangling-node set
     // materializes once, and the dm anchor is a literal 1-row range
     // (ns fed a broadcast-agg subtree per round). Floats unchanged.
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val e2 = e.join(deg, Seq("src")).localCheckpoint() // (src, dst, deg)
+    val e2 = e.join(deg, Seq("src")).transform(PB.localCheckpoint) // (src, dst, deg)
     val dang = nodes.select("v")
       .join(deg, nodes("v") === deg("src"), "left_anti")
-      .localCheckpoint()
-    var ranks = nodes.select(col("v"), col("p").as("r")).localCheckpoint()
+      .transform(PB.localCheckpoint)
+    var ranks = nodes.select(col("v"), col("p").as("r")).transform(PB.localCheckpoint)
     (1 to iters).foreach { _ =>
       val (dm, contrib) = rankInflow(ranks, dang, e2)
       ranks = nodes.crossJoin(broadcast(dm))
@@ -887,7 +881,7 @@ object GraphOps {
           ((lit(1.0) - lit(damping)) * col("p") +
             lit(damping) * (coalesce(col("c"), lit(0.0)) +
               col("dm") * col("p"))).as("r"))
-        .localCheckpoint()
+        .transform(PB.localCheckpoint)
     }
     ranks.select(col("v").as("node"), round(col("r"), 6).as("ppr"))
   }
@@ -947,12 +941,12 @@ object GraphOps {
     * middles at web scale), one edge-set semi-join, map-side-combined
     * counts. Degree-1 nodes hold lcc NULL (no wedge to close). */
   def localClusteringCoeff(edges0: DataFrame,
-                           aCol: String = "a", bCol: String = "b"): DataFrame = {
+                           aCol: String = "a", bCol: String = "b"): DataFrame = PB.scoped {
     val e = edges0
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") < col("b")).distinct()
-      .localCheckpoint() // read by adjacency, wedge close, and degree
+      .transform(PB.localCheckpoint) // read by adjacency, wedge close, and degree
     val adj = symmetric(e, "m", "x")
     val deg = adj.groupBy(col("m").as("node")).agg(count(lit(1)).as("deg"))
     val wedges = adj.as("l").join(adj.as("r"),
@@ -1010,10 +1004,10 @@ object GraphOps {
     * positive-gain move exists, gain_num the integer score (0 when
     * staying). */
   def louvainMove(edges0: DataFrame,
-                  aCol: String = "a", bCol: String = "b"): DataFrame = {
+                  aCol: String = "a", bCol: String = "b"): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     val e = canonEdges(edges0, aCol, bCol)
-      .localCheckpoint() // reused: m, degrees, both sym orientations
+      .transform(PB.localCheckpoint) // reused: m, degrees, both sym orientations
     val sym = symmetric(e, "v", "w")
     val deg = sym.groupBy("v").agg(count(lit(1)).as("k"))
     val m = e.agg(count(lit(1)).as("m"))
@@ -1097,12 +1091,9 @@ object GraphOps {
     *
     * Output: (node, community), every node of the edge frame. */
   def louvain(edges0: DataFrame, aCol: String = "a", bCol: String = "b",
-              maxSweeps: Int = 16): DataFrame = {
+              maxSweeps: Int = 16): DataFrame = PB.scoped {
     val (e, m) = louvainEdges(edges0, aCol, bCol)
-    val (labels, _) = louvainCore(e, m, maxSweeps)
-    // the labels read only the final fused checkpoint
-    org.apache.spark.sql.graftbridge.PlanBridge.unpersistLocalCheckpoint(e)
-    labels
+    louvainCore(e, m, maxSweeps)
   }
 
   /** The canonical edge frame of [[louvain]], materialized once — it is
@@ -1114,17 +1105,14 @@ object GraphOps {
     val obs = org.apache.spark.sql.Observation()
     val e = canonEdges(edges0, aCol, bCol)
       .observe(obs, count(lit(1)).as("m"))
-      .localCheckpoint()
-    (e, org.apache.spark.sql.graftbridge.PlanBridge
-      .awaitObserved(obs)("m").asInstanceOf[Long])
+      .transform(PB.localCheckpoint)
+    (e, PB.awaitObserved(obs)("m").asInstanceOf[Long])
   }
 
   /** [[louvain]] over an ALREADY-canonical, already-materialized edge
     * frame with m edges: unit weights, no loops. The degree aggregate
-    * IS the init labeling (deg's node set == sym's). Returns the labels
-    * and the final fused checkpoint they read. */
-  private def louvainCore(e: DataFrame, m: Long,
-                          maxSweeps: Int): (DataFrame, DataFrame) = {
+    * IS the init labeling (deg's node set == sym's). */
+  private def louvainCore(e: DataFrame, m: Long, maxSweeps: Int): DataFrame = {
     val sym = symmetric(e, "v", "u")
     louvainSweeps(e, sym, count(lit(1)), m,
       sym.groupBy("v").agg(count(lit(1)).as("k"))
@@ -1138,8 +1126,7 @@ object GraphOps {
     * `sum(col("w"))`), `total` the total edge weight of the gain and the
     * gate (m or W), `init` the singleton labeling (node, comm, k), and
     * `edges` the materialized edge frame the first size hint is measured
-    * on. Returns the converged (node, comm) labels and the fused
-    * checkpoint they read.
+    * on. Returns the converged (node, comm) labels.
     *
     * r17 sweep-cost profile (sf1): wall was dominated by per-sweep JOB
     * count and repeated labels⋈deg joins, not data volume — labels CARRY
@@ -1168,9 +1155,8 @@ object GraphOps {
     * oracle-identical by construction. */
   private def louvainSweeps(edges: DataFrame, sym: DataFrame,
                             kvcAgg: Column, total: Long, init: DataFrame,
-                            maxSweeps: Int): (DataFrame, DataFrame) = {
+                            maxSweeps: Int): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val PB = org.apache.spark.sql.graftbridge.PlanBridge
     val numShufflePartitions =
       edges.sparkSession.sessionState.conf.numShufflePartitions
     // Size hint for the round frames inside fuse: the lazy checkpoints'
@@ -1230,8 +1216,7 @@ object GraphOps {
           // bound the checkpoint's partition count (the union stacks both
           // branches' partitions every sweep); coalesce is narrow
           .coalesce(numShufflePartitions))
-      PB.unpersistLocalCheckpoint(lab)
-      PB.unpersistLocalCheckpoint(lab2)
+      Seq(lab, lab2).foreach(PB.release)
       val labelsF = fused.filter(col("tag") === 0)
         .select(col("x").as("node"), col("y").as("comm"), col("z4").as("k"))
       val kvcF = fused.filter(col("tag") === 1)
@@ -1285,16 +1270,16 @@ object GraphOps {
     while (continue && sweeps < maxSweeps) {
       val st2 = fuse(sweep(st._1, st._2))
       if (st2._3 > st._3) {
-        PB.unpersistLocalCheckpoint(st._4)
+        PB.release(st._4)
         st = st2; sweeps += 1
       } else {
-        PB.unpersistLocalCheckpoint(st2._4)
+        PB.release(st2._4)
         continue = false
       }
     }
     // the final fused checkpoint stays live — it IS the returned labels
     // (its kvc rows ride along; edge-frame-bounded, freed with the frame)
-    (st._1.select(col("node"), col("comm")), st._4)
+    st._1.select(col("node"), col("comm"))
   }
 
   /** Contract a community assignment onto the quotient graph — Louvain's
@@ -1327,8 +1312,7 @@ object GraphOps {
     * (contraction weights are counts). Output: (node, comm). */
   def louvainWeighted(edges0: DataFrame, aCol: String = "ca",
                       bCol: String = "cb", wCol: String = "weight",
-                      maxSweeps: Int = 16): DataFrame = {
-    val PB = org.apache.spark.sql.graftbridge.PlanBridge
+                      maxSweeps: Int = 16): DataFrame = PB.scoped {
     val e0Obs = org.apache.spark.sql.Observation()
     val e0 = edges0
       .select(least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
@@ -1336,7 +1320,7 @@ object GraphOps {
         col(wCol).cast("long").as("w"))
       .groupBy("a", "b").agg(sum(col("w")).as("w"))
       .observe(e0Obs, coalesce(sum(col("w")), lit(0L)).as("bw"))
-      .localCheckpoint() // reused: W, degrees, intra scores, every sweep
+      .transform(PB.localCheckpoint) // reused: W, degrees, intra scores, every sweep
     val plain = e0.filter(col("a") =!= col("b"))
     val loops = e0.filter(col("a") === col("b"))
       .select(col("a").as("v"), col("w").as("lw"))
@@ -1351,15 +1335,13 @@ object GraphOps {
     // comparison and is left out. Init labeling = weighted degree:
     // incident non-loop weight + 2×loop weight (nodes carrying ONLY a
     // loop still need a row — full outer).
-    val (labels, _) = louvainSweeps(e0, sym, sum(col("w")), bigW,
+    louvainSweeps(e0, sym, sum(col("w")), bigW,
       sym.groupBy("v").agg(sum(col("w")).as("kp"))
         .join(loops, Seq("v"), "full_outer")
         .select(col("v").as("node"), col("v").as("comm"),
           (coalesce(col("kp"), lit(0L)) + lit(2L) * coalesce(col("lw"), lit(0L)))
             .as("k")),
       maxSweeps)
-    PB.unpersistLocalCheckpoint(e0)
-    labels
   }
 
   /** TWO-LEVEL Louvain: phase 1 on the node graph, contract communities
@@ -1375,21 +1357,17 @@ object GraphOps {
     * level-2 community labels (min level-1 community id convention via
     * the weighted sweep's label space). */
   def louvainTwoLevel(edges0: DataFrame, aCol: String = "a",
-                      bCol: String = "b", maxSweeps: Int = 16): DataFrame = {
-    val PB = org.apache.spark.sql.graftbridge.PlanBridge
+                      bCol: String = "b", maxSweeps: Int = 16): DataFrame = PB.scoped {
     // r19: canonicalize + materialize the edge frame ONCE and share it
     // between level 1 and the contraction — the r18 shape evaluated the
     // caller's edge DERIVATION twice (louvain's internal checkpoint and
     // louvainContract's re-canonicalization); for q_louvain2 that
     // derivation is the whole near-dup LSH + cosine-verify chain.
     val (e, m) = louvainEdges(edges0, aCol, bCol)
-    val (labels1, fused1) = louvainCore(e, m, maxSweeps)
-    val l1 = labels1.localCheckpoint()
-    PB.unpersistLocalCheckpoint(fused1)
+    val l1 = louvainCore(e, m, maxSweeps).transform(PB.localCheckpoint)
     // louvainWeighted materializes the quotient before it returns
     val l2 = louvainWeighted(louvainContractCore(e, l1), "ca", "cb",
       "weight", maxSweeps)
-    PB.unpersistLocalCheckpoint(e)
     l1.join(l2.select(col("node").as("comm"), col("comm").as("comm2")),
         Seq("comm"))
       .select(col("node"), col("comm2").as("comm"))

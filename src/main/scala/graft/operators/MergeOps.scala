@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{broadcast, col, count, lead, lit, round, row_number, sum, when}
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 /** gedixr `merge_gdf` re-expressed (reference: gedixr/xr.py:56-112): a
   * suffix join of the L2A and L2B frames on a composite key (the reference
@@ -270,7 +271,7 @@ object MergeOps {
     * is_match). */
   def fellegiSunter(pairs: DataFrame, featCols: Seq[String], rounds: Int = 2,
                     p0: Double = 0.1, m0: Double = 0.8,
-                    u0: Double = 0.2): DataFrame = {
+                    u0: Double = 0.2): DataFrame = PB.scoped {
     require(featCols.nonEmpty && featCols.size <= 6,
       "fellegiSunter: 1..6 boolean compare fields")
     require(rounds >= 1 && rounds <= 6, "rounds must be in [1, 6] (unrolled)")
@@ -283,7 +284,7 @@ object MergeOps {
       .groupBy(featCols.map(c => col(c).cast("boolean").as(c)): _*)
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
       .withColumn("pid", pid)
-      .localCheckpoint() // ≤ 2^f rows; every EM round reads it
+      .transform(PB.localCheckpoint) // ≤ 2^f rows; every EM round reads it
     var params: DataFrame = pat.sparkSession.range(1).select(
       lit(p0).as("p") +:
         idx.flatMap(i => Seq(lit(m0).as(s"m$i"), lit(u0).as(s"u$i"))): _*)
@@ -321,7 +322,7 @@ object MergeOps {
         .select((col("sw") / col("nn").cast("double")).as("p") +:
           idx.flatMap(i => Seq((col(s"swf$i") / col("sw")).as(s"m$i"),
             (col(s"suf$i") / col("su")).as(s"u$i"))): _*)
-        .localCheckpoint() // 1 row
+        .transform(PB.localCheckpoint) // 1 row
     }
     scored(params).select(featCols.map(col) :+ col("cnt").as("n_pairs") :+
       org.apache.spark.sql.functions.round(col("w"), 6).as("match_weight") :+

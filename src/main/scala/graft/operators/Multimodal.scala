@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 /** Multimodal column plumbing (SURVEY §2.3): image/audio/video payloads are
   * opaque `binary` columns with typed metadata, processed per-partition so
@@ -223,9 +224,9 @@ object Multimodal {
   /** Shared-fingerprint pair join (the tail both dedup variants share):
     * distinct (media, fh) → fh-keyed self-join → per-pair shared count ≥
     * `minShared` + overlap = shared/min(|A|,|B|). */
-  private def sharedFingerprintPairs(fh0: DataFrame, minShared: Long): DataFrame = {
+  private def sharedFingerprintPairs(fh0: DataFrame, minShared: Long): DataFrame = PB.scoped {
     val fh = fh0.select(col("media_id"), col("fh")).distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val cnt = fh.groupBy(col("media_id")).agg(count(lit(1)).as("nf"))
     val pairs = fh.as("x")
       .join(fh.as("y"), col("x.fh") === col("y.fh") &&

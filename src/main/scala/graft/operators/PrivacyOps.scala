@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 import graft.functions.TextFunctions
 
@@ -41,14 +42,14 @@ object PrivacyOps {
     * the release format.
     *
     * Output: (quasi..., n_rows, suppressed), quasi columns as strings. */
-  def kAnonymize(df: DataFrame, quasiCols: Seq[String], k: Int): DataFrame = {
+  def kAnonymize(df: DataFrame, quasiCols: Seq[String], k: Int): DataFrame = PB.scoped {
     require(quasiCols.nonEmpty, "kAnonymize needs at least one quasi column")
     require(k >= 2, "k must be >= 2 (k=1 releases everything)")
     val classes = df
       .groupBy(quasiCols.map(c =>
         coalesce(col(c).cast("string"), lit("null")).as(c)): _*)
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // class frame (domain-bounded): guard + release
+      .transform(PB.localCheckpoint) // class frame (domain-bounded): guard + release
     val starred = classes.filter(col("n") >= k &&
       quasiCols.map(c => col(c) === "*").reduce(_ || _)).limit(1).count()
     require(starred == 0L,
@@ -81,7 +82,7 @@ object PrivacyOps {
     * Output: (quasi..., n_rows, n_sensitive, suppressed); n_sensitive is
     * null on the residual row. */
   def lDiversify(df: DataFrame, quasiCols: Seq[String], sensitiveCol: String,
-                 l: Int): DataFrame = {
+                 l: Int): DataFrame = PB.scoped {
     require(quasiCols.nonEmpty, "lDiversify needs at least one quasi column")
     require(l >= 2, "l must be >= 2 (l=1 releases everything)")
     val cells = df
@@ -92,7 +93,7 @@ object PrivacyOps {
     val classes = cells
       .groupBy(quasiCols.map(col): _*)
       .agg(sum(col("cn")).as("n"), count(lit(1)).as("nsv"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val starred = classes.filter(col("nsv") >= l &&
       quasiCols.map(c => col(c) === "*").reduce(_ || _)).limit(1).count()
     require(starred == 0L,
@@ -224,7 +225,7 @@ object PrivacyOps {
     * from a broadcast cross join of the class frame with the category
     * frame. No corpus re-scan, no window over doc rows. */
   def tCloseness(df: DataFrame, quasiCols: Seq[String], catCol: Column,
-                 t: Double): DataFrame = {
+                 t: Double): DataFrame = PB.scoped {
     require(quasiCols.nonEmpty, "tCloseness needs at least one quasi column")
     val W = org.apache.spark.sql.expressions.Window
     val cells = df
@@ -232,7 +233,7 @@ object PrivacyOps {
         coalesce(col(c).cast("string"), lit("null")).as(c)) :+
         catCol.cast("long").as("cat"): _*)
       .agg(count(lit(1)).as("n_cj"))
-      .localCheckpoint() // cell frame (class × category domain): reused 3×
+      .transform(PB.localCheckpoint) // cell frame (class × category domain): reused 3×
     val classes = cells.groupBy(quasiCols.map(col): _*)
       .agg(sum(col("n_cj")).as("n_c"))
     val cats = cells.groupBy(col("cat")).agg(sum(col("n_cj")).as("n_j"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 import graft.functions.VectorFunctions
 
@@ -358,23 +359,14 @@ object Similarity {
     * [[latticeSums]] (order-free, engine-exact) divided once in double
     * and rounded to float (IEEE round-to-nearest on both engines), so
     * the trained quantizer is oracle-expressible; empty cells keep
-    * their previous centroid (the [[latticeCentroids]] rule).
-    *
-    * OWNERSHIP (r18): for iters >= 1 the returned frame is a
-    * localCheckpoint (nCells rows) whose blocks live until the caller
-    * releases them — intermediate rounds are freed inside the loop, the
-    * FINAL frame is the caller's to
-    * [[org.apache.spark.sql.graftbridge.PlanBridge.unpersistLocalCheckpoint]]
-    * once its consumers have materialized ([[writeIvfIndex]] and
-    * [[ivfTopKTrained]] both do; a bench loop that skipped this leaked
-    * one nCells-row block set per invocation for the session lifetime).
-    * iters = 0 returns the plain seed frame — nothing to release. */
+    * their previous centroid (the [[latticeCentroids]] rule). */
   def trainIvfCentroids(candidates: DataFrame, nCells: Int, iters: Int,
                         pCoarse: Int = TwoLevelCoarseProbes,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame =
+                        vecCol: String = "embedding"): DataFrame = PB.scoped {
     trainIvfCentroidsWithCoarse(candidates, nCells, iters, pCoarse,
       idCol, vecCol)._1
+  }
 
   /** [[trainIvfCentroids]] returning the trained frame AND its collected
     * coarse codebook, so consumers (final probe pass, index writer) skip
@@ -396,7 +388,6 @@ object Similarity {
       vecCol: String = "embedding"): (DataFrame, Seq[Seq[Float]]) = {
     require(nCells >= 1 && iters >= 0,
       "trainIvfCentroids needs nCells >= 1 and iters >= 0")
-    val PB = org.apache.spark.sql.graftbridge.PlanBridge
     // seeds stay UNcheckpointed: their lineage is one filter+select over
     // the input (cheap to recompute), and checkpointing them leaked the
     // seed blocks for iters = 0 callers (r17 ADVICE)
@@ -430,10 +421,10 @@ object Similarity {
           x => x.getField("comp")).as("_fvec"))
         .observe(obs, collect_list(when(col("_fid") <= fidCut,
           struct(col("_fid"), col("_fvec")))).as("coarse"))
-        .localCheckpoint() // nCells rows — cuts the per-iteration lineage
+        .transform(PB.localCheckpoint) // nCells rows — cuts the per-iteration lineage
       // no-op on round 1 (the seeds are not a checkpoint); frees every
       // superseded round after that
-      PB.unpersistLocalCheckpoint(cents)
+      PB.release(cents)
       cents = next
       coarse = PB.awaitObserved(obs)("coarse")
         .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
@@ -464,7 +455,7 @@ object Similarity {
   def writeIvfIndex(candidates: DataFrame, dir: String, targetCell: Long = 32L,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     trainIters: Int = 0,
-                    pCoarse: Int = TwoLevelCoarseProbes): Int = {
+                    pCoarse: Int = TwoLevelCoarseProbes): Int = PB.scoped {
     val nRows = candidates.count()
     val nCells = derivedCentroids(nRows, targetCell)
     // trainIters > 0 composes the Lloyd trainer into the build: the
@@ -507,10 +498,6 @@ object Similarity {
       .select(col("_fid").as(idCol), col("_fvec").as(vecCol))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/_centroids")
-    // both consumers of the trained frame (index write + sidecar write)
-    // have materialized — release its checkpoint blocks (no-op untrained)
-    if (trainIters > 0)
-      org.apache.spark.sql.graftbridge.PlanBridge.unpersistLocalCheckpoint(cents)
     // _meta: the BUILD-TIME geometry. The probe reads nCells from here
     // rather than inferring it from the sidecar row count — a gapped id
     // space seeds FEWER than nCells centroids, so inference would
@@ -705,7 +692,7 @@ object Similarity {
                     pCoarse: Int = TwoLevelCoarseProbes,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
-                    maxQueryBatch: Int = MaxIvfQueryBatch): DataFrame = {
+                    maxQueryBatch: Int = MaxIvfQueryBatch): DataFrame = PB.scoped {
     val cents = spark.read.parquet(s"$dir/_centroids")
       .select(col(idCol).cast("long").as("_fid"), col(vecCol).as("_fvec"))
     // build-time geometry from _meta; a pre-r17 layout has no _meta and
@@ -727,7 +714,7 @@ object Similarity {
         pCoarse, idCol, vecCol)
       .select(col("id").as("qid"), col("vec").as("qvec"), col("cell"))
       .observe(qpObs, count(lit(1)).as("n"))
-      .localCheckpoint() // read for the batch-size gate AND the probe join
+      .transform(PB.localCheckpoint) // read for the batch-size gate AND the probe join
     val nProbes = org.apache.spark.sql.graftbridge.PlanBridge
       .awaitObserved(qpObs)("n").asInstanceOf[Long]
     // a candidate lives in exactly one home cell and a query's probed
@@ -796,8 +783,7 @@ object Similarity {
     // projection only — (id, cell, rn), three longs a row, never the
     // vectors (a corpus-vector materialization was measured a wash in
     // knnGraph; this one is ~24 B/row·nprobe).
-    val slim = org.apache.spark.sql.graftbridge.PlanBridge
-      .freshLocalCheckpoint(asg.select(col("id"), col("cell"), col("rn")))
+    val slim = PB.freshLocalCheckpoint(asg.select(col("id"), col("cell"), col("rn")))
     val cells = slim.filter(col("rn") === 1).select(col("id"), col("cell"))
     val qids = queries.select(col(idCol).as("qid"))
     val qcells = slim.join(broadcast(qids), col("id") === col("qid"))
@@ -825,11 +811,11 @@ object Similarity {
   def ivfTopK(candidates: DataFrame, queries: DataFrame, k: Int,
               nCentroids: Int = 16, nprobe: Int = 4,
               idCol: String = "vec_id", vecCol: String = "embedding",
-              pCoarse: Int = TwoLevelCoarseProbes): DataFrame =
+              pCoarse: Int = TwoLevelCoarseProbes): DataFrame = PB.scoped(
     scorePairs(
       ivfCandidatePairs(candidates, queries, nCentroids, nprobe, idCol,
         vecCol, pCoarse),
-      candidates, queries, k, idCol, vecCol)
+      candidates, queries, k, idCol, vecCol))
 
   /** [[ivfTopK]] with a TRAINED fine quantizer: `trainIters` Lloyd
     * update steps ([[trainIvfCentroids]]) replace the low-id seed
@@ -841,19 +827,17 @@ object Similarity {
   def ivfTopKTrained(candidates: DataFrame, queries: DataFrame, k: Int,
                      nCentroids: Int, nprobe: Int = 4, trainIters: Int = 1,
                      idCol: String = "vec_id", vecCol: String = "embedding",
-                     pCoarse: Int = TwoLevelCoarseProbes): DataFrame = {
+                     pCoarse: Int = TwoLevelCoarseProbes): DataFrame = PB.scoped {
     require(nCentroids >= 1 && nprobe >= 1,
       "ivfTopKTrained needs positive nCentroids / nprobe")
     val (cents, coarse) = trainIvfCentroidsWithCoarse(candidates, nCentroids,
       trainIters, pCoarse, idCol, vecCol)
     val asg = twoLevelProbesWithCoarse(coarse, cents, candidates, nprobe,
       pCoarse, idCol, vecCol)
-    val pairs = ivfPairsFromAsg(asg, queries, idCol)
-    // ivfPairsFromAsg EAGERLY checkpointed the slim assignment, the only
-    // consumer of the trained frame — release its blocks now (no-op at
-    // trainIters = 0, where the seeds are not a checkpoint)
-    org.apache.spark.sql.graftbridge.PlanBridge.unpersistLocalCheckpoint(cents)
-    scorePairs(pairs, candidates, queries, k, idCol, vecCol)
+    // ivfPairsFromAsg EAGERLY checkpoints the slim assignment, the only
+    // consumer of the trained frame, so the scope releases the latter
+    scorePairs(ivfPairsFromAsg(asg, queries, idCol), candidates, queries,
+      k, idCol, vecCol)
   }
 
   /** LSH-bucketed ANN: candidates that share >= 1 band key with a query are
@@ -1578,7 +1562,7 @@ object Similarity {
     * output. */
   def mmrRerank(ranked: DataFrame, candidates: DataFrame, k: Int,
                 lambdaTenths: Int = 7, idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
+                vecCol: String = "embedding"): DataFrame = PB.scoped {
     import org.apache.spark.sql.expressions.Window
     require(lambdaTenths >= 0 && lambdaTenths <= 10,
       s"lambdaTenths must be in [0,10], got $lambdaTenths")
@@ -1591,12 +1575,11 @@ object Similarity {
     // whole stage-1 retriever — un-checkpointed, the corpus scan + score
     // + top-k window re-evaluated per consumer (measured: q_mmr_rerank
     // spent most of its 42 jobs re-running cosineTopK). One eager
-    // checkpoint of the |queries|·n-row frame; blocks released before
-    // return.
+    // checkpoint of the |queries|·n-row frame.
     val cand = ranked
       .select(col("qid"), col("rank"), col("vec_id"),
         micro(col("rel")).as("relu"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val vu = candidates.select(col(idCol).as("u"), col(vecCol).as("uvec"))
     val vv = candidates.select(col(idCol).as("v"), col(vecCol).as("vvec"))
     val sim = cand.select(col("qid"), col("vec_id").as("u"))
@@ -1606,7 +1589,7 @@ object Similarity {
       .select(col("qid"), col("u"), col("v"),
         micro(round(VectorFunctions.cosine(col("uvec"), col("vvec")), 6))
           .as("su"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     def score(sc: org.apache.spark.sql.Column) =
       (sc.cast("double") / lit(10000000.0)).as("mmr_score")
     var sel = cand.filter(col("rank") === 1)
@@ -1633,16 +1616,12 @@ object Similarity {
       sel = sel.unionByName(scored
         .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
         .select(col("qid"), lit(t).as("step"), col("vec_id"), col("scu"))
-        ).localCheckpoint()
+        ).transform(PB.localCheckpoint)
       // the superseded step's rows are materialized INTO the new
       // checkpoint — release its blocks (no-op on step 2: sel1 is not a
       // checkpoint)
-      org.apache.spark.sql.graftbridge.PlanBridge
-        .unpersistLocalCheckpoint(prevSel)
+      PB.release(prevSel)
     }
-    // sel is self-contained now — the sim and cand blocks are garbage
-    org.apache.spark.sql.graftbridge.PlanBridge.unpersistLocalCheckpoint(sim)
-    org.apache.spark.sql.graftbridge.PlanBridge.unpersistLocalCheckpoint(cand)
     sel.select(col("qid"), col("step"), col("vec_id"), score(col("scu")))
   }
 
@@ -1708,7 +1687,7 @@ object Similarity {
     * Inputs carry (qid, rank, vec_id). Output: one row (n_queries,
     * n_hits, recall_at_k, mrr), floats rounded 6. */
   def retrievalMetrics(truth: DataFrame, approx: DataFrame,
-                       k: Int): DataFrame = {
+                       k: Int): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     // t feeds TWO consumers (hits + the n_truth denominator groupBy); no
     // DataFrame CSE means the truth retriever's whole subtree (corpus
@@ -1717,11 +1696,11 @@ object Similarity {
     // materialized by the hits checkpoint's action, read by the final
     // action's groupBy; one evaluation, zero extra jobs (an EAGER
     // checkpoint here measured +0.15-0.2 s/query at sf0.1 — pure action
-    // overhead). Same accepted tiny-block lifetime as hits below.
-    val t = org.apache.spark.sql.graftbridge.PlanBridge.sharedLocalCheckpoint(
+    // overhead).
+    val t = PB.sharedLocalCheckpoint(
       truth.select(col("qid"), col("vec_id"), col("rank").as("t_rank")))
     val a = approx.select(col("qid"), col("vec_id"), col("rank").as("a_rank"))
-    val hits = t.join(a, Seq("qid", "vec_id")).localCheckpoint()
+    val hits = t.join(a, Seq("qid", "vec_id")).transform(PB.localCheckpoint)
     // recall denominator = ACTUAL truth-list sizes (a corpus smaller than
     // k would otherwise cap recall below 1 even for a perfect retriever)
     val perQ = t.groupBy("qid").agg(count(lit(1)).as("n_truth"))
@@ -2079,7 +2058,7 @@ object Similarity {
                 nCentroids: Int = 16, nprobe: Int = 4,
                 m: Int = 4, nCodes: Int = 8,
                 idCol: String = "vec_id", vecCol: String = "embedding",
-                maxQueryBatch: Int = MaxPqQueryBatch): DataFrame = {
+                maxQueryBatch: Int = MaxPqQueryBatch): DataFrame = PB.scoped {
     require(maxQueryBatch > 0, "maxQueryBatch must be positive")
     val cb = codebook(candidates, nCodes, idCol, vecCol)
     val dims = cb.head._2.length
@@ -2100,44 +2079,45 @@ object Similarity {
         .join(codes, "vec_id")
         .join(adcLutFrame(queries, cb, m, sub, idCol, vecCol), "qid")
         .withColumn("adc_dist", adcProbeSum(m))
-      return TopK.perGroupTopK(scored,
-          groupCols = Seq(col("qid")),
-          order = Seq(col("adc_dist").asc, col("vec_id")),
-          k = k, salt = col("vec_id"), rankCol = "rank")
-        .select(col("qid"), col("rank"), col("vec_id"),
-          round(col("adc_dist"), 6).as("adc_dist"))
-    }
-    val qs = queries
-      .select(col(idCol).cast("long"), col(vecCol))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    chunkedUnion(qs, maxQueryBatch) { chunk =>
-      val adc = (0 until m).map { j =>
-        val lutMap: Map[Long, Seq[Double]] = chunk.map { case (qid, qv) =>
-          qid -> cb.map { case (_, cwv) =>
-            subDot(qv, qv, j * sub, sub) -
-              2.0 * subDot(qv, cwv, j * sub, sub) +
-              subDot(cwv, cwv, j * sub, sub)
-          }.toSeq
-        }.toMap
-        element_at(element_at(typedlit(lutMap), col("qid")),
-          col(s"code_$j").cast("int") + 1)
-      }.reduceLeft(_ + _)
-      // single-chunk (the common case) keeps the original plan shape;
-      // multi-chunk restricts the pair frame to the chunk's qids so each
-      // chunk's join degree is bounded by its own queries
-      val pairs = if (qs.length <= maxQueryBatch) candPairs
-        else candPairs.filter(col("qid").isin(chunk.map(_._1).toIndexedSeq: _*))
-      val scored = pairs
-        .join(codes, "vec_id")
-        .withColumn("adc_dist", adc)
       TopK.perGroupTopK(scored,
           groupCols = Seq(col("qid")),
           order = Seq(col("adc_dist").asc, col("vec_id")),
           k = k, salt = col("vec_id"), rankCol = "rank")
         .select(col("qid"), col("rank"), col("vec_id"),
           round(col("adc_dist"), 6).as("adc_dist"))
+    } else {
+      val qs = queries
+        .select(col(idCol).cast("long"), col(vecCol))
+        .collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+        .sortBy(_._1)
+      chunkedUnion(qs, maxQueryBatch) { chunk =>
+        val adc = (0 until m).map { j =>
+          val lutMap: Map[Long, Seq[Double]] = chunk.map { case (qid, qv) =>
+            qid -> cb.map { case (_, cwv) =>
+              subDot(qv, qv, j * sub, sub) -
+                2.0 * subDot(qv, cwv, j * sub, sub) +
+                subDot(cwv, cwv, j * sub, sub)
+            }.toSeq
+          }.toMap
+          element_at(element_at(typedlit(lutMap), col("qid")),
+            col(s"code_$j").cast("int") + 1)
+        }.reduceLeft(_ + _)
+        // single-chunk (the common case) keeps the original plan shape;
+        // multi-chunk restricts the pair frame to the chunk's qids so each
+        // chunk's join degree is bounded by its own queries
+        val pairs = if (qs.length <= maxQueryBatch) candPairs
+          else candPairs.filter(col("qid").isin(chunk.map(_._1).toIndexedSeq: _*))
+        val scored = pairs
+          .join(codes, "vec_id")
+          .withColumn("adc_dist", adc)
+        TopK.perGroupTopK(scored,
+            groupCols = Seq(col("qid")),
+            order = Seq(col("adc_dist").asc, col("vec_id")),
+            k = k, salt = col("vec_id"), rankCol = "rank")
+          .select(col("qid"), col("rank"), col("vec_id"),
+            round(col("adc_dist"), 6).as("adc_dist"))
+      }
     }
   }
 
@@ -2157,7 +2137,7 @@ object Similarity {
     * pathologically hot cell is the same skew case as a hot LSH bucket —
     * cap it or re-cluster with more centroids. */
   def semDedup(candidates: DataFrame, nCentroids: Int, tau: Double,
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = PB.scoped {
     import VectorFunctions.cosine
     // TWO-LEVEL assignment (see knnGraph — same scale argument); three
     // consumers read it (both self-join sides + the final select), so
@@ -2165,7 +2145,7 @@ object Similarity {
     val members = twoLevelProbes(candidates, nCentroids, 1,
         idCol = idCol, vecCol = vecCol)
       .select(col("id"), col("cell"), col("vec"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val dup = members.as("x").join(members.as("y"),
         col("x.cell") === col("y.cell") && col("y.id") < col("x.id"))
       .filter(cosine(col("x.vec"), col("y.vec")) >= tau)
@@ -2268,11 +2248,11 @@ object Similarity {
     * All-integer: concordant/discordant are exact pair counts (ties
     * impossible — ranks are distinct within a list), one final division
     * tree. Pair space is k²-bounded per query — never corpus-scaled. */
-  def kendallTau(a: DataFrame, b: DataFrame): DataFrame = {
+  def kendallTau(a: DataFrame, b: DataFrame): DataFrame = PB.scoped {
     val common = a.select(col("qid"), col("vec_id"), col("rank").as("ra"))
       .join(b.select(col("qid"), col("vec_id"), col("rank").as("rb")),
         Seq("qid", "vec_id"))
-      .localCheckpoint() // both pair sides read it
+      .transform(PB.localCheckpoint) // both pair sides read it
     val pairs = common.select(col("qid"), col("vec_id").as("id1"),
         col("ra").as("ra1"), col("rb").as("rb1"))
       .join(common.select(col("qid"), col("vec_id").as("id2"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 /** 2-D Pareto-frontier (skyline) operator (SURVEY §2.2): the rows not
   * dominated by any other row, where q dominates p when q is no worse in
@@ -35,7 +36,7 @@ import org.apache.spark.sql.functions._
 object SkylineOps {
 
   def skyline2D(df: DataFrame, minCol: String, maxCol: String,
-                numPartitions: Int = 8): DataFrame = {
+                numPartitions: Int = 8): DataFrame = PB.scoped {
     // the frontier compares maxCol as int64 — a fractional type would be
     // silently truncated, changing dominance for rows that differ only in
     // the fraction; fail loudly instead
@@ -59,7 +60,7 @@ object SkylineOps {
       .agg(max(col(maxCol).cast("long")).as("_msize"))
       .repartitionByRange(numPartitions, col("_price"))
       .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val wLocal = Window.partitionBy(col("_pid")).orderBy(col("_price"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = ranged.withColumn("_lmax", max(col("_msize")).over(wLocal))

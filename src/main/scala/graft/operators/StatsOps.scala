@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 /** Robust / order-statistics operators (SURVEY §2.2).
   *
@@ -58,7 +59,7 @@ object StatsOps {
     * frame is tiny by construction, so the single-task window is bounded
     * by the domain product, and the fold order is total — MI doubles are
     * bit-identical across engines. */
-  def mutualInfo(df: DataFrame, xCol: String, yCol: String): DataFrame = {
+  def mutualInfo(df: DataFrame, xCol: String, yCol: String): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     // Null categories are EXCLUDED — from n too. Without this filter a
     // null-x/y cell never matches the marginal equi-joins (null keys
@@ -71,7 +72,7 @@ object StatsOps {
     val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("x"), col(yCol).as("y"))
       .agg(count(lit(1)).as("c_xy"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val xm = cells.groupBy(col("x")).agg(sum(col("c_xy")).as("c_x"))
     val ym = cells.groupBy(col("y")).agg(sum(col("c_xy")).as("c_y"))
     val n = cells.agg(sum(col("c_xy")).as("n"))
@@ -104,13 +105,13 @@ object StatsOps {
     * (the contingency groupBy, checkpointed); every term is single-op
     * IEEE arithmetic on exact integer counts; the grid sum runs as an
     * ordered cumsum, so the statistic is bit-identical across engines. */
-  def chiSquare(df: DataFrame, xCol: String, yCol: String): DataFrame = {
+  def chiSquare(df: DataFrame, xCol: String, yCol: String): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     // null categories excluded, n included — same rationale as mutualInfo
     val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("x"), col(yCol).as("y"))
       .agg(count(lit(1)).as("c_xy"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val xm = cells.groupBy(col("x")).agg(sum(col("c_xy")).as("c_x"))
     val ym = cells.groupBy(col("y")).agg(sum(col("c_xy")).as("c_y"))
     val n = cells.agg(sum(col("c_xy")).as("n"))
@@ -241,7 +242,7 @@ object StatsOps {
     */
   def ksDistance(df: DataFrame, valueCol: String, groupCol: String,
                  groupA: String, groupB: String,
-                 numPartitions: Int = 8): DataFrame = {
+                 numPartitions: Int = 8): DataFrame = PB.scoped {
     require(groupA != groupB,
       s"ksDistance compares two DIFFERENT groups; both sides are '$groupA'")
     val W = org.apache.spark.sql.expressions.Window
@@ -262,7 +263,7 @@ object StatsOps {
       .agg(sum(col("ia")).as("ca"), sum(col("ib")).as("cb"))
       .repartitionByRange(numPartitions, col("v"))
       .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val wLoc = W.partitionBy(col("_pid")).orderBy(col("v"))
       .rowsBetween(W.unboundedPreceding, W.currentRow)
     val local = ranged
@@ -301,12 +302,12 @@ object StatsOps {
     * zeros (document the convention; resample first for zero-filled
     * semantics). */
   def autocorr(df: DataFrame, groupCol: String, tsCol: String,
-               maxLag: Int = 3): DataFrame = {
+               maxLag: Int = 3): DataFrame = PB.scoped {
     require(maxLag >= 1, "maxLag must be >= 1")
     val daily = df.groupBy(col(groupCol).as("g"),
         to_date(col(tsCol)).as("day"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val lags = (1 to maxLag).map { k =>
       val joined = daily.as("x").join(daily.as("y"),
         col("x.g") === col("y.g") &&
@@ -722,17 +723,17 @@ object StatsOps {
     * Output: (item_a, item_b, n_co, n_a, n_b, lift), item_a < item_b. */
   def marketBasket(df: DataFrame, basketCol: String, itemCol: String,
                    minCo: Long = 2, maxBasket: Int = 100,
-                   k: Int = 50): DataFrame = {
+                   k: Int = 50): DataFrame = PB.scoped {
     require(maxBasket >= 2, "maxBasket must be >= 2")
     val items = df
       .select(col(basketCol).as("bk"), col(itemCol).cast("long").as("it"))
       .filter(col("bk").isNotNull && col("it").isNotNull).distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val kept = items
       .join(items.groupBy("bk").agg(count(lit(1)).as("bs"))
         .filter(col("bs") <= maxBasket), Seq("bk"))
       .select(col("bk"), col("it"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val nB = kept.select(col("bk")).distinct().agg(count(lit(1)).as("n_baskets"))
     val marg = kept.groupBy(col("it")).agg(count(lit(1)).as("n_it"))
     val pairs = kept.as("x").join(kept.as("y"),
@@ -1084,7 +1085,7 @@ object StatsOps {
     * (cumw₀ + (r − cumn₀)·w). No window anywhere reads more than a
     * partition-local slice of the run frame. Output ≤ 10 rows/group. */
   def lorenzCurve(df: DataFrame, groupCol: String, idCol: String,
-                  weightCol: String, numPartitions: Int = 8): DataFrame = {
+                  weightCol: String, numPartitions: Int = 8): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     val items = df.filter(col(groupCol).isNotNull && col(weightCol) >= 0)
       .select(col(groupCol).as("grp"),
@@ -1097,7 +1098,7 @@ object StatsOps {
     // materialized once — local cumsums, offsets, and totals all read it
     val ranged = runs0.repartitionByRange(numPartitions, col("grp"), col("w"))
       .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val wLoc = W.partitionBy(col("_pid"), col("grp")).orderBy(col("w"))
       .rowsBetween(W.unboundedPreceding, W.currentRow)
     val local = ranged
@@ -1213,9 +1214,9 @@ object StatsOps {
       .groupBy("d", "bucket").agg(sum("n_exact").as("cnt"))
 
   def countMin(tokens: DataFrame, termCol: String, width: Int = 256,
-               depth: Int = 4, k: Int = 20): DataFrame = {
+               depth: Int = 4, k: Int = 20): DataFrame = PB.scoped {
     val exact = cmExact(tokens, termCol)
-      .localCheckpoint() // vocab-sized; feeds cells AND estimates
+      .transform(PB.localCheckpoint) // vocab-sized; feeds cells AND estimates
     val rows = cmRows(exact, width, depth)
     val cells = rows.groupBy("d", "bucket").agg(sum("n_exact").as("cnt"))
     rows.join(broadcast(cells), Seq("d", "bucket"))
@@ -1939,13 +1940,13 @@ object StatsOps {
     * map-side-combined groupBy (the only data-sized shuffle); the pair
     * join and median window run per group on n_days² rows — calendar-
     * bounded (a year of days = 66k pairs/group), never corpus-scaled. */
-  def theilSen(df: DataFrame, groupCol: String, tsCol: String): DataFrame = {
+  def theilSen(df: DataFrame, groupCol: String, tsCol: String): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     val daily = df
       .groupBy(col(groupCol).as("g"),
         datediff(to_date(col(tsCol)), lit("2024-01-01").cast("date")).as("x"))
       .agg(count(lit(1)).as("y"))
-      .localCheckpoint() // day frame: both pair sides read it
+      .transform(PB.localCheckpoint) // day frame: both pair sides read it
     val pairs = daily.select(col("g"), col("x").as("xi"), col("y").as("yi"))
       .join(daily.select(col("g"), col("x").as("xj"), col("y").as("yj")), Seq("g"))
       .filter(col("xi") < col("xj"))
@@ -2056,7 +2057,7 @@ object StatsOps {
     * shuffle; everything after lives on the type-pair frame (≤ |types|²
     * rows, domain-bounded — the q_mutual_info convention). */
   def bradleyTerry(df: DataFrame, userCol: String, typeCol: String,
-                   tsCol: String, iters: Int = 2): DataFrame = {
+                   tsCol: String, iters: Int = 2): DataFrame = PB.scoped {
     require(iters >= 1 && iters <= 4, "iters must be in [1, 4] (unrolled)")
     val W = org.apache.spark.sql.expressions.Window
     val ut = df.groupBy(col(userCol).as("u"), col(typeCol).as("t"))
@@ -2069,7 +2070,7 @@ object StatsOps {
         when(col("a.n") > col("b.n"), 1L).otherwise(0L).as("wi"))
     val pairs = comp.groupBy("i", "j")
       .agg(count(lit(1)).as("n_ij"), sum(col("wi")).as("w_i"))
-      .localCheckpoint() // tiny |types|^2 frame, read every round
+      .transform(PB.localCheckpoint) // tiny |types|^2 frame, read every round
     val sym = pairs.select(col("i"), col("j"), col("n_ij"), col("w_i").as("w"))
       .unionByName(pairs.select(col("j").as("i"), col("i").as("j"),
         col("n_ij"), (col("n_ij") - col("w_i")).as("w")))
@@ -2171,13 +2172,13 @@ object StatsOps {
     * class label, so the double sums are ordered (portable-fold stance).
     *
     * Output: one row (n_rows, po, pe, kappa). */
-  def cohensKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
+  def cohensKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     val cells = df.select(col(aCol).cast("string").as("ra"),
         col(bCol).cast("string").as("rb"))
       .filter(col("ra").isNotNull && col("rb").isNotNull)
       .groupBy("ra", "rb").agg(count(lit(1)).as("nn"))
-      .localCheckpoint() // class-grid sized; reused by marginals + diag
+      .transform(PB.localCheckpoint) // class-grid sized; reused by marginals + diag
     val n = cells.agg(sum(col("nn")).as("n_rows"))
     val ma = cells.groupBy("ra").agg(sum(col("nn")).as("na"))
     val mb = cells.groupBy("rb").agg(sum(col("nn")).as("nb"))
@@ -2245,7 +2246,7 @@ object StatsOps {
     *
     * Output: (group, n_ref, n_cur, psi). */
   def psi(df: DataFrame, groupCol: String, binCol: String, sideCol: String,
-          bins: Int = 10, alpha: Double = 0.5): DataFrame = {
+          bins: Int = 10, alpha: Double = 0.5): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     require(bins >= 2 && bins <= 1024, "bins must be in [2, 1024]")
     val counts = df
@@ -2257,7 +2258,7 @@ object StatsOps {
       .groupBy("grp", "bin")
       .agg(sum(when(col("side") === 0L, 1L).otherwise(0L)).as("nr"),
         sum(when(col("side") === 1L, 1L).otherwise(0L)).as("nc"))
-      .localCheckpoint() // grid-sized; reused by totals + the fold
+      .transform(PB.localCheckpoint) // grid-sized; reused by totals + the fold
     val tot = counts.groupBy("grp")
       .agg(sum(col("nr")).as("n_ref"), sum(col("nc")).as("n_cur"))
     // dense bin grid so empty bins contribute their smoothed cell
@@ -2407,12 +2408,12 @@ object StatsOps {
     *
     * Output: one row (depth, n_both, rbo). */
   def rbo(df: DataFrame, idCol: String, metricA: Column, metricB: Column,
-          depth: Int = 20, p: Double = 0.9): DataFrame = {
+          depth: Int = 20, p: Double = 0.9): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     require(depth >= 1 && depth <= 1024, "depth must be in [1, 1024]")
     val base = df.select(col(idCol).as("id"),
         metricA.cast("long").as("ma"), metricB.cast("long").as("mb"))
-      .localCheckpoint() // two top-d selections re-read it
+      .transform(PB.localCheckpoint) // two top-d selections re-read it
     def top(m: String) = base
       .orderBy(col(m).desc, col("id")).limit(depth)
       .withColumn("rank",
@@ -2421,7 +2422,7 @@ object StatsOps {
     val joined = top("ma").withColumnRenamed("rank", "ra")
       .join(top("mb").withColumnRenamed("rank", "rb"), Seq("id"))
       .select(col("id"), greatest(col("ra"), col("rb")).as("maxr"))
-      .localCheckpoint() // <= depth rows; the k-grid re-reads it
+      .transform(PB.localCheckpoint) // <= depth rows; the k-grid re-reads it
     val ks = base.sparkSession.range(1, depth + 1)
       .select(col("id").cast("int").as("k"))
     val grid = broadcast(ks).join(joined, col("maxr") <= col("k"), "left")
@@ -2496,23 +2497,23 @@ object StatsOps {
     * Output: (item_a, item_b, item_c, n_co), a < b < c, support-ordered. */
   def aprioriTriples(df: DataFrame, basketCol: String, itemCol: String,
                      minCo: Long = 2, maxBasket: Int = 100,
-                     k: Int = 50): DataFrame = {
+                     k: Int = 50): DataFrame = PB.scoped {
     require(maxBasket >= 3, "maxBasket must be >= 3")
     val items = df
       .select(col(basketCol).as("bk"), col(itemCol).cast("long").as("it"))
       .filter(col("bk").isNotNull && col("it").isNotNull).distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val kept = items
       .join(items.groupBy("bk").agg(count(lit(1)).as("bs"))
         .filter(col("bs") <= maxBasket), Seq("bk"))
       .select(col("bk"), col("it"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val freqPairs = kept.as("x").join(kept.as("y"),
         col("x.bk") === col("y.bk") && col("x.it") < col("y.it"))
       .groupBy(col("x.it").as("ia"), col("y.it").as("ib"))
       .agg(count(lit(1)).as("n_ab"))
       .filter(col("n_ab") >= minCo)
-      .localCheckpoint() // tiny after pruning; reused 4x below
+      .transform(PB.localCheckpoint) // tiny after pruning; reused 4x below
     // per-basket frequent pairs -> extend with items c > b in the basket
     val inBasket = kept.as("x").join(kept.as("y"),
         col("x.bk") === col("y.bk") && col("x.it") < col("y.it"))
@@ -2695,7 +2696,7 @@ object StatsOps {
     *
     * Output: one row (n_items, n_ratings, p_bar, p_e, kappa). */
   def fleissKappa(df: DataFrame, itemCol: String, catCol: String,
-                  maxRaters: Int = 256): DataFrame = {
+                  maxRaters: Int = 256): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     require(maxRaters >= 2 && maxRaters <= 4096,
       "maxRaters must be in [2, 4096]")
@@ -2712,7 +2713,7 @@ object StatsOps {
     val items = cells.groupBy("it")
       .agg(sum(col("nij")).as("ni"), sum(col("nij") * col("nij")).as("si"))
       .filter(col("ni") >= 2L && col("ni") <= maxRaters.toLong)
-      .localCheckpoint() // item frame; reused by classes + the cat filter
+      .transform(PB.localCheckpoint) // item frame; reused by classes + the cat filter
     // category marginals over RETAINED items only
     val cats = cells.join(items.select("it"), Seq("it"), "left_semi")
       .groupBy("cat").agg(sum(col("nij")).as("cj"))
@@ -2836,7 +2837,7 @@ object StatsOps {
     * Output: (group, n_ref, n_cur, hellinger, tv). */
   def distShift(df: DataFrame, groupCol: String, binCol: String,
                 sideCol: String, bins: Int = 10,
-                alpha: Double = 0.5): DataFrame = {
+                alpha: Double = 0.5): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     require(bins >= 2 && bins <= 1024, "bins must be in [2, 1024]")
     val counts = df
@@ -2848,7 +2849,7 @@ object StatsOps {
       .groupBy("grp", "bin")
       .agg(sum(when(col("side") === 0L, 1L).otherwise(0L)).as("nr"),
         sum(when(col("side") === 1L, 1L).otherwise(0L)).as("nc"))
-      .localCheckpoint() // grid-sized; reused by totals + the fold
+      .transform(PB.localCheckpoint) // grid-sized; reused by totals + the fold
     val tot = counts.groupBy("grp")
       .agg(sum(col("nr")).as("n_ref"), sum(col("nc")).as("n_cur"))
     val grid = tot.crossJoin(broadcast(
@@ -3094,7 +3095,7 @@ object StatsOps {
     *
     * Output: (group, b, n, src_cdf_num, norm_b). */
   def quantileNorm(df: DataFrame, groupCol: String, binCol: String,
-                   bins: Int = 64): DataFrame = {
+                   bins: Int = 64): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     require(bins >= 2 && bins <= 1024, "bins must be in [2, 1024]")
     val counts = df
@@ -3103,7 +3104,7 @@ object StatsOps {
           .as("b"))
       .filter(col("grp").isNotNull)
       .groupBy("grp", "b").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // grid-sized; feeds src CDF + pooled CDF
+      .transform(PB.localCheckpoint) // grid-sized; feeds src CDF + pooled CDF
     val ordB = W.partitionBy("grp").orderBy("b")
     val src = counts
       .withColumn("cr", sum(col("n")).over(

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 /** Temporal operators Spark has no built-in form for: backward as-of join
   * and gap-based sessionization (batch form; the streaming sibling lives in
@@ -235,12 +236,12 @@ object Temporal {
     * split the fill by (key, coarse epoch) and stitch offsets like the
     * two-stage prefix scan. */
   def resample(df: DataFrame, keyCol: String, tsCol: String,
-               valueCol: String, unit: String = "hour"): DataFrame = {
+               valueCol: String, unit: String = "hour"): DataFrame = PB.scoped {
     val W = Window
     val bins = df.groupBy(col(keyCol).as("k"),
         date_trunc(unit, col(tsCol)).as("bin"))
       .agg(count(lit(1)).as("n"), max(col(valueCol)).as("v"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val spans = bins.groupBy("k").agg(min(col("bin")).as("lo"),
       max(col("bin")).as("hi"))
     val grid = spans.select(col("k"), explode(sequence(col("lo"),
@@ -285,12 +286,12 @@ object Temporal {
     *
     * Output: (key, bin, n, value_interp), value_interp rounded to 6. */
   def interpFill(df: DataFrame, keyCol: String, tsCol: String,
-                 valueCol: String, unit: String = "hour"): DataFrame = {
+                 valueCol: String, unit: String = "hour"): DataFrame = PB.scoped {
     val W = Window
     val bins = df.groupBy(col(keyCol).as("k"),
         date_trunc(unit, col(tsCol)).as("bin"))
       .agg(count(lit(1)).as("n"), max(col(valueCol)).as("v"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val spans = bins.groupBy("k").agg(min(col("bin")).as("lo"),
       max(col("bin")).as("hi"))
     val grid = spans.select(col("k"), explode(sequence(col("lo"),
@@ -538,7 +539,7 @@ object Temporal {
     * (no interval). */
   def timeWeightedAvg(df: DataFrame, keyCol: String, tsCol: String,
                       tieCol: String, valueCol: String,
-                      numPartitions: Int = 8): DataFrame = {
+                      numPartitions: Int = 8): DataFrame = PB.scoped {
     import graft.functions.TextFunctions
     // cast("timestamp"): raw-parquet TIMESTAMP_NTZ columns must coerce
     // before unix_micros (session TZ is pinned UTC, so the cast is exact)
@@ -549,7 +550,7 @@ object Temporal {
       .repartitionByRange(numPartitions, col("k"), col("ts"), col("tie"))
       .withColumn("_pid", spark_partition_id())
       .withColumn("us", unix_micros(col("ts")))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val wLoc = Window.partitionBy(col("_pid"), col("k"))
       .orderBy(col("ts"), col("tie"))
     // successor timestamps for slice-last rows: the NEXT partition
@@ -721,19 +722,18 @@ object Temporal {
     * Output: (state, stationary) per state, rounded 6, state-ordered. */
   def markovStationary(events: DataFrame, userCol: String, typeCol: String,
                        tsCol: String, tieCol: String,
-                       rounds: Int = 8): DataFrame = {
+                       rounds: Int = 8): DataFrame = PB.scoped {
     require(rounds >= 1, "rounds must be >= 1")
     val W = Window
     val ordU = W.partitionBy("u").orderBy(col("ts"), col("tie"))
     val seq = events.select(col(userCol).as("u"), col(typeCol).as("st"),
       col(tsCol).as("ts"), col(tieCol).as("tie"))
-    val PB = org.apache.spark.sql.graftbridge.PlanBridge
     val c = seq.withColumn("nxt", lead(col("st"), 1).over(ordU))
       .filter(col("nxt").isNotNull)
       .groupBy(col("st").as("i"), col("nxt").as("j"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // the ONE corpus boundary — everything below is
-                         // K²-bounded (K = distinct event types)
+      .transform(PB.localCheckpoint) // the ONE corpus boundary — everything below is
+                                     // K²-bounded (K = distinct event types)
     // r18 folded the two round-invariant joins (c⋈r, states⋈r) out of
     // the iteration. r19: the dangling flag has_out RIDES x
     // (round-invariant), dropping the per-round sv join and the sv
@@ -746,7 +746,7 @@ object Temporal {
     // eager per-round checkpoint keeps the round plans flat and is the
     // faster shape here; kept.
     val r = c.groupBy("i").agg(sum(col("c")).as("r_i"))
-    val c2 = c.join(r, Seq("i")).localCheckpoint() // (i, j, c, r_i)
+    val c2 = c.join(r, Seq("i")).transform(PB.localCheckpoint) // (i, j, c, r_i)
     val states = seq.select(col("st").as("v")).distinct()
     val kk = states.agg(count(lit(1)).as("k"))
     var x = states
@@ -755,7 +755,7 @@ object Temporal {
       .crossJoin(broadcast(kk))
       .select(col("v"), (lit(1.0) / col("k").cast("double")).as("x"),
         col("has_out"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val ordj = W.partitionBy("j").orderBy("i")
     val cumj = ordj.rowsBetween(W.unboundedPreceding, W.currentRow)
     (1 to rounds).foreach { _ =>
@@ -776,8 +776,8 @@ object Temporal {
             when(col("has_out").isNull, col("xprev")).otherwise(lit(0.0)))
             .as("x"),
           col("has_out"))
-        .localCheckpoint()
-      PB.unpersistLocalCheckpoint(prev)
+        .transform(PB.localCheckpoint)
+      PB.release(prev)
     }
     x.select(col("v").as("state"), round(col("x"), 6).as("stationary"))
       .orderBy("state")

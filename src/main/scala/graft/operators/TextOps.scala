@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 import graft.functions.TextFunctions
 
@@ -245,7 +246,7 @@ object TextOps {
     * sequence. */
   def packSequences(df: DataFrame, idCol: String, textCol: String,
                     budget: Int = 256, buckets: Int = 8,
-                    numPartitions: Int = 8): DataFrame = {
+                    numPartitions: Int = 8): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     val nTok = size(TextFunctions.tokens(col(textCol))).cast("long")
     val base = df.select(col(idCol).as("doc_id"), nTok.as("n_tok"))
@@ -255,7 +256,7 @@ object TextOps {
     val ranged = base
       .repartitionByRange(numPartitions, col("bucket"), col("doc_id"))
       .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val wLoc = W.partitionBy(col("_pid"), col("bucket")).orderBy(col("doc_id"))
       .rowsBetween(W.unboundedPreceding, -1)
     val wPre = W.partitionBy(col("bucket")).orderBy(col("_pid"))
@@ -617,7 +618,7 @@ object TextOps {
     * dependent, while the ordered fold is bit-identical everywhere — the
     * portable-summation pattern for any float reduction that must
     * hash-verify. */
-  def unigramNll(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+  def unigramNll(df: DataFrame, idCol: String, textCol: String): DataFrame = PB.scoped {
     val toks = df.select(col(idCol).as("doc_id"),
       explode(TextFunctions.tokens(col(textCol))).as("term"))
     // r18: tf feeds vocab + the scoring join and vocab feeds total + the
@@ -686,7 +687,7 @@ object TextOps {
     * within a doc, so the fold order is total and the NLL values are
     * bit-identical on every engine/partitioning. */
   def bigramNll(df: DataFrame, idCol: String, textCol: String,
-                lambda: Double = 0.75): DataFrame = {
+                lambda: Double = 0.75): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol).as("doc_id"),
       TextFunctions.tokens(col(textCol)).as("_t"))
@@ -786,7 +787,7 @@ object TextOps {
     * broadcasts. Per-doc NLL reduces by ordered cumsum so the doubles
     * are bit-identical cross-engine. */
   def kneserNeyNll(df: DataFrame, idCol: String, textCol: String,
-                   discount: Double = 0.75): DataFrame = {
+                   discount: Double = 0.75): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol).as("doc_id"),
       TextFunctions.tokens(col(textCol)).as("_t"))
@@ -902,7 +903,7 @@ object TextOps {
     * both engines (and immune to the count*count bigint overflow a 100 TB
     * corpus would hit), so the scores and the ranking hash-verify. */
   def collocations(df: DataFrame, idCol: String, textCol: String,
-                   minCount: Long = 3, k: Int = 20): DataFrame = {
+                   minCount: Long = 3, k: Int = 20): DataFrame = PB.scoped {
     val toks = df.select(col(idCol), TextFunctions.tokens(col(textCol)).as("_t"))
     val bi = toks.filter(size(col("_t")) >= 2)
       .select(explode(expr(TextFunctions.adjacentPairsExpr)).as("bg"))
@@ -915,7 +916,7 @@ object TextOps {
     // corpus-sized, so the checkpoint is cheap at any scale)
     val uni = toks.select(explode(col("_t")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c_w"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val n = uni.agg(sum(col("c_w")).as("n_tok"))
     bi.filter(col("c_ab") >= minCount)
       .join(uni.select(col("w").as("a"), col("c_w").as("c_a")), "a")
@@ -1091,18 +1092,18 @@ object TextOps {
 
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
                   w: Int = 4, minShared: Int = 2,
-                  maxDf: Int = 64): DataFrame = {
+                  maxDf: Int = 64): DataFrame = PB.scoped {
     require(minShared >= 1 && maxDf >= 2)
     // the fingerprint frame feeds the df count AND the kept join, and
     // kept feeds both pair sides — materialize each once or the whole
     // explode+window chain re-runs per consumer (round-6 CSE rule)
     val fps = winnowFingerprints(df, idCol, textCol, w)
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val kept = fps.join(
         fps.groupBy("fp").agg(count(lit(1)).as("df"))
           .filter(col("df") <= maxDf).select("fp"),
         Seq("fp"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val l = kept.select(col("doc_id").as("a"), col("fp"))
     val r = kept.select(col("doc_id").as("b"), col("fp"))
     l.join(r, Seq("fp")).filter(col("a") < col("b"))
@@ -1183,7 +1184,7 @@ object TextOps {
     * runs as an ordered cumulative fold over rank within each group, so
     * the doubles are bit-identical on every engine/partitioning. */
   def klDrift(df: DataFrame, groupCol: String, textCol: String,
-              topV: Int = 200, alpha: Double = 0.5): DataFrame = {
+              topV: Int = 200, alpha: Double = 0.5): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     // null groups are excluded OUTRIGHT (mutualInfo stance): a null grp
     // would miss the grid's equi-join yet still inflate the corpus
@@ -1197,17 +1198,17 @@ object TextOps {
     // ONCE, so the corpus is exploded and scanned exactly once. cnt/
     // gTot/top/consts are vocab-/group-/V-sized rollups of it.
     val gCnt = toks.groupBy("grp", "term").agg(count(lit(1)).as("gc"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val cnt = gCnt.groupBy("term").agg(sum(col("gc")).as("c"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val top = cnt.orderBy(col("c").desc, col("term")).limit(topV)
       .withColumn("rank",
         row_number().over(W.orderBy(col("c").desc, col("term"))))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     // 1-row corpus constants: top-vocab size, top mass, total mass
     val consts = top.agg(count(lit(1)).as("vn"), sum(col("c")).as("topc"))
       .crossJoin(cnt.agg(sum(col("c")).as("bign")))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val gTot = gCnt.groupBy("grp").agg(sum(col("gc")).as("n_tokens"))
     val grid = gTot.crossJoin(broadcast(top))
       .join(gCnt, Seq("grp", "term"), "left")
@@ -1382,13 +1383,13 @@ object TextOps {
     * broadcast back onto the vocab as a crossJoin constant. The running
     * vocab is localCheckpoint-ed per round (reliable checkpoint on a
     * cluster) so round k never replays rounds 1..k-1. */
-  def bpeTrain(df: DataFrame, textCol: String, iters: Int = 3): DataFrame = {
+  def bpeTrain(df: DataFrame, textCol: String, iters: Int = 3): DataFrame = PB.scoped {
     require(iters >= 1 && iters <= 8, "iters must be in [1, 8] (unrolled rounds)")
     var words = df
       .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("wc"))
       .select(regexp_replace(col("w"), "(.)", " $1 ").as("sym"), col("wc"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val rounds = (1 to iters).map { it =>
       val best = words
         .select(col("wc"), split(trim(col("sym")), "  ").as("_t"))
@@ -1398,13 +1399,13 @@ object TextOps {
         .agg(sum(col("wc")).as("n_occ"))
         .orderBy(col("n_occ").desc, col("pair_a"), col("pair_b")).limit(1)
         .select(lit(it.toLong).as("iter"), col("pair_a"), col("pair_b"), col("n_occ"))
-        .localCheckpoint()
+        .transform(PB.localCheckpoint)
       if (it < iters)
         words = words
           .crossJoin(broadcast(best.select(col("pair_a"), col("pair_b"))))
           .select(expr("replace(sym, ' ' || pair_a || '  ' || pair_b || ' ', " +
             "' ' || pair_a || pair_b || ' ')").as("sym"), col("wc"))
-          .localCheckpoint()
+          .transform(PB.localCheckpoint)
       best
     }
     rounds.reduce(_ unionByName _).orderBy("iter")
@@ -1546,7 +1547,7 @@ object TextOps {
     * back as offsets. No corpus-sized single-task window; the only
     * single-task step is the ≤ numPartitions-row offsets window. */
   def shardPlan(df: DataFrame, idCol: String, weightCol: String,
-                budget: Long, numPartitions: Int = 8): DataFrame = {
+                budget: Long, numPartitions: Int = 8): DataFrame = PB.scoped {
     require(budget > 0, "shard budget must be positive")
     val W = org.apache.spark.sql.expressions.Window
     // null weights coalesce to 0 mass (Spark's null-propagating subtract
@@ -1556,7 +1557,7 @@ object TextOps {
         coalesce(col(weightCol).cast("long"), lit(0L)).as("wt"))
       .repartitionByRange(numPartitions, col("id"))
       .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val wLoc = W.partitionBy(col("_pid")).orderBy(col("id"))
       .rowsBetween(W.unboundedPreceding, W.currentRow)
     val local = w.withColumn("l", sum(col("wt")).over(wLoc))
@@ -1610,24 +1611,24 @@ object TextOps {
     * create a hot key anywhere. Requires ≤ 63 distinct sources (mask
     * fits a signed long); the source index is a domain-bounded
     * single-task window (the mutual_info stance). */
-  def sourceOverlap(df: DataFrame, groupCol: String, textCol: String): DataFrame = {
+  def sourceOverlap(df: DataFrame, groupCol: String, textCol: String): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     // distinct (source, token) membership — the only corpus-sized stage
     val st = df.filter(col(groupCol).isNotNull)
       .select(col(groupCol).as("g"),
         explode(TextFunctions.tokens(col(textCol))).as("tok"))
       .distinct()
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val idx = st.select(col("g")).distinct()
       .withColumn("i", row_number().over(W.orderBy(col("g"))) - lit(1))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val nSources = idx.count()
     require(nSources <= 63, s"sourceOverlap: mask needs <= 63 sources, got $nSources")
     val masks = st.join(broadcast(idx), "g")
       .groupBy(col("tok"))
       .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), i))").as("mask"))
       .groupBy(col("mask")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     // DataFrame shiftright only takes a literal shift — the SQL form
     // accepts a column amount
     def bitSet(idxName: String) =
@@ -1637,7 +1638,7 @@ object TextOps {
     val pairs = idx.select(col("g").as("ga"), col("i").as("ia"))
       .crossJoin(idx.select(col("g").as("gb"), col("i").as("ib")))
       .filter(col("ga") < col("gb"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     // inner join with the s²/2-row pair frame BROADCAST (the histogram
     // side streams); zero-overlap pairs are reinstated from the pair
     // frame afterwards so every pair appears exactly once
@@ -1694,7 +1695,7 @@ object TextOps {
     * broadcast is only valid for KB-sized external benchmarks). Output
     * is eval-doc-sized. */
   def splitLeakage(df: DataFrame, idCol: String, textCol: String,
-                   evalPct: Int = 10, n: Int = 5): DataFrame = {
+                   evalPct: Int = 10, n: Int = 5): DataFrame = PB.scoped {
     require(evalPct >= 1 && evalPct <= 50, "evalPct must be in [1, 50]")
     val sp = Sampling.hashSplit(df, idCol,
       Seq("train" -> (100 - evalPct), "eval" -> evalPct))
@@ -1704,7 +1705,7 @@ object TextOps {
     val trainG = grams.filter(col("split") === "train").select("g").distinct()
     val evalG = grams.filter(col("split") === "eval")
       .select("doc_id", "g")
-      .localCheckpoint() // profile + semi-join both read it
+      .transform(PB.localCheckpoint) // profile + semi-join both read it
     val prof = evalG.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
     val shared = evalG.join(trainG, Seq("g"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared_grams"))
@@ -1825,11 +1826,11 @@ object TextOps {
     * gram key, one gram-keyed join back — the exact-dedup shape; per-doc
     * reduce is map-side-combined integer counts + one division tree. */
   def ngramNovelty(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = 5): DataFrame = {
+                   n: Int = 5): DataFrame = PB.scoped {
     val grams = df.select(col(idCol).as("doc_id"),
         explode(TextFunctions.ngramHashes(col(textCol), n)).as("g"))
       .distinct()
-      .localCheckpoint() // df count + join back both read it
+      .transform(PB.localCheckpoint) // df count + join back both read it
     val dfreq = grams.groupBy("g").agg(count(lit(1)).as("df"))
     grams.join(dfreq, Seq("g"))
       .groupBy("doc_id")
@@ -2068,13 +2069,13 @@ object TextOps {
     * is the repo's ordered-cumsum portability pattern (unigramNll), so
     * weights hash-verify. */
   def dsirWeights(df: DataFrame, idCol: String, textCol: String,
-                  targetFilter: Column): DataFrame = {
+                  targetFilter: Column): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol).as("doc_id"), targetFilter.as("_tgt"),
       explode(TextFunctions.tokens(col(textCol))).as("term"))
     val tf = toks.groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"), max(col("_tgt")).as("_tgt"))
-      .localCheckpoint() // exploded once; both LMs and the scorer reuse it
+      .transform(PB.localCheckpoint) // exploded once; both LMs and the scorer reuse it
     val vocabR = tf.groupBy("term").agg(sum(col("tf")).as("cnt_r"))
     val vocabT = tf.filter(col("_tgt")).groupBy("term")
       .agg(sum(col("tf")).as("cnt_t"))
@@ -2358,22 +2359,22 @@ object TextOps {
     *
     * Output: (group, n_tokens, jsd_nats). */
   def jsDrift(df: DataFrame, groupCol: String, textCol: String,
-              topV: Int = 200, alpha: Double = 0.5): DataFrame = {
+              topV: Int = 200, alpha: Double = 0.5): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     val toks = df.filter(col(groupCol).isNotNull)
       .select(col(groupCol).as("grp"),
         explode(TextFunctions.tokens(col(textCol))).as("term"))
     val gCnt = toks.groupBy("grp", "term").agg(count(lit(1)).as("gc"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val cnt = gCnt.groupBy("term").agg(sum(col("gc")).as("c"))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val top = cnt.orderBy(col("c").desc, col("term")).limit(topV)
       .withColumn("rank",
         row_number().over(W.orderBy(col("c").desc, col("term"))))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val consts = top.agg(count(lit(1)).as("vn"), sum(col("c")).as("topc"))
       .crossJoin(cnt.agg(sum(col("c")).as("bign")))
-      .localCheckpoint()
+      .transform(PB.localCheckpoint)
     val gTot = gCnt.groupBy("grp").agg(sum(col("gc")).as("n_tokens"))
     val grid = gTot.crossJoin(broadcast(top))
       .join(gCnt, Seq("grp", "term"), "left")
@@ -2783,7 +2784,7 @@ object TextOps {
     *
     * Output: (rnk, term, c_ref, c_cur, share_ref, share_cur, delta). */
   def freqDriftTopK(df: DataFrame, sideCol: String, textCol: String,
-                    topV: Int = 200, k: Int = 20): DataFrame = {
+                    topV: Int = 200, k: Int = 20): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
     require(topV >= k && topV <= 4096, "need k <= topV <= 4096")
     val toks = df.filter(col(sideCol).isNotNull)
@@ -2792,7 +2793,7 @@ object TextOps {
     val cnt = toks.groupBy("term")
       .agg(sum(when(col("side") === 0L, 1L).otherwise(0L)).as("ca"),
         sum(when(col("side") === 1L, 1L).otherwise(0L)).as("cb"))
-      .localCheckpoint() // vocab-sized; feeds totals + the top-V cut
+      .transform(PB.localCheckpoint) // vocab-sized; feeds totals + the top-V cut
     val tot = cnt.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
     val top = cnt.orderBy((col("ca") + col("cb")).desc, col("term"))
       .limit(topV)

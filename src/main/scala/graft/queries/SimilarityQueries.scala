@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 import graft.Tables
 import graft.functions.VectorFunctions.{cosineSql, dotSql, hyperBandKeySql}
@@ -982,14 +983,12 @@ object SimilarityQueries {
         // corpus is ≤ GainCorpusCap rows and truth |q|·K rows, so the
         // blocks are KBs while the saved re-evaluations are whole
         // scan+score+window subtrees per consumer.
-        val cc = org.apache.spark.sql.graftbridge.PlanBridge
-          .sharedLocalCheckpoint(emb(s, d).select(col("vec_id"))
+        val cc = PB.sharedLocalCheckpoint(emb(s, d).select(col("vec_id"))
             .filter(col("vec_id") < GainCorpusCap)
             .withColumn("embedding", clusteredVecCol(col("vec_id"))))
         val nCells = Similarity.derivedCentroids(cc.count(), 32L)
         val q = cc.filter(col("vec_id") % 64 === 7 && col("vec_id") < 2048)
-        val truth = org.apache.spark.sql.graftbridge.PlanBridge
-          .sharedLocalCheckpoint(Similarity.cosineTopK(cc, q, K))
+        val truth = PB.sharedLocalCheckpoint(Similarity.cosineTopK(cc, q, K))
         def tag(name: String, got: org.apache.spark.sql.DataFrame) =
           Similarity.retrievalMetrics(truth, got, K)
             .select(lit(name).as("variant"), col("n_queries"),

@@ -3,7 +3,10 @@ package graft.sources
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults,
+  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The `file:` filesystem of every graft session (registered once, as
@@ -16,6 +19,22 @@ import org.apache.hadoop.fs.permission.FsPermission
   * created file, every `.crc` sidecar and every directory; a parquet write
   * with `partitionBy` pays that once per file and once per directory. */
 final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+/** The same filesystem for Hadoop's `FileContext` API, which streaming
+  * state and checkpoints are written through (registered as
+  * `fs.AbstractFileSystem.file.impl`): Hadoop's `LocalFs` and `RawLocalFs`
+  * over [[NioRawLocalFileSystem]]. Both bind `file:///`, as the stock ones. */
+final class NioLocalFs(uri: java.net.URI, conf: Configuration)
+    extends ChecksumFs(new NioRawLocalFs(conf))
+
+class NioRawLocalFs(conf: Configuration)
+    extends DelegateToFileSystem(FsConstants.LOCAL_FS_URI, new NioRawLocalFileSystem,
+      conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
+  override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+  override def isValidName(src: String): Boolean = true
+}
 
 /** `RawLocalFileSystem` that sets a plain `rwxrwxrwx` mode in-process.
   *

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
 /** SURVEY §2.4 — Structured Streaming transforms over the events stream.
   * Batch analogues are q_events_bucket (windowed counts) and gedixr's
@@ -247,7 +248,7 @@ object EventStreams {
     * at-least-once replay. */
   private[graft] def foldBatch(batch: DataFrame, batchId: Long,
                                    stateDir: String)
-                                  (merge: (DataFrame, DataFrame, Long) => DataFrame): Unit = {
+                                  (merge: (DataFrame, DataFrame, Long) => DataFrame): Unit = PB.scoped {
     // all paths through the Hadoop FS layer, not java.nio: a URI-style
     // ("file:/...") or non-local stateDir is a path spark.read
     // understands but Paths.get does not
@@ -263,25 +264,22 @@ object EventStreams {
     // materialized (localCheckpoint) before writing: on a replay the
     // merge plan may read the very snapshot directory it overwrites
     val merged = merge(base, batch, batchId)
-      .localCheckpoint()
-    try {
-      val snapName = f"$SnapPrefix$batchId%020d"
-      merged.write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(root, snapName).toString)
-      val marker = new org.apache.hadoop.fs.Path(root, LatestMarker)
-      val tmp = new org.apache.hadoop.fs.Path(root, LatestMarker + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(snapName.getBytes("UTF-8")) finally out.close()
-      fs.delete(marker, false)
-      fs.rename(tmp, marker)
-      // keep this snapshot and its predecessor (the replay fold base and
-      // crash fallback); prune everything older
-      fs.listStatus(root).map(_.getPath)
-        .filter(p => p.getName.startsWith(SnapPrefix) && p.getName < snapName)
-        .sortBy(_.getName).dropRight(1)
-        .foreach(p => fs.delete(p, true))
-    } finally org.apache.spark.sql.graftbridge.PlanBridge
-      .unpersistLocalCheckpoint(merged)
+      .transform(PB.localCheckpoint)
+    val snapName = f"$SnapPrefix$batchId%020d"
+    merged.write.mode("overwrite")
+      .parquet(new org.apache.hadoop.fs.Path(root, snapName).toString)
+    val marker = new org.apache.hadoop.fs.Path(root, LatestMarker)
+    val tmp = new org.apache.hadoop.fs.Path(root, LatestMarker + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(snapName.getBytes("UTF-8")) finally out.close()
+    fs.delete(marker, false)
+    fs.rename(tmp, marker)
+    // keep this snapshot and its predecessor (the replay fold base and
+    // crash fallback); prune everything older
+    fs.listStatus(root).map(_.getPath)
+      .filter(p => p.getName.startsWith(SnapPrefix) && p.getName < snapName)
+      .sortBy(_.getName).dropRight(1)
+      .foreach(p => fs.delete(p, true))
   }
 
   /** Shared crash-safe snapshot fold: [[foldBatch]] per micro-batch (see

@@ -1,6 +1,10 @@
 package org.apache.spark.sql
 package graftbridge
 
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
 import org.apache.spark.sql.catalyst.plans.logical.{Sort, Statistics}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -11,6 +15,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * sort of the full output (VERDICT r1). The bench harness strips the
   * top-level Sort so timings measure the operator, not the determinism
   * shim. Correctness runs (Verify) keep the sorted plan untouched.
+  *
+  * It is also the one owner of localCheckpoint blocks. Every checkpoint
+  * is made here and registered in the calling thread's innermost
+  * [[scoped]] block, whose exit releases what its result no longer reads;
+  * [[release]] is only for a loop freeing its superseded round. Outside
+  * every scope nothing is registered, and GC frees a checkpoint through
+  * Spark's ContextCleaner.
   */
 object PlanBridge {
 
@@ -58,12 +69,16 @@ object PlanBridge {
     * the checkpointed RDD's MEASURED storage size — bounded, and a
     * better broadcast signal than any estimate. Use it for every
     * checkpoint that a LATER round's plan will reference; one-shot
-    * checkpoints can keep the stock call. */
+    * checkpoints can keep [[localCheckpoint]]. */
   def freshLocalCheckpoint(df: DataFrame): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]].localCheckpoint()
+    val ds = owned(df.asInstanceOf[classic.Dataset[Row]].localCheckpoint())
     checkpointRdd(ds).fold(ds: DataFrame)(lr =>
       withSize(ds, lr, storedSize(ds, lr).getOrElse(1L << 20)))
   }
+
+  /** `Dataset.localCheckpoint()`: eager, origin-plan statistics. */
+  def localCheckpoint(df: DataFrame): DataFrame =
+    owned(df.asInstanceOf[classic.Dataset[Row]].localCheckpoint())
 
   /** LAZY localCheckpoint for a subtree referenced more than once inside
     * a SINGLE action (r18): Spark does not CSE DataFrame subtrees, so a
@@ -74,9 +89,7 @@ object PlanBridge {
     * estimated Statistics ride onto the LogicalRDD, exactly what the
     * duplicated subtrees saw). NOT for frames a LATER round's plan
     * references — those stats compound multiplicatively across rounds;
-    * use [[freshLocalCheckpoint]] there. The caller must release the
-    * blocks via [[unpersistLocalCheckpoint]] once the consuming action
-    * has materialized.
+    * use [[freshLocalCheckpoint]] there.
     *
     * `sizeInBytes` replaces the origin plan's estimate. For iterative
     * operators that fuse a round's frames into one action (louvain r19):
@@ -89,7 +102,7 @@ object PlanBridge {
     * at scale. */
   def sharedLocalCheckpoint(df: DataFrame,
                             sizeInBytes: Option[Long] = None): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]].localCheckpoint(eager = false)
+    val ds = owned(df.asInstanceOf[classic.Dataset[Row]].localCheckpoint(eager = false))
     sizeInBytes.fold(ds: DataFrame)(size =>
       checkpointRdd(ds).fold(ds: DataFrame)(withSize(ds, _, size)))
   }
@@ -125,15 +138,80 @@ object PlanBridge {
         lr.isStreaming, lr.stream)(
         ds.sparkSession, Some(Statistics(sizeInBytes = BigInt(sizeInBytes))), None))
 
-  /** Free the blocks behind a localCheckpoint()ed frame. Dataset.unpersist
-    * is a no-op for these — localCheckpoint persists the underlying RDD
-    * directly, without registering it with the CacheManager that
-    * Dataset.unpersist consults — so iterative algorithms that checkpoint
-    * per round must release superseded rounds through the RDD itself.
-    * The frame must no longer be needed: local checkpoints are
-    * unrecoverable once their blocks are dropped. */
-  def unpersistLocalCheckpoint(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(_.rdd.unpersist(blocking = false))
+  /** Free the blocks behind a checkpointed frame now — only for a loop's
+    * superseded round. Through the SparkContext: Dataset.unpersist is a
+    * no-op for a local checkpoint and RDD.unpersist warns about its
+    * truncated lineage. The frame must no longer be needed. */
+  def release(df: DataFrame): Unit = checkpointRdd(df).foreach { lr =>
+    scopes.get.foreach(_.remove(lr.rdd.id))
+    unpersist(lr.rdd)
+  }
+
+  /** The frames a [[scoped]] result still reads. */
+  trait Frames[T] { def apply(t: T): Seq[DataFrame] }
+  object Frames {
+    implicit val frame: Frames[DataFrame] = Seq(_)
+    implicit def value[T <: AnyVal]: Frames[T] = _ => Nil
+    implicit def pair[A, B](implicit a: Frames[A], b: Frames[B]): Frames[(A, B)] =
+      t => a(t._1) ++ b(t._2)
+  }
+
+  /** This thread's active scopes, innermost first. */
+  private val scopes = ThreadLocal.withInitial[List[mutable.Map[Int, RDD[_]]]](() => Nil)
+
+  /** Run `body` as the owner of every checkpoint made in it on this thread.
+    * On normal exit it releases the blocks its result does not read — the
+    * RDDs behind the result's `LogicalRDD` leaves (subqueries included) and
+    * their lineage, which keeps a lazy checkpoint's unmaterialized parents;
+    * an eager checkpoint's truncated lineage ends the walk — and hands the
+    * rest to the enclosing scope. An exception releases everything, and
+    * so does a `return` out of `body` (Scala throws to implement it). */
+  def scoped[T](body: => T)(implicit frames: Frames[T]): T = {
+    val outer = scopes.get
+    val mine = mutable.LinkedHashMap.empty[Int, RDD[_]]
+    scopes.set(mine :: outer)
+    val out = try body catch { case e: Throwable => mine.values.foreach(unpersist); throw e }
+      finally scopes.set(outer)
+    if (mine.nonEmpty) {
+      val read = readRdds(frames(out))
+      for ((id, rdd) <- mine)
+        if (!read(id)) unpersist(rdd) else outer.headOption.foreach(_(id) = rdd)
+    }
+    out
+  }
+
+  private def owned(ds: classic.Dataset[Row]): classic.Dataset[Row] = {
+    for (s <- scopes.get.headOption; lr <- checkpointRdd(ds)) s(lr.rdd.id) = lr.rdd
+    ds
+  }
+
+  private def unpersist(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** Ids of the RDDs the frames' plans read, through their lineage. */
+  private def readRdds(frames: Seq[DataFrame]): Set[Int] = {
+    val seen = mutable.Set.empty[Int]
+    def walk(r: RDD[_]): Unit = if (seen.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
+    frames.foreach(analyzedPlan(_).collectWithSubqueries { case lr: LogicalRDD => lr.rdd }.foreach(walk))
+    seen.toSet
+  }
+
+  /** `body`'s result and the ids of the RDDs persisted during it that are
+    * still persisted after it. Blocks are held strongly from the moment
+    * they are stored, so a leak cannot drop out of SparkContext's
+    * weak-valued registry before it is counted. */
+  def persistedAfter[T](spark: SparkSession)(body: => T): (T, Seq[Int]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val held = new java.util.concurrent.ConcurrentHashMap[Int, RDD[_]]
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = for (b <- e.blockUpdatedInfo
+        .blockId.asRDDId; rdd <- sc.getPersistentRDDs.get(b.rddId)) held.put(b.rddId, rdd)
+    }
+    sc.addSparkListener(listener)
+    val out = try body finally { sc.listenerBus.waitUntilEmpty(); sc.removeSparkListener(listener) }
+    try (out, (sc.getPersistentRDDs.keySet -- before).toSeq.sorted) finally held.clear()
+  }
 
   /** Block until the listener bus has delivered every queued event —
     * deterministic drain for tools that attribute jobs/stages to a rep

@@ -127,7 +127,7 @@ class CliSpec extends SparkSpec {
     val gate = new org.apache.spark.sql.Observation("graft_spec_ckpt_gate")
     val ck = spark.range(100).toDF("x")
       .observe(gate, sum(col("x")).as("sx"), count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(PlanBridge.localCheckpoint)
     assert(PlanBridge.awaitObserved(gate) === Map("sx" -> 4950L, "n" -> 100L))
 
     val rows = new org.apache.spark.sql.Observation("graft_spec_ckpt_rows")
@@ -135,12 +135,35 @@ class CliSpec extends SparkSpec {
       .withColumn("vec", array(col("id").cast("float"), (col("id") * 2).cast("float")))
       .observe(rows, collect_list(when(col("id") < 3,
         struct(col("id"), col("vec")))).as("coarse"))
-      .localCheckpoint()
+      .transform(PlanBridge.localCheckpoint)
     val coarse = PlanBridge.awaitObserved(rows)("coarse")
       .asInstanceOf[Seq[org.apache.spark.sql.Row]]
       .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
     assert(coarse === Seq((0L, Seq(0f, 0f)), (1L, Seq(1f, 2f)), (2L, Seq(2f, 4f))))
-    Seq(ck, ck2).foreach(PlanBridge.unpersistLocalCheckpoint)
+    Seq(ck, ck2).foreach(PlanBridge.release)
+  }
+
+  test("cli curation, IVF-trained and louvain commands leave no RDD persisted") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftbridge.PlanBridge
+    val base = tmp()
+    val docs = s"$sfDir/documents.parquet"
+    val emb = s"$sfDir/embeddings.parquet"
+    Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("a", "b").write.parquet(s"$base/edges")
+    val calls = Seq(
+      "dedup" -> Map("input" -> docs, "id" -> "doc_id", "text" -> "text"),
+      "cluster" -> Map("input" -> docs, "id" -> "doc_id", "text" -> "text"),
+      "semdedup" -> Map("input" -> emb),
+      "ivf-index" -> Map("input" -> emb, "train-iters" -> "2"),
+      "louvain" -> Map("input" -> s"$base/edges"))
+    // every RDD a command persisted is held strongly until it is counted,
+    // so a leak cannot hide behind SparkContext's weak-valued registry
+    val leaks = calls.flatMap { case (cmd, opts) =>
+      val (_, left) = PlanBridge.persistedAfter(spark)(
+        Cli.run(spark, cmd, opts + ("output" -> s"$base/$cmd")))
+      if (left.isEmpty) None else Some(s"$cmd left RDDs ${left.mkString(",")}")
+    }
+    assert(leaks.isEmpty)
   }
 
   test("cli merge suffixes and joins the two sides") {

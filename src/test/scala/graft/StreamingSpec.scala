@@ -147,6 +147,44 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming state and checkpoints resolve file: to graft's FileContext filesystem") {
+    val fc = org.apache.hadoop.fs.FileContext
+      .getLocalFSFileContext(spark.sparkContext.hadoopConfiguration)
+    assert(fc.getDefaultFileSystem.getClass === classOf[graft.sources.NioLocalFs])
+  }
+
+  test("a 3-batch stateful stream's state files carry the stock permission bits") {
+    import scala.jdk.CollectionConverters._
+    // mode bits of every path a groupBy().count() stream leaves under its
+    // checkpoint directory after 3 micro-batches (uuids in names dropped)
+    def modes(session: org.apache.spark.sql.SparkSession,
+              dir: java.nio.file.Path): Map[String, Int] = {
+      import session.implicits._
+      implicit val ctx: org.apache.spark.sql.SQLContext = session.sqlContext
+      val input = MemoryStream[Int]
+      val q = input.toDF().groupBy().count()
+        .writeStream.format("memory").queryName(s"perm_${dir.getFileName}")
+        .outputMode("complete").option("checkpointLocation", dir.toString).start()
+      try (1 to 3).foreach { i => input.addData(i); q.processAllAvailable() }
+      finally q.stop()
+      val s = java.nio.file.Files.walk(dir)
+      try s.iterator.asScala.map { p =>
+        dir.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "uuid") ->
+          (java.nio.file.Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff)
+      }.toMap
+      finally s.close()
+    }
+    val stock = spark.newSession()
+    stock.conf.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.LocalFs")
+    val stockFc = org.apache.hadoop.fs.FileContext.getLocalFSFileContext(
+      stock.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf())
+    assert(stockFc.getDefaultFileSystem.getClass === classOf[org.apache.hadoop.fs.local.LocalFs])
+    val base = java.nio.file.Files.createTempDirectory("graft_stream_perm")
+    val graftModes = modes(spark, base.resolve("graft"))
+    assert(graftModes.keys.count(_.startsWith("state/")) > 3)
+    assert(graftModes === modes(stock, base.resolve("stock")))
+  }
+
   test("bucketCounts emits a window only after the watermark passes it") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
