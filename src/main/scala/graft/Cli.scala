@@ -107,14 +107,14 @@ object Cli {
     private var outAttached = false
 
     def in(k: String): DataFrame = {
-      val df = spark.read.parquet(str(k))
+      val df = Tables.readParquet(spark, str(k))
       if (logged && !inAttached) {
         inAttached = true
         df.observe(obsIn, count(lit(1)).as("n_rows"))
       } else df
     }
     /** A secondary parquet input: never observed as the run's input. */
-    def side(k: String): DataFrame = spark.read.parquet(str(k))
+    def side(k: String): DataFrame = Tables.readParquet(spark, str(k))
     /** `--input` with raw catalog int64-nanos event ts normalized — the
       * same rule (and code) as Tables.load. */
     def nanosIn(ts: String): DataFrame = Tables.normalizeNanosTs(in("input"), ts)

@@ -1,15 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetFooters
 
 /** Loaders for the graft table catalog (one parquet per table).
   *
   * Mirrors gedixr's granule-directory input model (reference:
   * gedixr/extract.py:128-129 discovers granules under a root directory) with
-  * a columnar catalog: every reader goes through `spark.read.parquet` so
-  * Catalyst keeps scans pruned (ReadSchema) and predicates pushed
-  * (PushedFilters). At cluster scale each "table" is a directory of many
-  * parquet files; nothing here assumes a single file.
+  * a columnar catalog. Every parquet read in graft goes through
+  * [[readParquet]]: a plain `spark.read` parquet scan, so Catalyst keeps
+  * scans pruned (ReadSchema) and predicates pushed (PushedFilters), whose
+  * schema comes from one footer read on the driver rather than from
+  * Spark's schema-inference job. At cluster scale each "table" is a
+  * directory of many parquet files; nothing here assumes a single file.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -46,8 +49,21 @@ object Tables {
     }
   }
 
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * data schema is read from the one footer Spark's own inference would
+    * read ([[ParquetFooters.dataSchema]], with the session's nanos-as-long
+    * and NTZ flags), and partition columns (`aoi=`, `cell=`) still come
+    * from Spark's path discovery. A path Spark cannot infer a schema for
+    * (missing, or holding no data file) is read plainly, so it fails with
+    * Spark's own error naming it. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    ParquetFooters.dataSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeNanosTs(df, "ts") else df
   }
 
@@ -55,8 +71,8 @@ object Tables {
     * same parquet, same ts normalization as the batch path) — the input
     * for §2.4's incremental plans. Schema comes from the batch footer. */
   def loadStream(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$dir/$name.parquet").schema
-    val df = spark.readStream.schema(batchSchema).parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.readStream.schema(readParquet(spark, path).schema).parquet(path)
     if (name == "events") normalizeNanosTs(df, "ts") else df
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
+import graft.Tables
 import graft.functions.VectorFunctions
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -364,8 +365,22 @@ object Similarity {
                         pCoarse: Int = TwoLevelCoarseProbes,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = PB.scoped {
-    trainIvfCentroidsWithCoarse(candidates, nCells, iters, pCoarse,
+    // iters = 0 needs no codebook: the seeds, with no job
+    if (iters == 0) ivfSeeds(candidates, nCells, idCol, vecCol)
+    else trainIvfCentroidsWithCoarse(candidates, nCells, iters, pCoarse,
       idCol, vecCol)._1
+  }
+
+  /** The untrained (_fid, _fvec) quantizer: the rows whose id falls in
+    * `[0, nCells)`. Uncheckpointed: its lineage is one filter+select over
+    * the input (cheap to recompute), and checkpointing it leaked the seed
+    * blocks for iters = 0 callers (r17 ADVICE). */
+  private def ivfSeeds(candidates: DataFrame, nCells: Int,
+                       idCol: String, vecCol: String): DataFrame = {
+    require(nCells >= 1, "an IVF quantizer needs nCells >= 1")
+    candidates
+      .filter(col(idCol) >= 0 && col(idCol) < nCells)
+      .select(col(idCol).cast("long").as("_fid"), col(vecCol).as("_fvec"))
   }
 
   /** [[trainIvfCentroids]] returning the trained frame AND its collected
@@ -386,14 +401,8 @@ object Similarity {
       pCoarse: Int = TwoLevelCoarseProbes,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): (DataFrame, Seq[Seq[Float]]) = {
-    require(nCells >= 1 && iters >= 0,
-      "trainIvfCentroids needs nCells >= 1 and iters >= 0")
-    // seeds stay UNcheckpointed: their lineage is one filter+select over
-    // the input (cheap to recompute), and checkpointing them leaked the
-    // seed blocks for iters = 0 callers (r17 ADVICE)
-    var cents = candidates
-      .filter(col(idCol) >= 0 && col(idCol) < nCells)
-      .select(col(idCol).cast("long").as("_fid"), col(vecCol).as("_fvec"))
+    require(iters >= 0, "trainIvfCentroids needs iters >= 0")
+    var cents = ivfSeeds(candidates, nCells, idCol, vecCol)
     val coarseRows = collectCoarseRows(cents, coarseCellCount(nCells))
     val fidCut = coarseRows.last._1
     var coarse: Seq[Seq[Float]] = coarseRows.map(_._2)
@@ -469,10 +478,7 @@ object Similarity {
         val (c, cb) = trainIvfCentroidsWithCoarse(candidates, nCells,
           trainIters, pCoarse, idCol, vecCol)
         (c, Some(cb))
-      } else (candidates
-        .filter(col(idCol) >= 0 && col(idCol) < nCells)
-        .select(col(idCol).cast("long").as("_fid"), col(vecCol).as("_fvec")),
-        None)
+      } else (ivfSeeds(candidates, nCells, idCol, vecCol), None)
     val coarse = coarseOpt
       .getOrElse(collectCoarse(cents, coarseCellCount(nCells)))
     twoLevelProbesWithCoarse(coarse, cents, candidates, 1, pCoarse,
@@ -484,16 +490,15 @@ object Similarity {
     // ranks cells against it WITHOUT scanning the index (the fine
     // centroids live scattered across cell partitions; reading them from
     // the data would defeat the pruning the layout exists for). The
-    // underscore prefix hides the subdir from spark.read.parquet(dir)'s
-    // discovery, so the index dir still reads as the plain partitioned
-    // frame.
+    // underscore prefix hides the subdir from Spark's file listing of
+    // the index dir, so it still reads as the plain partitioned frame.
     // build-time FIT: mean squared assignment distance over the written
     // layout (a read-back of the compact index + one broadcast join
     // against the nCells-row quantizer — build-time only, never on the
     // probe path). Recorded in _meta so an APPEND batch can measure how
     // well the frozen quantizer still fits incoming data (drift).
     val spark = candidates.sparkSession
-    val (_, buildFit) = assignFit(spark.read.parquet(dir), cents, vecCol)
+    val (_, buildFit) = assignFit(Tables.readParquet(spark, dir), cents, vecCol)
     cents
       .select(col("_fid").as(idCol), col("_fvec").as(vecCol))
       .coalesce(1)
@@ -567,7 +572,7 @@ object Similarity {
       s"no _meta at $dir: appendToIvfIndex needs the r17+ layout " +
         "(rebuild with writeIvfIndex; a pre-_meta index has no recorded " +
         "geometry to freeze)")
-    val m = spark.read.parquet(s"$dir/_meta").first()
+    val m = Tables.readParquet(spark, s"$dir/_meta").first()
     val fmt = m.getAs[Int]("fmt")
     require(fmt <= IvfIndexFormat,
       s"ivf index at $dir has format $fmt; this build appends <= $IvfIndexFormat")
@@ -577,11 +582,11 @@ object Similarity {
     // once (compact columnar scan) so n_rows is correct from here on
     val oldRows =
       if (names.contains("n_rows")) m.getAs[Long]("n_rows")
-      else spark.read.parquet(dir).count()
+      else Tables.readParquet(spark, dir).count()
     val buildFit =
       if (names.contains("mean_sqdist")) Some(m.getAs[Double]("mean_sqdist"))
       else None
-    val cents = spark.read.parquet(s"$dir/_centroids")
+    val cents = Tables.readParquet(spark, s"$dir/_centroids")
       .select(col(idCol).cast("long").as("_fid"), col(vecCol).as("_fvec"))
     val asg = twoLevelProbesAgainst(cents, batch, nCells, 1, pCoarse,
         idCol, vecCol)
@@ -626,7 +631,7 @@ object Similarity {
     val fs = inPath.getFileSystem(conf)
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$inDir/_meta")),
       s"no _meta at $inDir: compactIvfIndex needs the r17+ layout")
-    val fmt = spark.read.parquet(s"$inDir/_meta").first().getAs[Int]("fmt")
+    val fmt = Tables.readParquet(spark, s"$inDir/_meta").first().getAs[Int]("fmt")
     require(fmt <= IvfIndexFormat,
       s"ivf index at $inDir has format $fmt; this build compacts <= $IvfIndexFormat")
     def cellFileCount(dir: String): Int = {
@@ -638,7 +643,7 @@ object Similarity {
         .sum
     }
     val before = cellFileCount(inDir)
-    spark.read.parquet(inDir)
+    Tables.readParquet(spark, inDir)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(outDir)
     Seq("_centroids", "_meta").foreach { side =>
@@ -693,7 +698,7 @@ object Similarity {
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     maxQueryBatch: Int = MaxIvfQueryBatch): DataFrame = PB.scoped {
-    val cents = spark.read.parquet(s"$dir/_centroids")
+    val cents = Tables.readParquet(spark, s"$dir/_centroids")
       .select(col(idCol).cast("long").as("_fid"), col(vecCol).as("_fvec"))
     // build-time geometry from _meta; a pre-r17 layout has no _meta and
     // an ungapped sidecar, so its row count IS the build nCells
@@ -701,7 +706,7 @@ object Similarity {
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nCells =
       if (fs.exists(metaPath)) {
-        val m = spark.read.parquet(s"$dir/_meta").first()
+        val m = Tables.readParquet(spark, s"$dir/_meta").first()
         val fmt = m.getAs[Int]("fmt")
         require(fmt <= IvfIndexFormat,
           s"ivf index at $dir has format $fmt; this build probes <= $IvfIndexFormat")
@@ -724,7 +729,7 @@ object Similarity {
       if (nProbes <= maxQueryBatch.toLong * IvfBroadcastProbesPerQuery) {
         val probeCells = qprobes.select("cell").distinct()
           .collect().map(_.getLong(0)).toIndexedSeq
-        spark.read.parquet(dir)
+        Tables.readParquet(spark, dir)
           .filter(col("cell").cast("long").isin(probeCells: _*))
           .select(col(idCol).as("vec_id"), col(vecCol).as("cvec"),
             col("cell").cast("long").as("cell"))
@@ -732,7 +737,7 @@ object Similarity {
       } else {
         // oversized batch: prune cells via a semi join (dynamic, not a
         // driver isin) and let the probe join shuffle on cell
-        spark.read.parquet(dir)
+        Tables.readParquet(spark, dir)
           .select(col(idCol).as("vec_id"), col(vecCol).as("cvec"),
             col("cell").cast("long").as("cell"))
           .join(qprobes.select("cell").distinct(), Seq("cell"), "left_semi")

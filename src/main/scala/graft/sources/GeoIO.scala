@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.GeoFunctions
 
 /** Geometry-aware read/write — the Spark-first analogue of gedixr's
@@ -53,7 +54,7 @@ object GeoIO {
   def readGeoParquet(spark: SparkSession, path: String,
                      lonCol: String = "lon", latCol: String = "lat"): (DataFrame, GeoMeta) = {
     val meta = readMeta(path)
-    val df = spark.read.parquet(path)
+    val df = Tables.readParquet(spark, path)
     require(df.columns.contains(meta.geometryColumn),
       s"geometry column '${meta.geometryColumn}' missing from $path")
     val restored = df

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.Tables
+
 /** Generic range-clustered parquet layout — the non-spatial sibling of
   * GeoOps.writeSpatiallyClustered and the mechanism behind lakehouse
   * "liquid clustering": `repartitionByRange` + in-partition sort on the
@@ -77,7 +79,7 @@ object Layout {
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     val totalBytes = parts.map(_.getLen).sum
     val files = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    spark.read.parquet(inDir)
+    Tables.readParquet(spark, inDir)
       .coalesce(files)
       .write.mode("overwrite").parquet(outDir)
     (parts.length, files)

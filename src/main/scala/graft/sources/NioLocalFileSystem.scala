@@ -4,8 +4,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSLinkResolver,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -14,10 +14,13 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * It is Hadoop's checksummed `LocalFileSystem`, so `.crc` sidecars are
   * still written and still verified on read; only the raw layer below it
-  * differs, in [[NioRawLocalFileSystem.setPermission]]. Without Hadoop's
-  * native library the stock raw layer forks a `chmod` process for every
-  * created file, every `.crc` sidecar and every directory; a parquet write
-  * with `partitionBy` pays that once per file and once per directory. */
+  * differs, in [[NioRawLocalFileSystem.setPermission]] and
+  * [[NioRawLocalFileSystem.getFileLinkStatus]]. Without Hadoop's native
+  * library the stock raw layer forks a `chmod` process for every created
+  * file, every `.crc` sidecar and every directory (a parquet write with
+  * `partitionBy` pays that once per file and once per directory), and a
+  * `readlink` process for every link-status lookup, which streaming
+  * checkpoints make through `FileContext`. */
 final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 
 /** The same filesystem for Hadoop's `FileContext` API, which streaming
@@ -53,6 +56,31 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     val mode = permission.toShort.toInt
     if ((mode & ~Rwx) != 0 || !setInProcess(pathToFile(p).toPath, mode))
       super.setPermission(p, permission)
+  }
+
+  /** The stock link status, with the link read by NIO instead of a forked
+    * `readlink` (`FileUtil.readLink`). As in the stock code the link is
+    * read at `new File(f.toString)`, so a scheme-qualified path never reads
+    * as a link and gets the status of what it points at. */
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val link = new java.io.File(f.toString).toPath
+    val target = if (Files.isSymbolicLink(link)) Files.readSymbolicLink(link).toString else ""
+    val st =
+      try {
+        val s = getFileStatus(f)
+        if (target.isEmpty) s
+        else new FileStatus(s.getLen, false, s.getReplication, s.getBlockSize,
+          s.getModificationTime, s.getAccessTime, s.getPermission, s.getOwner, s.getGroup,
+          new Path(target), f)
+      } catch {
+        // a dangling link: the stock status of a link whose target is gone
+        case _: java.io.FileNotFoundException if target.nonEmpty =>
+          new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault, "", "",
+            new Path(target), f)
+      }
+    if (st.isSymlink)
+      st.setSymlink(FSLinkResolver.qualifySymlinkTarget(getUri, st.getPath, st.getSymlink))
+    st
   }
 
   /** false, having changed nothing, when the current mode has a special

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
+import graft.Tables
+
 /** SURVEY §2.4 — Structured Streaming transforms over the events stream.
   * Batch analogues are q_events_bucket (windowed counts) and gedixr's
   * per-granule run loop; here the same semantics run incrementally with
@@ -128,7 +130,7 @@ object EventStreams {
   def readUpsertState(spark: org.apache.spark.sql.SparkSession,
                       stateDir: String): DataFrame =
     latestSnapshot(spark, stateDir) match {
-      case Some(p) => spark.read.parquet(p.toString)
+      case Some(p) => Tables.readParquet(spark, p.toString)
       case None => throw new IllegalStateException(
         s"no complete upsert state snapshot under $stateDir")
     }
@@ -259,7 +261,7 @@ object EventStreams {
     // implementations with side effects (admitStream's pairs write)
     // must guard them on batchId >= 0
     val base = snapshotBefore(spark, stateDir, batchId)
-      .map(p => spark.read.parquet(p.toString))
+      .map(p => Tables.readParquet(spark, p.toString))
       .getOrElse(merge(batch.limit(0), batch, -1L).limit(0))
     // materialized (localCheckpoint) before writing: on a replay the
     // merge plan may read the very snapshot directory it overwrites

@@ -297,6 +297,16 @@ class SimilaritySpec extends SparkSpec {
     assert(cents(1) === want1)
   }
 
+  test("trainIvfCentroids(iters = 0) returns the seeds with no job, even when none exists") {
+    val corpus = emb
+    var seeds: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { seeds = Similarity.trainIvfCentroids(corpus, 16, 0) } === 0)
+    assert(seeds.columns.toSeq === Seq("_fid", "_fvec"))
+    // no id in [0, nCells): an empty seed frame, not a failed coarse collect
+    val shifted = corpus.withColumn("vec_id", col("vec_id") + 1000000L)
+    assert(Similarity.trainIvfCentroids(shifted, 16, 0).count() === 0)
+  }
+
   test("writeIvfIndex(trainIters): the persisted quantizer IS the trained " +
       "frame; ivfProbeIndex == ivfTopKTrained; _meta records the build (r17)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivft").toString + "/index"

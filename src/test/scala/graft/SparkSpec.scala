@@ -12,6 +12,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** Spark jobs started while `body` runs (listener bus drained on both
+    * sides so no event of an earlier test leaks in). */
+  protected def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftbridge.PlanBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.PlanBridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
 }
 
 object SparkSpec {

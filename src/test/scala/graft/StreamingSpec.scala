@@ -153,6 +153,43 @@ class StreamingSpec extends SparkSpec {
     assert(fc.getDefaultFileSystem.getClass === classOf[graft.sources.NioLocalFs])
   }
 
+  test("link status matches the stock raw filesystem's for files, directories and links") {
+    import org.apache.hadoop.fs.{FileContext, FileStatus, Path, RawLocalFileSystem}
+    val base = java.nio.file.Files.createTempDirectory("graft_links")
+    val file = java.nio.file.Files.writeString(base.resolve("file"), "x")
+    java.nio.file.Files.createDirectory(base.resolve("dir"))
+    java.nio.file.Files.createSymbolicLink(base.resolve("link"), file)
+    java.nio.file.Files.createSymbolicLink(base.resolve("dangling"), base.resolve("gone"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val stock = new RawLocalFileSystem
+    val nio = new graft.sources.NioRawLocalFileSystem
+    Seq(stock, nio).foreach(_.initialize(new java.net.URI("file:///"), conf))
+    val stockConf = new org.apache.hadoop.conf.Configuration(conf)
+    stockConf.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.LocalFs")
+    val stockFc = FileContext.getLocalFSFileContext(stockConf)
+    val nioFc = FileContext.getLocalFSFileContext(conf)
+    assert(nioFc.getDefaultFileSystem.getClass === classOf[graft.sources.NioLocalFs])
+    def shape(st: => FileStatus): Any =
+      try {
+        val s = st
+        (s.getPath, s.isFile, s.isDirectory, s.isSymlink,
+          if (s.isSymlink) Some(s.getSymlink) else None, s.getLen, s.getModificationTime,
+          s.getPermission, s.getOwner, s.getGroup)
+      } catch { case e: java.io.IOException => e.getClass }
+    for (name <- Seq("file", "dir", "link", "dangling", "missing")) {
+      val plain = new Path(base.resolve(name).toString)
+      val qualified = new Path(base.resolve(name).toUri)
+      for (p <- Seq(plain, qualified))
+        assert(shape(nio.getFileLinkStatus(p)) === shape(stock.getFileLinkStatus(p)), p)
+      assert(shape(nioFc.getFileLinkStatus(qualified)) === shape(stockFc.getFileLinkStatus(qualified)),
+        qualified)
+    }
+    // a scheme-less path reads links, dangling ones included
+    assert(nio.getFileLinkStatus(new Path(base.resolve("dangling").toString)).isSymlink)
+    assert(nio.getFileLinkStatus(new Path(base.resolve("link").toString)).getSymlink ===
+      new Path(file.toUri))
+  }
+
   test("a 3-batch stateful stream's state files carry the stock permission bits") {
     import scala.jdk.CollectionConverters._
     // mode bits of every path a groupBy().count() stream leaves under its
