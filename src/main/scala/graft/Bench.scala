@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.PlanBridge
 
@@ -14,6 +16,10 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * top-level ORDER BY every query carries for oracle determinism is
   * stripped (PlanBridge), so timings measure the operator, not a global
   * sort of the full output.
+  *
+  * The file (and its bench_history.jsonl copy) also carries each row's
+  * Spark job and completed-stage count, of the run whose time it reports
+  * (`"jobs"`, `"stages"`; -1 for an error).
   */
 object Bench {
 
@@ -48,6 +54,34 @@ object Bench {
       val s = vs.sorted
       k -> s((s.size - 1) / 2)
     }.toMap
+  }
+
+  /** Spark jobs started and stages completed since the last [[reset]],
+    * from one listener. Both calls drain the listener bus, so a finished
+    * action's events are all counted and none of an earlier one leaks in. */
+  private[graft] final class JobCounter(spark: SparkSession) {
+    private val jobs = new AtomicInteger
+    private val stages = new AtomicInteger
+    private val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+
+    def reset(): Unit = {
+      PlanBridge.drainListenerBus(spark)
+      jobs.set(0)
+      stages.set(0)
+    }
+
+    /** (jobs, stages) since the last reset. */
+    def counts(): (Int, Int) = {
+      PlanBridge.drainListenerBus(spark)
+      (jobs.get, stages.get)
+    }
+
+    def close(): Unit = spark.sparkContext.removeSparkListener(listener)
   }
 
   def main(args: Array[String]): Unit = {
@@ -126,19 +160,26 @@ object Bench {
       if (killAfter.contains(name)) spark.stop()
       assertAlive(name)
     }
+    // jobs and stages of every timed run (the bus drains outside the clock)
+    val counter = new JobCounter(spark)
+    val boardCounts = scala.collection.mutable.Map.empty[String, (Int, Int)]
     val boardResults = ordered.map { case (name, fn) =>
       val runs = (1 to reps).map { _ =>
+        counter.reset()
         val t0 = System.nanoTime()
         val err = runOnce(fn)
         assertAlive(name)
-        ((System.nanoTime() - t0) / 1e9, err)
+        val t = (System.nanoTime() - t0) / 1e9
+        (t, err, counter.counts())
       }
-      val ok = runs.collect { case (t, None) => t }
+      val ok = runs.collect { case (t, None, c) => (t, c) }
       // A query is an error only if EVERY rep failed; a transient single-rep
       // failure with a successful best run is a success (best-of-N intent).
       val err = if (ok.isEmpty) runs.flatMap(_._2).headOption else None
-      val best = if (ok.nonEmpty) ok.min else -1.0
-      val worst = if (ok.nonEmpty) ok.max else -1.0
+      val best = if (ok.nonEmpty) ok.map(_._1).min else -1.0
+      val worst = if (ok.nonEmpty) ok.map(_._1).max else -1.0
+      // the counts of the best run: the plan the reported time measured
+      if (ok.nonEmpty) boardCounts(name) = ok.minBy(_._1)._2
       (name, best, worst, err)
     }
     // SELF-ADJUDICATION (r16, widened r17): three consecutive rounds
@@ -223,6 +264,9 @@ object Bench {
     val spread = results.collect { case (k, b, w, None) if b > 0 =>
       s""""$k":${math.round(w / b * 100) / 100.0}"""
     }.mkString("{", ",", "}")
+    def countJson(pick: ((Int, Int)) => Int) = results
+      .map { case (k, _, _, _) => s""""$k":${boardCounts.get(k).fold(-1)(pick)}""" }
+      .mkString("{", ",", "}")
     val errs = results.collect { case (k, _, _, Some(e)) =>
       RunLog.toJson(Seq(k -> e)).stripPrefix("{").stripSuffix("}")
     }.mkString("{", ",", "}")
@@ -240,7 +284,7 @@ object Bench {
       s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$top5,"n_queries":${results.size},"reps":$reps,"spread_max":$spreadMax,"n_adjudicated":${adjudicated.size},"n_errors":$nErr,"sf":"$sfDir"}"""
     def r2(v: Double): String = (math.round(v * 100) / 100.0).toString
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(_.toString)},"spread":$spread,"reps":$reps,"adj_hist":$adjHist,"adj_spread":$adjSpread,"hist_ratio":${r2(histRatio)},"adjudication":$adjJson,"errors":$errs,"n_errors":$nErr,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(_.toString)},"jobs":${countJson(_._1)},"stages":${countJson(_._2)},"spread":$spread,"reps":$reps,"adj_hist":$adjHist,"adj_spread":$adjSpread,"hist_ratio":${r2(histRatio)},"adjudication":$adjJson,"errors":$errs,"n_errors":$nErr,"sf":"$sfDir"}"""
     Files.writeString(Paths.get(outPath), full + "\n")
     // bench_out.json is overwritten every run, which made r6-vs-r7
     // per-query comparisons unreproducible (ADVICE r7). Append the full

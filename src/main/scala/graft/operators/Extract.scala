@@ -43,9 +43,10 @@ object Extract {
     * extract.py:287-290. */
   def padShot(c: Column): Column = lpad(c.cast("string"), 18, "0")
 
-  /** Stamp every shot with its granule's acquisition time — ref
-    * extract.py:299 (`gdf['acq_time'] = acq_time`): parse once from the
-    * granule id column, broadcast to every row as a plain projection. */
+  /** Stamp each row with the acquisition time its granule id names — ref
+    * extract.py:299 (`gdf['acq_time'] = acq_time`). Ingest stamps a
+    * driver-local frame of the granule ids, so the parse runs once per
+    * granule and the value rides that granule's shots. */
   def stampAcqTime(df: DataFrame, granuleIdCol: String): DataFrame =
     df.withColumn("acq_time", granuleDate(col(granuleIdCol)))
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{broadcast, col, count, lead, lit, round, row_number, sum, when}
 import org.apache.spark.sql.graftbridge.{PlanBridge => PB}
 
@@ -268,7 +268,8 @@ object MergeOps {
     * pairs; everything after is constant-size.
     *
     * Output: one row per pattern — (features..., n_pairs, match_weight,
-    * is_match). */
+    * is_match), in no particular order; [[patternId]] over the feature
+    * columns orders them as the oracle does. */
   def fellegiSunter(pairs: DataFrame, featCols: Seq[String], rounds: Int = 2,
                     p0: Double = 0.1, m0: Double = 0.8,
                     u0: Double = 0.2): DataFrame = PB.scoped {
@@ -277,13 +278,10 @@ object MergeOps {
     require(rounds >= 1 && rounds <= 6, "rounds must be in [1, 6] (unrolled)")
     val W = org.apache.spark.sql.expressions.Window
     val idx = featCols.indices
-    val pid = featCols.zipWithIndex
-      .map { case (c, i) => when(col(c), lit(1L << i)).otherwise(lit(0L)) }
-      .reduce(_ + _)
     val pat = pairs
       .groupBy(featCols.map(c => col(c).cast("boolean").as(c)): _*)
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
-      .withColumn("pid", pid)
+      .withColumn("pid", patternId(featCols))
       .transform(PB.localCheckpoint) // ≤ 2^f rows; every EM round reads it
     var params: DataFrame = pat.sparkSession.range(1).select(
       lit(p0).as("p") +:
@@ -326,11 +324,13 @@ object MergeOps {
     }
     scored(params).select(featCols.map(col) :+ col("cnt").as("n_pairs") :+
       org.apache.spark.sql.functions.round(col("w"), 6).as("match_weight") :+
-      (org.apache.spark.sql.functions.round(col("w"), 6) > 0.5).as("is_match") :+
-      col("pid"): _*)
-      .orderBy("pid")
-      .drop("pid")
+      (org.apache.spark.sql.functions.round(col("w"), 6) > 0.5).as("is_match"): _*)
   }
+
+  /** A [[fellegiSunter]] pattern's bit id: feature i true sets bit i. */
+  def patternId(featCols: Seq[String]): Column = featCols.zipWithIndex
+    .map { case (c, i) => when(col(c), lit(1L << i)).otherwise(lit(0L)) }
+    .reduce(_ + _)
 
   /** DuckDB oracle for [[fellegiSunter]] — identical pattern collapse,
     * unrolled EM chain, ordered folds and double trees. `pairsSub` must

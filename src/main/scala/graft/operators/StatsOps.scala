@@ -159,7 +159,8 @@ object StatsOps {
     * partition). Cost at 100 TB: two scans instead of one, but the sort
     * of rows×(columns+1) wide tuples the fused plan paid dwarfs a second
     * columnar scan; [[profileApprox]] stays the single-pass scale
-    * default. Results are bit-identical (same aggregates, same stack). */
+    * default. Results are bit-identical (same aggregates, same stack).
+    * Rows come unsorted. */
   def profile(df: DataFrame): DataFrame = {
     val cols = df.columns
     val basicAggs = cols.zipWithIndex.flatMap { case (c, i) => Seq(
@@ -182,7 +183,6 @@ object StatsOps {
       .select(col("n_rows"),
         expr(s"stack(${cols.length}, $stacked)")
           .as(Seq("col_name", "n_non_null", "n_distinct", "min_str", "max_str")))
-      .orderBy("col_name")
   }
 
   /** Approximate one-scan column profiler — the 100 TB INGEST-GATE
@@ -198,7 +198,7 @@ object StatsOps {
     * sketch row per partition, cost independent of distinct cardinality.
     * The declared q_profile_approx hash-verifies every exact column of
     * this report and pins the estimate with a 5%-bound flag (the
-    * q_hll_distinct pattern). */
+    * q_hll_distinct pattern). Rows come unsorted. */
   def profileApprox(df: DataFrame, rsd: Double = 0.05): DataFrame = {
     val cols = df.columns
     val aggs = cols.zipWithIndex.flatMap { case (c, i) => Seq(
@@ -216,7 +216,6 @@ object StatsOps {
         expr(s"stack(${cols.length}, $stacked)")
           .as(Seq("col_name", "n_non_null", "n_distinct_approx",
             "min_str", "max_str")))
-      .orderBy("col_name")
   }
 
   /** Exact two-sample Kolmogorov–Smirnov distance between the `valueCol`
@@ -983,45 +982,34 @@ object StatsOps {
     * computed once in Scala and inlined as literals into BOTH plans, so
     * no engine's log10 enters the compare.
     *
-    * Scale shape: one map-side-combined (group, digit) count — the only
-    * corpus-sized shuffle; the chi² folds over the ≤9-cell grid per
-    * group in digit order (cumsum-take-last, the declared-fold
-    * convention).
+    * Scale shape: one scan and one map-side-combined `groupBy(grp)`
+    * holding nine conditional digit counts o1..o9 — the only shuffle, one
+    * row per group. chi² is the left fold t1 + t2 + … + t9 of the terms
+    * (o_d − n·p_d)² / (n·p_d) in digit order, the oracle's ordered window
+    * fold (its running sum starts at 0.0 + t1 = t1, every term being
+    * ≥ 0); an absent digit counts 0, as the oracle's dense grid does.
     *
     * Output: (grp, n_vals, chi2, d1_share) per group, chi2/d1_share
-    * rounded 6. */
+    * rounded 6, in no particular order. */
   def benfordAudit(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pGrid = (1 to 9).map(d => (d.toLong, math.log10(1.0 + 1.0 / d)))
-      .toDF("d", "p")
     val digits = df.filter(col(valueCol) > 0 && col(groupCol).isNotNull)
       .select(col(groupCol).as("grp"),
         floor(col(valueCol) * 100.0).cast("long").as("cents"))
       .filter(col("cents") > 0)
       .select(col("grp"),
         substring(col("cents").cast("string"), 1, 1).cast("long").as("d"))
-    val cells = digits.groupBy("grp", "d").agg(count(lit(1)).as("obs"))
-    val tot = cells.groupBy("grp").agg(sum(col("obs")).as("n_vals"))
-    val ordd = W.partitionBy("grp").orderBy("d")
-    val cumd = ordd.rowsBetween(W.unboundedPreceding, W.currentRow)
-    tot.crossJoin(broadcast(pGrid))
-      .join(cells, Seq("grp", "d"), "left")
-      .withColumn("obs0", coalesce(col("obs"), lit(0L)))
-      .withColumn("exp_d", col("n_vals").cast("double") * col("p"))
-      .withColumn("term",
-        (col("obs0").cast("double") - col("exp_d")) *
-          (col("obs0").cast("double") - col("exp_d")) / col("exp_d"))
-      .withColumn("cum", sum(col("term")).over(cumd))
-      .withColumn("d1", max(when(col("d") === 1L, col("obs0"))).over(
-        W.partitionBy("grp")))
-      .withColumn("rn", row_number().over(ordd))
-      .filter(col("rn") === 9)
-      .select(col("grp"), col("n_vals"), round(col("cum"), 6).as("chi2"),
-        round(col("d1").cast("double") / col("n_vals").cast("double"), 6)
+    val ds = 1 to 9
+    val obs = ds.map(d => count(when(col("d") === d.toLong, 1)).as(s"o$d"))
+    val terms = ds.map { d =>
+      val o = col(s"o$d").cast("double")
+      val e = col("n_vals").cast("double") * lit(math.log10(1.0 + 1.0 / d))
+      (o - e) * (o - e) / e
+    }
+    digits.groupBy("grp").agg(obs.head, obs.tail: _*)
+      .withColumn("n_vals", ds.map(d => col(s"o$d")).reduce(_ + _))
+      .select(col("grp"), col("n_vals"), round(terms.reduce(_ + _), 6).as("chi2"),
+        round(col("o1").cast("double") / col("n_vals").cast("double"), 6)
           .as("d1_share"))
-      .orderBy("grp")
   }
 
   /** DuckDB oracle for [[benfordAudit]] — identical cent quantization,
@@ -1083,7 +1071,8 @@ object StatsOps {
     * containing run by a broadcast range probe (cumn₀ < r ≤ cumn), and
     * read their cumulative weight off the run's affine form
     * (cumw₀ + (r − cumn₀)·w). No window anywhere reads more than a
-    * partition-local slice of the run frame. Output ≤ 10 rows/group. */
+    * partition-local slice of the run frame. Output ≤ 10 rows/group,
+    * unsorted. */
   def lorenzCurve(df: DataFrame, groupCol: String, idCol: String,
                   weightCol: String, numPartitions: Int = 8): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
@@ -1141,7 +1130,6 @@ object StatsOps {
         col("r").cast("long").as("cum_items"),
         round((col("cumw0") + (col("r") - col("cumn0")) * col("w"))
           .cast("double") / col("tot").cast("double"), 6).as("cum_share"))
-      .orderBy("grp", "decile")
   }
 
   /** DuckDB oracle for [[lorenzCurve]] — the single-window per-item
@@ -2244,7 +2232,7 @@ object StatsOps {
     * `bins` is a declared constant). Ordered bin fold per group (the
     * portable float reduction).
     *
-    * Output: (group, n_ref, n_cur, psi). */
+    * Output: (group, n_ref, n_cur, psi), unsorted. */
   def psi(df: DataFrame, groupCol: String, binCol: String, sideCol: String,
           bins: Int = 10, alpha: Double = 0.5): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
@@ -2279,7 +2267,6 @@ object StatsOps {
       .filter(col("rn") === col("nb"))
       .select(col("grp").as(groupCol), col("n_ref"), col("n_cur"),
         round(col("cum"), 6).as("psi"))
-      .orderBy(groupCol)
   }
 
   /** DuckDB oracle for [[psi]] — identical clamp, grid, smoothing and
@@ -2322,8 +2309,8 @@ object StatsOps {
     * bucketed metric: numerator 2*sum_b pos_b*(2*cumneg_<b + neg_b)
     * stays integer, one division at the end.
     *
-    * Output: (group, n_pos, n_neg, auc). Groups with no positives or no
-    * negatives drop (AUC undefined). */
+    * Output: (group, n_pos, n_neg, auc), unsorted. Groups with no
+    * positives or no negatives drop (AUC undefined). */
   def groupAuc(df: DataFrame, groupCol: String, bucketCol: String,
                labelCol: String): DataFrame =
     aucFromCounts(aucCounts(df, groupCol, bucketCol, labelCol), groupCol)
@@ -2363,7 +2350,6 @@ object StatsOps {
         round(col("num2").cast("double") /
           (lit(2.0) * col("tp").cast("double") * col("cumn").cast("double")), 6)
           .as("auc"))
-      .orderBy(groupCol)
   }
 
   /** DuckDB oracle for [[groupAuc]] — identical bucket counts and
@@ -2571,7 +2557,7 @@ object StatsOps {
     * compares against the chi-square(1) 95% critical value 3.841 —
     * integer-derived doubles, so the boundary is engine-stable.
     *
-    * Output: (group, n0, n1, srm_chi2, srm_flag). */
+    * Output: (group, n0, n1, srm_chi2, srm_flag), unsorted. */
   def sampleRatioMismatch(df: DataFrame, groupCol: String, armCol: String,
                           expected0: Double = 0.5): DataFrame = {
     val counts = df
@@ -2587,7 +2573,6 @@ object StatsOps {
       (col("n1").cast("double") - e1) * (col("n1").cast("double") - e1) / e1
     counts.select(col("grp").as(groupCol), col("n0"), col("n1"),
         round(chi2, 6).as("srm_chi2"), (chi2 > 3.841).as("srm_flag"))
-      .orderBy(groupCol)
   }
 
   /** DuckDB oracle for [[sampleRatioMismatch]] — identical counts and
@@ -2619,7 +2604,7 @@ object StatsOps {
     * even at ties, and the argmax tie-breaks (score desc, day asc).
     *
     * Output: (group, split_day, n_days, left_days, left_sum, right_sum,
-    * score). Groups with < 2 days drop. */
+    * score), unsorted. Groups with < 2 days drop. */
   def changepoint(df: DataFrame, groupCol: String, tsCol: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val daily = df
@@ -2647,7 +2632,6 @@ object StatsOps {
         col("nd").as("n_days"), col("t").as("left_days"),
         col("s1").as("left_sum"), (col("stot") - col("s1")).as("right_sum"),
         round(col("score"), 6).as("score"))
-      .orderBy(groupCol)
   }
 
   /** DuckDB oracle for [[changepoint]] — identical day grid, prefix
@@ -2834,7 +2818,7 @@ object StatsOps {
     * (group, bin, side) count; folds on the bins × groups grid, ordered
     * per group (the portable float reduction).
     *
-    * Output: (group, n_ref, n_cur, hellinger, tv). */
+    * Output: (group, n_ref, n_cur, hellinger, tv), unsorted. */
   def distShift(df: DataFrame, groupCol: String, binCol: String,
                 sideCol: String, bins: Int = 10,
                 alpha: Double = 0.5): DataFrame = PB.scoped {
@@ -2875,7 +2859,6 @@ object StatsOps {
         round(sqrt(greatest(lit(1.0) - col("hcum"), lit(0.0))), 6)
           .as("hellinger"),
         round(col("tcum") * 0.5, 6).as("tv"))
-      .orderBy(groupCol)
   }
 
   /** DuckDB oracle for [[distShift]] — identical grid, smoothing and
@@ -2924,7 +2907,7 @@ object StatsOps {
     * ordered (p, grp) so ties rank deterministically. Groups with an
     * empty side drop (no test without two samples).
     *
-    * Output: (group, n_ref, n_cur, ks_d, p_value, rnk, reject). */
+    * Output: (group, n_ref, n_cur, ks_d, p_value, rnk, reject), unsorted. */
   def bhFdr(df: DataFrame, groupCol: String, binCol: String,
             sideCol: String, bins: Int = 64,
             alpha: Double = 0.10): DataFrame = {
@@ -2974,7 +2957,6 @@ object StatsOps {
     ranked.select(col("grp").as(groupCol), col("n_ref"), col("n_cur"),
         col("ks_d"), col("p_value"), col("rnk"),
         (col("rnk") <= coalesce(col("maxok"), lit(0L))).as("reject"))
-      .orderBy(groupCol)
   }
 
   /** DuckDB oracle for [[bhFdr]] — identical grid, CDF cross products,
@@ -3024,7 +3006,7 @@ object StatsOps {
     * [[groupAuc]] stance); the AP fold runs ordered on the bounded
     * bucket grid, never a per-row rank. Groups with no positives drop.
     *
-    * Output: (group, n_pos, n_rows, avg_prec). */
+    * Output: (group, n_pos, n_rows, avg_prec), unsorted. */
   def avgPrecision(df: DataFrame, groupCol: String, bucketCol: String,
                    labelCol: String): DataFrame =
     apFromCounts(aucCounts(df, groupCol, bucketCol, labelCol), groupCol)
@@ -3052,7 +3034,6 @@ object StatsOps {
       .select(col("grp").as(groupCol), col("tp").as("n_pos"),
         col("nn").as("n_rows"),
         round(col("apnum") / col("tp").cast("double"), 6).as("avg_prec"))
-      .orderBy(groupCol)
   }
 
   /** DuckDB oracle for [[avgPrecision]] — identical bucket counts and
@@ -3093,7 +3074,7 @@ object StatsOps {
     * bins-bounded grids (groups×bins vs bins — broadcast the pooled
     * side).
     *
-    * Output: (group, b, n, src_cdf_num, norm_b). */
+    * Output: (group, b, n, src_cdf_num, norm_b), unsorted. */
   def quantileNorm(df: DataFrame, groupCol: String, binCol: String,
                    bins: Int = 64): DataFrame = PB.scoped {
     val W = org.apache.spark.sql.expressions.Window
@@ -3123,7 +3104,6 @@ object StatsOps {
       .agg(min(col("pb")).as("norm_b"))
       .select(col("grp").as(groupCol), col("b"), col("n"),
         col("cr").as("src_cdf_num"), col("norm_b"))
-      .orderBy(groupCol, "b")
   }
 
   /** DuckDB oracle for [[quantileNorm]] — identical grids, integer

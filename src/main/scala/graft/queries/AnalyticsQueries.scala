@@ -692,7 +692,8 @@ object AnalyticsQueries {
     // per column — the distributed plan must agree with six independent
     // recomputes.
     Q("q_profile",
-      (s, d) => graft.operators.StatsOps.profile(Tables.load(s, d, "events")),
+      (s, d) => graft.operators.StatsOps.profile(Tables.load(s, d, "events"))
+        .orderBy("col_name"),
       Some {
         val branch = (c: String) =>
           "SELECT CAST(count(*) AS BIGINT) AS n_rows, " +

@@ -33,7 +33,8 @@ object AuditQueries {
     // BOTH plans (no engine libm in the compare).
     Q("q_benford",
       (s, d) => StatsOps.benfordAudit(ev(s, d), "event_type", "value")
-        .withColumnRenamed("grp", "event_type"),
+        .withColumnRenamed("grp", "event_type")
+        .orderBy("event_type"),
       Some("SELECT grp AS event_type, n_vals, chi2, d1_share FROM (" +
         StatsOps.benfordAuditSql("events", "event_type", "value") +
         ") z ORDER BY event_type")),
@@ -44,7 +45,8 @@ object AuditQueries {
     Q("q_lorenz",
       (s, d) => StatsOps.lorenzCurve(docs(s, d), "source", "doc_id",
           "n_chars")
-        .withColumnRenamed("grp", "source"),
+        .withColumnRenamed("grp", "source")
+        .orderBy("source", "decile"),
       Some("SELECT grp AS source, decile, cum_items, cum_share FROM (" +
         StatsOps.lorenzCurveSql("documents", "source", "doc_id", "n_chars") +
         ") z ORDER BY source, decile")),

@@ -74,7 +74,8 @@ object EvalQueries {
           floor(col("value") / 50.0).cast("long").as("bin"),
           (col("user_id") % 2).as("side")),
         "grp", "bin", "side", bins = 10)
-        .withColumnRenamed("grp", "event_type"),
+        .withColumnRenamed("grp", "event_type")
+        .orderBy("event_type"),
       Some("SELECT grp AS event_type, n_ref, n_cur, psi FROM (" +
         StatsOps.psiSql(
           "(SELECT event_type AS grp, CAST(floor(value / 50.0) AS BIGINT) AS bin, " +
@@ -91,7 +92,8 @@ object EvalQueries {
           least(floor(col("value") * 64.0 / 500.0), lit(63.0)).cast("long").as("b"),
           when(col("user_id") % 5 === 0, 1L).otherwise(0L).as("y")),
         "grp", "b", "y")
-        .withColumnRenamed("grp", "event_type"),
+        .withColumnRenamed("grp", "event_type")
+        .orderBy("event_type"),
       Some("SELECT grp AS event_type, n_pos, n_neg, auc FROM (" +
         StatsOps.groupAucSql(
           "(SELECT event_type AS grp, " +
@@ -167,7 +169,8 @@ object EvalQueries {
         ev(s, d).select(col("event_type").as("grp"),
           (col("user_id") % 2).as("arm")),
         "grp", "arm")
-        .withColumnRenamed("grp", "event_type"),
+        .withColumnRenamed("grp", "event_type")
+        .orderBy("event_type"),
       Some("SELECT grp AS event_type, n0, n1, srm_chi2, srm_flag FROM (" +
         StatsOps.sampleRatioMismatchSql(
           "(SELECT event_type AS grp, user_id % 2 AS arm FROM events)",
@@ -179,7 +182,8 @@ object EvalQueries {
       (s, d) => StatsOps.changepoint(
         ev(s, d).select(col("event_type").as("grp"), col("ts")),
         "grp", "ts")
-        .withColumnRenamed("grp", "event_type"),
+        .withColumnRenamed("grp", "event_type")
+        .orderBy("event_type"),
       Some("SELECT grp AS event_type, split_day, n_days, left_days, " +
         "left_sum, right_sum, score FROM (" +
         StatsOps.changepointSql(
@@ -343,7 +347,8 @@ object EvalQueries {
           floor(col("value") / 50.0).cast("long").as("bin"),
           (col("user_id") % 2).as("side")),
         "grp", "bin", "side", bins = 10)
-        .withColumnRenamed("grp", "event_type"),
+        .withColumnRenamed("grp", "event_type")
+        .orderBy("event_type"),
       Some("SELECT grp AS event_type, n_ref, n_cur, hellinger, tv FROM (" +
         StatsOps.distShiftSql(
           "(SELECT event_type AS grp, CAST(floor(value / 50.0) AS BIGINT) AS bin, " +
@@ -360,7 +365,8 @@ object EvalQueries {
             .as("bin"),
           (col("user_id") % 2).as("side")),
         "grp", "bin", "side", bins = 64, alpha = 0.10)
-        .withColumnRenamed("grp", "event_type"),
+        .withColumnRenamed("grp", "event_type")
+        .orderBy("event_type"),
       Some("SELECT grp AS event_type, n_ref, n_cur, ks_d, p_value, rnk, " +
         "reject FROM (" +
         StatsOps.bhFdrSql(
@@ -379,7 +385,8 @@ object EvalQueries {
             .as("b"),
           when(col("user_id") % 5 === 0, 1L).otherwise(0L).as("y")),
         "grp", "b", "y")
-        .withColumnRenamed("grp", "event_type"),
+        .withColumnRenamed("grp", "event_type")
+        .orderBy("event_type"),
       Some("SELECT grp AS event_type, n_pos, n_rows, avg_prec FROM (" +
         StatsOps.avgPrecisionSql(
           "(SELECT event_type AS grp, " +
@@ -435,7 +442,8 @@ object EvalQueries {
           least(floor(col("value") * 64.0 / 500.0), lit(63.0)).cast("long")
             .as("bin")),
         "grp", "bin", bins = 64)
-        .withColumnRenamed("grp", "event_type"),
+        .withColumnRenamed("grp", "event_type")
+        .orderBy("event_type", "b"),
       Some("SELECT grp AS event_type, b, n, src_cdf_num, norm_b FROM (" +
         StatsOps.quantileNormSql(
           "(SELECT event_type AS grp, " +

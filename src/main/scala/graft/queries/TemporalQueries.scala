@@ -708,8 +708,9 @@ object TemporalQueries {
           .select((col("a_event_type") === col("b_event_type")).as("f_type"),
             (col("a_vdec") === col("b_vdec")).as("f_val"),
             (col("a_hr") === col("b_hr")).as("f_hour"))
-        MergeOps.fellegiSunter(pairs, Seq("f_type", "f_val", "f_hour"),
-          rounds = 2)
+        val feats = Seq("f_type", "f_val", "f_hour")
+        MergeOps.fellegiSunter(pairs, feats, rounds = 2)
+          .orderBy(MergeOps.patternId(feats))
       },
       Some(MergeOps.fellegiSunterSql(
         "SELECT (a.event_type = b.event_type) AS f_type, " +

@@ -23,9 +23,10 @@ import graft.operators.{Extract, GediCatalog}
   * bins its `rhNN` variables index (the whole vector when a variable
   * lands it, `--vars rh=rh`); the projection never weakens the reader's
   * validation (see [[Ingest.GranuleReader.read]]). Everything
-  * after the reader is declarative: shot padding, rh-percentile indexing,
-  * acq_time stamping and the quality predicate are codegen'd projections
-  * fused into the SAME stage as the read (no extra pass, no shuffle).
+  * after the reader is declarative: shot padding, rh-percentile indexing
+  * and the quality predicate are codegen'd projections fused into the
+  * SAME stage as the read (no extra pass, no shuffle); acq_time is parsed
+  * once per granule on the driver and rides the granule's rows.
   * At 100 TB this scales by granule count: 1000 executors ingest 1000
   * granules at a time, and the landing write is the stage boundary.
   *
@@ -184,9 +185,18 @@ object Ingest {
       .collect { case VarPlan(_, layer, _, Some(idx)) if !bins.contains(layer) => layer -> idx }
       .groupMapReduce(_._1)(_._2)(math.max)
     val beamList = beams
+    // acq_time: Extract's granule-id parse, evaluated once per kept
+    // granule over a driver-local relation of the ids (no job); the value
+    // rides every row of its granule
+    val stamps = Extract.stampAcqTime(spark.createDataFrame(
+        java.util.Arrays.asList(kept.map(k => Row(k._1)): _*),
+        StructType(Seq(StructField("granule_id", StringType, nullable = false)))),
+      "granule_id").select("acq_time")
+    val granules = kept.zip(stamps.collect().map(_.get(0)))
     val rawSchema = StructType(
       StructField("granule_id", StringType, nullable = false) +:
       StructField("beam", StringType, nullable = false) +:
+      stamps.schema("acq_time") +:
       plans.map(p => StructField("r_" + p.out, p.kind match {
         case LongKind => LongType
         case DoubleKind => DoubleType
@@ -196,9 +206,9 @@ object Ingest {
     // one partition per granule: task = granule, so a corrupt/slow file
     // retries alone instead of re-running a whole multi-granule slice,
     // and the scheduler load-balances heterogeneous granule sizes
-    val slices = math.max(1, kept.size)
-    val rdd = spark.sparkContext.parallelize(kept, slices).mapPartitions { it =>
-      it.flatMap { case (gid, path) =>
+    val slices = math.max(1, granules.size)
+    val rdd = spark.sparkContext.parallelize(granules, slices).mapPartitions { it =>
+      it.flatMap { case ((gid, path), acq) =>
         try {
           val read = reader.read(path, beamList, needed, bins)
           for (bl <- read; (layer, bin) <- wholeIndexed) {
@@ -216,7 +226,7 @@ object Ingest {
                   case VectorKind => bl.vectors(p.srcLayer)(i).toSeq
                 }
               }
-              Row.fromSeq(gid +: bl.beam +: vals)
+              Row.fromSeq(gid +: bl.beam +: acq +: vals)
             }
           }
         } catch {
@@ -229,7 +239,6 @@ object Ingest {
     }
 
     val raw = spark.createDataFrame(rdd, rawSchema)
-    val stamped = Extract.stampAcqTime(raw, "granule_id")
     val outCols =
       Seq(col("granule_id"), col("beam"), col("acq_time")) ++ plans.map { p =>
         if (p.srcLayer.endsWith("shot_number"))
@@ -243,7 +252,7 @@ object Ingest {
           case None => col("r_" + p.out).as(p.out)
         }
       }
-    val landed = stamped.select(outCols: _*)
+    val landed = raw.select(outCols: _*)
     (if (applyQualityFilter) Extract.qualityFilter(landed) else landed, errors)
   }
 

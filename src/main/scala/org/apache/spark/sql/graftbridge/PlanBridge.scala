@@ -102,10 +102,24 @@ object PlanBridge {
     * at scale. */
   def sharedLocalCheckpoint(df: DataFrame,
                             sizeInBytes: Option[Long] = None): DataFrame = {
-    val ds = owned(df.asInstanceOf[classic.Dataset[Row]].localCheckpoint(eager = false))
+    val origin = df.asInstanceOf[classic.Dataset[Row]]
+    val ds = owned(origin.localCheckpoint(eager = false))
+    checkpointRdd(ds).foreach(lr => originPlans.put(lr.rdd, origin.queryExecution.executedPlan))
     sizeInBytes.fold(ds: DataFrame)(size =>
       checkpointRdd(ds).fold(ds: DataFrame)(withSize(ds, _, size)))
   }
+
+  /** The physical plan that fills each lazy checkpoint, held as long as
+    * the checkpoint's RDD is. The first job to finish over a lazy
+    * checkpoint truncates its lineage, and with it the driver's last
+    * reference to the origin plan's SQL metrics, while tasks of other
+    * jobs of the same action (AQE runs independent stages as concurrent
+    * jobs) may still be computing its partitions. Collected before they
+    * end, those metrics are missing on the driver when the tasks report
+    * them, and the DAGScheduler logs "Failed to update accumulator" for
+    * each. */
+  private val originPlans = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], AnyRef]())
 
   /** Measured storage size of an (already materialized) localCheckpoint's
     * RDD — the same read [[freshLocalCheckpoint]] swaps into its stats;

@@ -40,10 +40,46 @@ class AuditOpsSpec extends SparkSpec {
     assert(chiB > 0.5)
   }
 
+  test("benfordAudit is bit-identical to the digit-ordered hand fold, zero cells and one-value groups too") {
+    // the operator's own cent quantization, digit, fold and HALF_UP round
+    def round6(v: Double): Double =
+      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def audit(vs: Seq[Double]): (Long, Double, Double) = {
+      val digits = vs.filter(_ > 0).map(v => math.floor(v * 100.0).toLong)
+        .filter(_ > 0).map(_.toString.take(1).toInt)
+      val n = digits.size.toLong
+      val obs = (1 to 9).map(d => digits.count(_ == d).toDouble)
+      val terms = (1 to 9).map { d =>
+        val e = n.toDouble * math.log10(1.0 + 1.0 / d)
+        (obs(d - 1) - e) * (obs(d - 1) - e) / e
+      }
+      (n, round6(terms.reduceLeft(_ + _)), round6(obs(0) / n.toDouble))
+    }
+    val groups = Map(
+      // digits 1, 1, 3, 7, 7, 7: six of the nine cells are empty
+      "gaps" -> Seq(1.0, 12.34, 3.5, 7.77, 70.0, 799.99),
+      // no leading 1 at all: d1_share is exactly 0
+      "no_one" -> Seq(2.0, 5.55, 9.0),
+      "single" -> Seq(4.2),
+      // uneven mass over every digit, with values the filters drop
+      "mixed" -> ((1 to 60).map(i => i * 1.37) ++ Seq(0.0, -3.0, 0.004)),
+      // nothing survives the filters: the group must not appear
+      "dropped" -> Seq(0.0, -1.0, 0.009))
+    val rows = groups.toSeq.flatMap { case (g, vs) => vs.map(v => (g, v)) } :+
+      ((null: String) -> 5.0)
+    val got = StatsOps.benfordAudit(rows.toDF("grp", "v"), "grp", "v").collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3))))
+      .toMap
+    assert(got.keySet === groups.keySet - "dropped")
+    got.foreach { case (g, v) => assert(v === audit(groups(g)), g) }
+    assert(got("single") === ((1L, got("single")._2, 0.0)))
+    assert(got("no_one")._3 === 0.0)
+  }
+
   test("lorenzCurve == brute-force decile model; boundary rule exact") {
     val df = (1L to 25L).map(i => ("s", i, i * i)).toDF("grp", "id", "w")
-    val got = StatsOps.lorenzCurve(df, "grp", "id", "w").collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
+    val got = StatsOps.lorenzCurve(df, "grp", "id", "w").orderBy("decile")
+      .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
     val ws = (1L to 25L).map(i => i * i).sorted
     val tot = ws.sum.toDouble
     val want = (1 to 25).flatMap { r =>

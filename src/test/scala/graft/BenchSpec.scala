@@ -21,8 +21,9 @@ class BenchSpec extends AnyFunSuite {
       "error values and malformed lines skipped") {
     val sf = "/root/testdata/sf0.1"
     withHistory(Seq(
-      s"""{"at":"t1","metric":"total","value":9,"queries":{"q_a":1.0,"q_b":2.0},"sf":"$sf"}""",
-      s"""{"at":"t2","metric":"total","value":9,"queries":{"q_a":3.0,"q_b":-1},"sf":"$sf"}""",
+      // per-row job and stage counts ride beside the timings, not in them
+      s"""{"at":"t1","metric":"total","value":9,"queries":{"q_a":1.0,"q_b":2.0},"jobs":{"q_a":7,"q_b":8},"stages":{"q_a":9,"q_b":9},"sf":"$sf"}""",
+      s"""{"at":"t2","metric":"total","value":9,"queries":{"q_a":3.0,"q_b":-1},"jobs":{"q_a":7,"q_b":-1},"stages":{"q_a":9,"q_b":-1},"sf":"$sf"}""",
       s"""{"at":"t3","metric":"total","value":9,"queries":{"q_a":5.0},"sf":"$sf"}""",
       // different sf: must not contribute
       s"""{"at":"t4","metric":"total","value":9,"queries":{"q_a":99.0},"sf":"/root/testdata/sf1"}""",

@@ -107,6 +107,49 @@ class CheckpointScopeSpec extends SparkSpec {
     assert(out.agg(sum("x")).head.getLong(0) === 135L)
   }
 
+  test("tasks still computing a lazy checkpoint report to live metrics (no lost accumulator updates)") {
+    import spark.implicits._
+    // louvain's sweep reads its lazy label checkpoints from AQE stages
+    // that run as concurrent jobs; the first to finish truncates the
+    // checkpoint's lineage while the others' tasks are still running. A
+    // driver GC in that window used to collect the origin plan's SQL
+    // metrics before those tasks reported them.
+    def clique(ids: Seq[Long]) = for (i <- ids; j <- ids if i < j) yield (i, j)
+    // built first: a session created after the appender is attached
+    // would reconfigure logging and drop it
+    val graphs = Seq(
+      clique(Seq(0L, 1L, 2L, 3L)) ++ clique(Seq(10L, 11L, 12L, 13L)) :+ ((3L, 10L)),
+      (0L until 120L).map(i => ((i * 7919L + 131L) % 28L, (i * 104729L + 37L) % 28L))
+        .filter { case (a, b) => a != b })
+      .map(_.toDF("a", "b"))
+    val lost = new java.util.concurrent.atomic.AtomicInteger
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "lost-accumulators", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("Failed to update accumulator"))
+          lost.incrementAndGet()
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.scheduler.DAGScheduler")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    @volatile var collecting = true
+    val gc = new Thread(() => while (collecting) { System.gc(); Thread.sleep(30) })
+    gc.setDaemon(true)
+    logger.addAppender(appender)
+    gc.start()
+    try {
+      graphs.foreach(g => assert(graft.operators.GraphOps.louvain(g).collect().nonEmpty))
+      PB.drainListenerBus(spark)
+    } finally {
+      collecting = false
+      gc.join()
+      logger.removeAppender(appender)
+    }
+    assert(lost.get === 0, "DAGScheduler lost task metrics of a collected accumulator")
+  }
+
   test("every checkpoint in src/main/scala/graft is made and released through PlanBridge") {
     val direct = """\.(localCheckpoint|unpersist|persist|cache)\(""".r
     val files = Files.walk(Paths.get("src/main/scala/graft"))

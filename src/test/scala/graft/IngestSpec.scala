@@ -74,6 +74,26 @@ class IngestSpec extends SparkSpec {
     assert(r2.getAs[Long]("rh98") === math.round(98 * 3 / 1e4 * 100))
   }
 
+  test("acq_time is parsed once per granule on the driver and equals the per-row parse") {
+    val root = fixtureRoot()
+    val paths = Files.list(Paths.get(root)).toArray.map(_.toString).toSeq.sorted
+    var df: org.apache.spark.sql.DataFrame = null
+    // the parse runs over a driver-local relation of the ids: no job
+    assert(jobsDuring {
+      df = Ingest.ingestPaths(spark, paths, "L2A", GediCatalog.beamGroups("all"),
+        GediCatalog.defaultBase("L2A"), new FixtureGranuleReader)._1
+    } === 0)
+    val got = df.select(col("granule_id"), col("acq_time"),
+      Extract.granuleDate(col("granule_id")).as("per_row")).collect()
+    assert(got.length === 7)
+    assert(got.map(_.getString(0)).distinct.length === 2)
+    got.foreach { r =>
+      assert(!r.isNullAt(1) && r.get(1) === r.get(2), r.toString)
+    }
+    assert(df.schema("acq_time") ===
+      Extract.stampAcqTime(df.select("granule_id"), "granule_id").schema("acq_time"))
+  }
+
   test("ingest month-filters by filename date and respects beam groups") {
     val root = fixtureRoot()
     val (june, _) = Ingest.ingest(spark, root, "L2A", monthRange = Some((5, 7)))

@@ -137,12 +137,10 @@ class StatsOpsSpec extends SparkSpec {
     // per-COLUMN re-scan), and NO Sort operator anywhere — the split's
     // entire point is a sort-free plan (keyless SortAggregate inserts no
     // Sort; the distinct branch must hash-aggregate).
-    val plan = org.apache.spark.sql.graftbridge.PlanBridge
-      .stripTopSort(StatsOps.profile(Tables.load(spark, sfDir, "events")))
+    val plan = StatsOps.profile(Tables.load(spark, sfDir, "events"))
       .queryExecution.executedPlan.toString()
     val scans = plan.linesIterator.count(_.contains("Scan parquet"))
     assert(scans === 2, "profile must read its input exactly twice")
-    // the stripped top-level orderBy is the determinism shim, not plan work
     assert(plan.linesIterator.count(_.contains(" Sort [")) === 0,
       "profile's plan must be sort-free")
   }
