@@ -138,6 +138,10 @@ object Cli {
         .flatMap(_.get("n_rows")).fold(-1L)(_.asInstanceOf[Long])
     private[Cli] def nInput: Long = rows(obsIn, inAttached)
     private[Cli] def nOutput: Long = rows(obsOut, outAttached)
+
+    /** The granule error counter of an `ingest`/`pipeline` run: it fills
+      * during the write, so the run log reads it after the command. */
+    private[Cli] var granuleErrors: Option[org.apache.spark.util.LongAccumulator] = None
   }
 
   private def command(name: String)(build: Args => Unit): (String, Args => Unit) =
@@ -1221,8 +1225,9 @@ object Cli {
       logPath.foreach(RunLog.append(_, Seq(
         "command" -> cmd, "status" -> "ok",
         "n_input" -> args.nInput,
-        "n_output" -> args.nOutput,
-        "wall_sec" -> wallSec)))
+        "n_output" -> args.nOutput) ++
+        args.granuleErrors.map(e => "n_granule_errors" -> e.value) :+
+        ("wall_sec" -> wallSec)))
     } catch {
       case e: Throwable =>
         // a log-write failure must not replace the real command failure
@@ -1238,13 +1243,17 @@ object Cli {
 
   /** Granule ingest for the `ingest` and `pipeline` commands. The error
     * accumulator fills during the WRITE job (the ingest frame is lazy),
-    * so callers report it AFTER their action via [[reportIngestErrors]]. */
-  private def ingested(a: Args): (DataFrame, org.apache.spark.util.LongAccumulator) =
-    Ingest.ingest(
+    * so callers report it AFTER their action via [[reportIngestErrors]],
+    * and `--log` records it as `n_granule_errors`. */
+  private def ingested(a: Args): (DataFrame, org.apache.spark.util.LongAccumulator) = {
+    val (landed, errs) = Ingest.ingest(
       a.spark, a.str("input"), a.str("product", "L2A"),
       a.str("beams", "all"), a.pairs("vars"),
       new graft.sources.FixtureGranuleReader, a.months,
       a.get("quality").contains("1"))
+    a.granuleErrors = Some(errs)
+    (landed, errs)
+  }
 
   private def reportIngestErrors(errs: org.apache.spark.util.LongAccumulator,
                                  cmd: String): Unit =

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps formatted physical plans for the headline queries into a markdown
-  * file — the ".explain and iterate" audit artifact (run per-round as
-  * `runMain graft.ExplainAudit [sfDir] [outFile]`). Reviewers should see:
+  * file — the ".explain and iterate" audit artifact (run as
+  * `runMain graft.ExplainAudit <sfDir> <outFile>`). Each plan should show:
   * PushedFilters/ReadSchema pruning on scans, BroadcastHashJoin on dims,
   * no Exchange under bucketed merges, partial aggregation before shuffles.
   */
@@ -21,8 +21,13 @@ object ExplainAudit {
   def audited: Seq[String] = SparkEntry.queries.keys.toSeq.sorted
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS_r03.md")
+    // no default output: a bare run must not overwrite some earlier audit
+    val (sfDir, out) = args match {
+      case Array(sfDir, out) => (sfDir, out)
+      case _ => throw new IllegalArgumentException(
+        "ExplainAudit: the data directory and the output file are required " +
+          s"(usage: ExplainAudit <sfDir> <out.md>), got ${args.length} argument(s)")
+    }
     val builder = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")

@@ -34,6 +34,11 @@ object Extract {
     * month pruning, so the two paths can't desynchronize. */
   val granuleIdDatePattern: String = "[AB]_([0-9]{13})"
   val granuleDateFormat: String = "yyyyDDDHHmmss"
+  /** The same two, compiled once for the driver-side parse. */
+  val granuleIdDateRegex: java.util.regex.Pattern =
+    java.util.regex.Pattern.compile(granuleIdDatePattern)
+  val granuleDateFormatter: java.time.format.DateTimeFormatter =
+    java.time.format.DateTimeFormatter.ofPattern(granuleDateFormat)
 
   /** Acquisition-time parse out of a granule id (column side). */
   def granuleDate(id: Column): Column =

@@ -2,7 +2,10 @@ package graft.sources
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
@@ -16,9 +19,11 @@ import graft.operators.{Extract, GediCatalog}
   * optionally quality-filter).
   *
   * Spark-first shape: the ONLY imperative boundary is `GranuleReader`
-  * (one granule file -> per-beam primitive column arrays), driven by
-  * `mapPartitions` over the granule path list — one task per granule
-  * bundle, shots streamed out, nothing collected on the driver. The read
+  * (one granule file -> per-beam primitive column arrays), driven over the
+  * granule list packed into tasks by the split rule of Spark's own file
+  * scans (`spark.sql.files.maxPartitionBytes`/`openCostInBytes`, see
+  * `packed`): each task loops over its pack, shots streamed out,
+  * nothing collected on the driver. The read
   * is projected: only the plan's layers, and of the `rh` vector only the
   * bins its `rhNN` variables index (the whole vector when a variable
   * lands it, `--vars rh=rh`); the projection never weakens the reader's
@@ -27,8 +32,11 @@ import graft.operators.{Extract, GediCatalog}
   * and the quality predicate are codegen'd projections fused into the
   * SAME stage as the read (no extra pass, no shuffle); acq_time is parsed
   * once per granule on the driver and rides the granule's rows.
-  * At 100 TB this scales by granule count: 1000 executors ingest 1000
-  * granules at a time, and the landing write is the stage boundary.
+  * At 100 TB this scales by granule count: a real granule (hundreds of MB
+  * and up) exceeds the split size and is a task of its own, so 1000
+  * executors ingest 1000 granules at a time; small granules share a task
+  * instead of each paying a task's fixed cost. The landing write is the
+  * stage boundary.
   *
   * HDF5 status: this container has no HDF5 jar (offline, no egress) and
   * the policy is no new deps, so the shipped reader is
@@ -129,19 +137,34 @@ object Ingest {
     * constants as Extract.granuleDate's column-side parse (one contract,
     * two evaluation sites). None when the name carries no date. */
   def granuleDate(name: String): Option[java.time.LocalDateTime] = {
-    val m = java.util.regex.Pattern
-      .compile(Extract.granuleIdDatePattern).matcher(name)
+    val m = Extract.granuleIdDateRegex.matcher(name)
     if (!m.find()) None
     else scala.util.Try(java.time.LocalDateTime.parse(m.group(1),
-      java.time.format.DateTimeFormatter.ofPattern(Extract.granuleDateFormat)))
-      .toOption
+      Extract.granuleDateFormatter)).toOption
   }
 
-  /** Ingest explicit granule paths. Returns the landing frame plus the
+  /** Granules packed into ingest tasks by the rule every Spark file scan
+    * splits its input with: `FilePartition.maxSplitBytes` over
+    * Σ(size + `spark.sql.files.openCostInBytes`), then `getFilePartitions`'
+    * next-fit over the sizes in descending order. A granule is never split,
+    * so one larger than the split size is a task of its own. */
+  private def packed[G](spark: SparkSession, granules: IndexedSeq[G])(size: G => Long): Seq[Seq[G]] = {
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark, granules.map(size(_) + openCost).sum)
+    // each granule goes in as a file named by its index
+    val files = granules.indices.sortBy(i => size(granules(i)))(Ordering[Long].reverse).map { i =>
+      PartitionedFile(InternalRow.empty, SparkPath.fromUrlString(i.toString), 0, size(granules(i)))
+    }
+    FilePartition.getFilePartitions(spark, files, maxSplit)
+      .map(_.files.toSeq.map(f => granules(f.urlEncodedPath.toInt)))
+  }
+
+  /** Ingest explicit granules, each a (path, size in bytes) pair; the
+    * sizes only pack the ingest tasks. Returns the landing frame plus the
     * per-granule error counter (the reference's error_tracker,
     * ancillary.py:121-141 — corrupt granules are logged, counted, and
     * skipped rather than failing the whole extraction). */
-  def ingestPaths(spark: SparkSession, paths: Seq[String], product: String,
+  def ingestPaths(spark: SparkSession, files: Seq[(String, Long)], product: String,
                   beams: Seq[String], vars: Seq[(String, String)],
                   reader: GranuleReader,
                   monthRange: Option[(Int, Int)] = None,
@@ -153,12 +176,14 @@ object Ingest {
     // Month prune by FILENAME date, before any file is opened (ref
     // extract.py:137-146) — driver-side like every DataSource's partition
     // pruning; the granule list is manifest-sized, not data-sized.
-    val named = paths.map(p => (p.split("/").last.replaceAll("\\.[A-Za-z0-9]+$", ""), p))
+    val named = files.map { case (p, size) =>
+      (p.split("/").last.replaceAll("\\.[A-Za-z0-9]+$", ""), p, size)
+    }
     val kept = monthRange match {
       case None => named
       case Some((a, b)) =>
         val (lo, hi) = if (a > b) (b, a) else (a, b)
-        named.filter { case (gid, path) =>
+        named.filter { case (gid, path, _) =>
           granuleDate(gid) match {
             case Some(d) => d.getMonthValue >= lo && d.getMonthValue <= hi
             case None =>
@@ -192,7 +217,7 @@ object Ingest {
         java.util.Arrays.asList(kept.map(k => Row(k._1)): _*),
         StructType(Seq(StructField("granule_id", StringType, nullable = false)))),
       "granule_id").select("acq_time")
-    val granules = kept.zip(stamps.collect().map(_.get(0)))
+    val granules = kept.zip(stamps.collect().map(_.get(0))).toIndexedSeq
     val rawSchema = StructType(
       StructField("granule_id", StringType, nullable = false) +:
       StructField("beam", StringType, nullable = false) +:
@@ -203,12 +228,14 @@ object Ingest {
         case VectorKind => ArrayType(DoubleType, containsNull = false)
       }, nullable = false)))
 
-    // one partition per granule: task = granule, so a corrupt/slow file
-    // retries alone instead of re-running a whole multi-granule slice,
-    // and the scheduler load-balances heterogeneous granule sizes
-    val slices = math.max(1, granules.size)
-    val rdd = spark.sparkContext.parallelize(granules, slices).mapPartitions { it =>
-      it.flatMap { case ((gid, path), acq) =>
+    // one task per pack of granules, packed like a file scan's splits
+    // (see packed): small granules share a task and its fixed cost (task
+    // deserialization, per-AOI writers, output files), a granule above
+    // spark.sql.files.maxPartitionBytes keeps a task of its own, and a
+    // corrupt granule is still counted and skipped alone
+    val packs = packed(spark, granules)(_._1._3)
+    val rdd = spark.sparkContext.parallelize(packs, math.max(1, packs.size)).flatMap { pack =>
+      pack.iterator.flatMap { case ((gid, path, _), acq) =>
         try {
           val read = reader.read(path, beamList, needed, bins)
           for (bl <- read; (layer, bin) <- wholeIndexed) {
@@ -265,17 +292,19 @@ object Ingest {
              reader: GranuleReader = new FixtureGranuleReader,
              monthRange: Option[(Int, Int)] = None,
              applyQualityFilter: Boolean = false): (DataFrame, LongAccumulator) = {
-    val paths = Manifest.discover(spark, root, GediCatalog.granulePattern(product))
-      .select("path").collect().map(_.getString(0)).toSeq.sorted
+    // (path, size) from the listing: the sizes pack the ingest tasks
+    // without a stat per granule
+    val files = Manifest.discover(spark, root, GediCatalog.granulePattern(product))
+      .select("path", "size").collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
     // ref extract.py:130-132 raises when the directory holds no granules
-    if (paths.isEmpty)
+    if (files.isEmpty)
       throw new IllegalArgumentException(
         s"no $product granule files (${GediCatalog.granulePattern(product)}) found under $root")
     val beams = GediCatalog.beamGroups.getOrElse(beamGroup.toLowerCase,
       beamGroup.split(",").toSeq)
     val vars = GediCatalog.defaultBase(product) ++
       extraVars.getOrElse(GediCatalog.defaultVariables(product))
-    ingestPaths(spark, paths, product, beams, vars, reader,
+    ingestPaths(spark, files, product, beams, vars, reader,
       monthRange, applyQualityFilter)
   }
 }

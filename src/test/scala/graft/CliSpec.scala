@@ -301,6 +301,25 @@ class CliSpec extends SparkSpec {
     assert(ok.getAs[Double]("wall_sec") >= 0.0)
   }
 
+  test("cli ingest/pipeline --log records count the corrupt granules") {
+    val base = tmp()
+    val granules = java.nio.file.Paths.get(base, "granules")
+    CliSpec.writeGranule(granules, "GEDI02_A_2019170155833_O02932_T02267_02_001_01.h5")
+    Files.writeString(granules.resolve("GEDI02_A_2019171000000_O02933_T02267_02_001_01.h5"),
+      "BEAM0101 shot_number not_a_number\n")
+    val log = s"$base/run.jsonl"
+    for (cmd <- Seq("ingest", "pipeline"))
+      Cli.run(spark, cmd, Map("input" -> granules.toString, "output" -> s"$base/$cmd",
+        "product" -> "L2A", "log" -> log))
+    val entries = spark.read.json(log).orderBy("command").collect()
+    assert(entries.map(_.getAs[String]("command")).toSeq === Seq("ingest", "pipeline"))
+    entries.foreach { e =>
+      assert(e.getAs[String]("status") === "ok")
+      assert(e.getAs[Long]("n_granule_errors") === 1L, e.toString)
+    }
+    assert(entries.head.getAs[Long]("n_output") === 4L) // the valid granule's shots
+  }
+
   test("cli score/blockdedup/bm25 wire the round-6 text operators") {
     val scoreOut = tmp() + "/scored"
     Cli.run(spark, "score", Map(
@@ -1585,11 +1604,24 @@ object CliSpec {
   def pipelineAoi(base: String): Unit = {
     val spark = SparkSpec.session
     val granules = java.nio.file.Paths.get(base, "granules")
-    Files.createDirectories(granules)
+    writeGranule(granules, "GEDI02_A_2019170155833_O02932_T02267_02_001_01.h5")
+    Files.writeString(java.nio.file.Paths.get(base, "zone.geojson"),
+      """{"type":"FeatureCollection","features":[{"type":"Feature","properties":{},
+        | "geometry":{"type":"Polygon","coordinates":[[[20,10],[22,10],[22,12],[20,12],[20,10]]]}}
+        |]}""".stripMargin)
+    Cli.run(spark, "pipeline", Map(
+      "input" -> granules.toString, "output" -> s"$base/out", "product" -> "L2A",
+      "quality" -> "1", "aoi" -> s"$base/zone.geojson"))
+  }
+
+  /** One 4-shot L2A fixture granule `name` in `dir`: shot i of BEAM0101
+    * at (20.5 + i, 10.5 + i), all quality checks passing. */
+  def writeGranule(dir: java.nio.file.Path, name: String): Unit = {
+    Files.createDirectories(dir)
     val n = 4
     def line(layer: String, v: Int => String) =
       s"BEAM0101 $layer ${(0 until n).map(v).mkString(" ")}"
-    Files.writeString(granules.resolve("GEDI02_A_2019170155833_O02932_T02267_02_001_01.h5"),
+    Files.writeString(dir.resolve(name),
       (Seq("# graft fixture granule v1",
         line("shot_number", i => s"${100 + i}"),
         line("lat_lowestmode", i => s"${10 + i}.5"),
@@ -1602,12 +1634,5 @@ object CliSpec {
         line("num_detectedmodes", _ => "1"),
         line("rh", i => (0 until 101).map(b => s"${b * (i + 1)}.0").mkString(","))) :+ "")
         .mkString("\n"))
-    Files.writeString(java.nio.file.Paths.get(base, "zone.geojson"),
-      """{"type":"FeatureCollection","features":[{"type":"Feature","properties":{},
-        | "geometry":{"type":"Polygon","coordinates":[[[20,10],[22,10],[22,12],[20,12],[20,10]]]}}
-        |]}""".stripMargin)
-    Cli.run(spark, "pipeline", Map(
-      "input" -> granules.toString, "output" -> s"$base/out", "product" -> "L2A",
-      "quality" -> "1", "aoi" -> s"$base/zone.geojson"))
   }
 }

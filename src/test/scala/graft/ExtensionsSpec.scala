@@ -135,4 +135,11 @@ class ExtensionsSpec extends SparkSpec {
     assert(ExplainAudit.audited === ExplainAudit.audited.sorted,
       "audit order must be deterministic for diffable PLANS artifacts")
   }
+
+  test("ExplainAudit names its missing output path instead of writing a default file") {
+    for (args <- Seq(Array.empty[String], Array(sfDir))) {
+      val e = intercept[IllegalArgumentException](ExplainAudit.main(args))
+      assert(e.getMessage.contains("output file are required"), e.getMessage)
+    }
+  }
 }

@@ -378,7 +378,7 @@ class ReaderEquivalenceSpec extends SparkSpec {
       "shot" -> "shot_number", "lat" -> "lat_lowestmode",
       "lon" -> "lon_lowestmode", "rh98" -> "rh2")
     def land(path: Path, reader: Ingest.GranuleReader) = {
-      val (df, errs) = Ingest.ingestPaths(spark, Seq(path.toString),
+      val (df, errs) = Ingest.ingestPaths(spark, Seq(path.toString -> Files.size(path)),
         "L2A", beams, vars, reader)
       val rows = df.orderBy("beam", "shot").collect().toSeq
       assert(errs.value == 0L, s"unexpected ingest errors via $reader")

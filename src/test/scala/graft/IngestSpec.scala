@@ -2,10 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.operators.{Extract, GediCatalog}
-import graft.sources.{FixtureGranuleReader, Ingest}
+import graft.sources.{BinaryGranuleReader, BinaryGranuleWriter, FixtureGranuleReader, Ingest}
 
 /** End-to-end granule ingest: fixture granules -> shots parquet -> the
   * existing quality/geo pipeline (the reference's extract.py flow). */
@@ -52,6 +55,120 @@ class IngestSpec extends SparkSpec {
     root
   }
 
+  /** `n` L2A granules of one 3-shot beam, all of one size, as fixture
+    * text or GRFB binaries. Granule `corrupt` keeps that size but fails
+    * its reader (a shot number that is not a number, a bad magic). */
+  private def sameSizeGranules(n: Int, binary: Boolean, corrupt: Option[Int] = None): String = {
+    val root = Files.createTempDirectory("graft_packed")
+    for (g <- 0 until n) {
+      val p = root.resolve(f"GEDI02_A_2019170155833_O$g%05d_T02267_02_001_01.h5")
+      val three = (v: Double) => Array.fill(3)(v)
+      val longs = Map("shot_number" -> Array.tabulate(3)(i => 10000L + 10 * g + i),
+        "degrade_flag" -> Array.fill(3)(0L), "quality_flag" -> Array.fill(3)(1L),
+        "num_detectedmodes" -> Array.fill(3)(1L))
+      val doubles = Map("lat_lowestmode" -> Array(10.5, 11.5, 12.5),
+        "lon_lowestmode" -> Array(20.5, 21.5, 22.5), "elev_lowestmode" -> three(100.0),
+        "digital_elevation_model" -> three(101.0), "sensitivity" -> three(0.95))
+      val rh = Array.tabulate(3, 101)((i, b) => (b * (i + 1)).toDouble)
+      if (binary) {
+        BinaryGranuleWriter.write(p, Seq(("BEAM0101", longs, doubles, Map("rh" -> rh))))
+        if (corrupt.contains(g)) {
+          val bytes = Files.readAllBytes(p)
+          "XXXX".getBytes("US-ASCII").copyToArray(bytes)
+          Files.write(p, bytes)
+        }
+      } else {
+        val lines = (longs.view.mapValues(_.mkString(" ")) ++ doubles.view.mapValues(_.mkString(" ")))
+          .map { case (l, vs) => s"BEAM0101 $l $vs" }.toSeq :+
+          s"BEAM0101 rh ${rh.map(_.mkString(",")).mkString(" ")}"
+        val text = lines.mkString("# graft fixture granule v1\n", "\n", "\n")
+        Files.writeString(p, if (corrupt.contains(g))
+          text.replace("shot_number 1", "shot_number x") else text)
+      }
+    }
+    root.toString
+  }
+
+  /** Tasks of the one stage a `noop` write of `df` runs: the ingest's. */
+  private def ingestTasks(df: DataFrame): Int = {
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+    }
+    PlanBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      PlanBridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(l)
+    tasks.get
+  }
+
+  /** Runs `body` under session confs `kvs`, then restores each one. */
+  private def withConfs[T](kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Confs under which granules of `size` bytes pack two to a task: each
+    * counts size + openCost = 2 size against a 4 size split, and one
+    * minimum partition keeps the core count out of the split size. */
+  private def twoPerTask(size: Long): Seq[(String, String)] = Seq(
+    "spark.sql.files.maxPartitionBytes" -> (4 * size).toString,
+    "spark.sql.files.openCostInBytes" -> size.toString,
+    "spark.sql.files.minPartitionNum" -> "1")
+
+  private def granuleSize(root: String): Long =
+    Files.list(Paths.get(root)).toArray.map(p => Files.size(p.asInstanceOf[java.nio.file.Path])).max
+
+  test("ingest packs granules into tasks by Spark's file-split rule") {
+    val n = 5
+    val root = sameSizeGranules(n, binary = false)
+    val size = granuleSize(root)
+    def landed() = Ingest.ingest(spark, root, "L2A")._1
+    def shots(df: DataFrame) =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    // two granules fit one split: ceil(n / 2) tasks
+    val (packedTasks, packedShots) = withConfs(twoPerTask(size): _*) {
+      val df = landed()
+      (ingestTasks(df), shots(df))
+    }
+    assert(packedTasks === (n + 1) / 2)
+    // a split below one granule's size: one task per granule
+    val (singleTasks, singleShots) =
+      withConfs("spark.sql.files.maxPartitionBytes" -> (size / 2).toString) {
+        val df = landed()
+        (ingestTasks(df), shots(df))
+      }
+    assert(singleTasks === n)
+    // the same shots land either way, as a multiset
+    assert(packedShots.values.sum === 3 * n)
+    assert(packedShots === singleShots)
+  }
+
+  for ((name, binary, reader) <- Seq(("fixture", false, new FixtureGranuleReader),
+                                     ("GRFB", true, new BinaryGranuleReader)))
+    test(s"a corrupt $name granule packed with valid ones is the only one skipped") {
+      val n = 4
+      // granule 1 shares the first task with granule 0
+      val root = sameSizeGranules(n, binary, corrupt = Some(1))
+      val (tasks, errors, gids) = withConfs(twoPerTask(granuleSize(root)): _*) {
+        val (df, errs) = Ingest.ingest(spark, root, "L2A", reader = reader)
+        val tasks = ingestTasks(df)
+        val errors = errs.value // of the one write: the collect below counts again
+        (tasks, errors, df.groupBy("granule_id").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap)
+      }
+      assert(tasks === n / 2)
+      assert(errors === 1)
+      assert(gids === (0 until n).filter(_ != 1)
+        .map(g => f"GEDI02_A_2019170155833_O$g%05d_T02267_02_001_01" -> 3L).toMap)
+    }
+
   test("ingest lands beam-group layers with pad/percentile/acq_time semantics") {
     val root = fixtureRoot()
     val (df, errs) = Ingest.ingest(spark, root, "L2A")
@@ -76,7 +193,8 @@ class IngestSpec extends SparkSpec {
 
   test("acq_time is parsed once per granule on the driver and equals the per-row parse") {
     val root = fixtureRoot()
-    val paths = Files.list(Paths.get(root)).toArray.map(_.toString).toSeq.sorted
+    val paths = Files.list(Paths.get(root)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .map(p => p.toString -> Files.size(p)).toSeq.sorted
     var df: org.apache.spark.sql.DataFrame = null
     // the parse runs over a driver-local relation of the ids: no job
     assert(jobsDuring {
